@@ -466,10 +466,10 @@ def _mat_lm_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _register(spark, sf_dir, ("documents",))
-    return _materialize_df(
-        spark, f"lm_model:{sf_dir}",
+    return spark.table(_materialize_any(
+        spark, f"lm_model:{sf_dir}", "lm_model_mat",
         lambda: train_trigram_model(spark, spark.table("documents")),
-    )
+    ))
 
 
 def q_langid_model(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1266,7 +1266,8 @@ def _materialize_any(spark: SparkSession, ident: str, view: str,
                      builder) -> str:
     """`_materialize` core: ``ident`` is the identity string a cache hit
     must match (the SQL text, or a kernel tag + parameters for
-    DataFrame-built relations); ``builder`` produces the DataFrame."""
+    DataFrame-built relations); ``builder`` produces the DataFrame.
+    DataFrame consumers read it back with ``spark.table(view)``."""
     key = (spark.sparkContext.applicationId, view)
     with _MAT_LOCK:
         old = _MAT_CACHE.get(key)
@@ -1284,28 +1285,6 @@ def _materialize_any(spark: SparkSession, ident: str, view: str,
         df.createOrReplaceTempView(view)
         _MAT_CACHE[key] = (ident, df, spark)
         return view
-
-
-def _materialize_df(spark: SparkSession, name: str, builder) -> DataFrame:
-    """DataFrame-flavored `_materialize` (no temp view): one checkpointed
-    incarnation per (application, name, session), rebuilt — and the old
-    one unpersisted — when the session changes; repeated entry calls
-    reuse it instead of stacking checkpoint RDDs.  localCheckpoint for
-    the same CTE-consumer reason as `_materialize`."""
-    key = (spark.sparkContext.applicationId, f"_df:{name}")
-    with _MAT_LOCK:
-        old = _MAT_CACHE.get(key)
-        if old is not None and old[0] == name and old[2] is spark:
-            return old[1]
-        if old is not None:
-            try:
-                old[1].unpersist()
-            except Exception:
-                pass
-            _MAT_CACHE.pop(key, None)
-        df = builder().localCheckpoint()
-        _MAT_CACHE[key] = (name, df, spark)
-        return df
 
 
 def _mat_sig(spark: SparkSession, sf_dir: str) -> str:
@@ -3072,17 +3051,19 @@ def q_lugs_aniso_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geostatssolvers_jl_spark.variogram import GaussianVariogram
 
     nx = 40
-    # one persisted incarnation per session (the invariant SQL scans the
-    # view 5x, and repeated gate runs must not stack InMemoryRelations)
-    sim = _materialize_df(spark, "lugs_aniso_sim", lambda: solve_lugs(
-        spark, CartesianGrid((nx, nx)), nreals=3,
-        variables=[LUGSVariable(
-            variogram=GaussianVariogram(range=1.0),
-            metric=Anisotropic((20.0, 5.0)),
-        )],
-        seed=7,
-    ))
-    sim.createOrReplaceTempView("_lugs_aniso")
+    # one checkpointed incarnation per session (the invariant SQL scans
+    # the view 5x, and repeated gate runs must not stack checkpoints)
+    _materialize_any(
+        spark, "lugs_aniso_sim", "_lugs_aniso",
+        lambda: solve_lugs(
+            spark, CartesianGrid((nx, nx)), nreals=3,
+            variables=[LUGSVariable(
+                variogram=GaussianVariogram(range=1.0),
+                metric=Anisotropic((20.0, 5.0)),
+            )],
+            seed=7,
+        ),
+    )
     return spark.sql(f"""
         WITH cx AS (
           SELECT corr(a.z, b.z) AS c FROM _lugs_aniso a

@@ -49,7 +49,7 @@ def main():
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", default=os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"))
+        "SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     ap.add_argument("--queries", default=None,
                     help="comma-separated subset (default: all bench names)")
     ap.add_argument("--reps", type=int, default=2)

@@ -5,28 +5,37 @@ data points via a global kd-tree (``KNearestSearch``/``KBallSearch``,
 ``/root/reference/src/ui.jl:11-32``), invoked per location at
 ``src/estimation/idw.jl:118`` / ``src/estimation/krig.jl:210``.
 
-Spark realization — two physical strategies behind one API, analogous to
-Spark's own broadcast-vs-shuffle join choice:
+Every local estimator is ONE stacked-array kernel
+``kernel(q_pdf, qcoords, NC, vals, dist, valid)`` (`ArrayKernel`) over
+(B, k) neighbor stacks.  Two physical strategies gather those stacks,
+analogous to Spark's own broadcast-vs-shuffle join choice:
 
-* **broadcast path** (`local_apply`): the conditioning data (after the
-  non-missing filter) is collected once, broadcast to executors, and a
-  single ``mapInPandas`` pass over the *query* side (the huge side: grid
-  cells / pages) does vectorized top-k search **and** the downstream math
-  kernel in one Arrow batch — zero shuffles end-to-end.  This is exactly
-  the reference's "build kd-tree once, stream queries" design, distributed
+* **broadcast gather** (`stacked_apply` over `local_apply`): the
+  conditioning data (after the non-missing filter) is collected once,
+  broadcast to executors, and a single ``mapInPandas`` pass over the
+  *query* side (the huge side: grid cells / pages) does vectorized top-k
+  search, indexes the stacks out of the `PointData` and runs the kernel in
+  one Arrow batch — zero shuffles end-to-end.  This is exactly the
+  reference's "build kd-tree once, stream queries" design, distributed
   over query partitions.  Valid while the data side fits an executor
   (~10⁶ points); the reference's own solvers share this assumption (its
   kd-tree is a single in-memory structure).
 
-* **tiled path** (`knn_join_tiled`): big-big case (10¹²-page story).  Both
-  sides get H3-style cell ids; data is replicated into the ring-1 halo of
-  its cell; an equi-join on cell id (ordinary shuffle join Catalyst/AQE can
-  optimize, incl. skew splitting) produces candidates; a window top-k per
-  query with a *certification radius* keeps only provably-exact neighbors;
-  unresolved queries (kth neighbor not certified) escalate to a coarser
-  resolution and finally to the broadcast path.
+* **tiled gather** (`knn_join_tiled_exact`, consumed by
+  `operators.tiled.tiled_local_apply`): big-big case (10¹²-page story).
+  Both sides get H3-style cell ids; data is replicated into the ring-1
+  halo of its cell; an equi-join on cell id (ordinary shuffle join
+  Catalyst/AQE can optimize, incl. skew splitting) produces candidates; a
+  window top-k per query with a *certification radius* keeps only
+  provably-exact neighbors; unresolved queries (kth neighbor not
+  certified) escalate to a coarser resolution and finally to a bounded
+  terminal pass.  The pairs are joined back to their attributes and
+  collected into per-query arrays that fill the same stacks.
 
-Top-k is deterministic: ties broken by data row id ascending.
+Top-k is deterministic: ties broken by data row id ascending — the same
+(dist, data_id) order on both strategies, so the kernel sees the same
+stacks (bit-identical wherever the two strategies' distance bits agree;
+see `operators.tiled`).
 """
 
 from __future__ import annotations
@@ -39,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .distances import Distance, Euclidean, Haversine
+from .distances import Distance, Haversine
 from . import tiling
 
 # join-strategy hint for the tiled candidate joins.  The hint's
@@ -248,6 +257,10 @@ Kernel = Callable[
     [pd.DataFrame, PointData, np.ndarray, np.ndarray, np.ndarray], pd.DataFrame
 ]
 
+# kernel(q_pdf, qcoords (B,d), NC (B,k,d), vals {name: (B,k)},
+#        dist (B,k) +inf-padded, valid (B,k)) -> pd.DataFrame
+ArrayKernel = Callable[..., pd.DataFrame]
+
 
 def local_apply(
     queries: DataFrame,
@@ -300,6 +313,37 @@ def local_apply(
             )
 
     return queries.mapInPandas(run, schema=out_schema)
+
+
+def stacked_apply(
+    queries: DataFrame,
+    data: PointData,
+    query_coord_cols: list[str],
+    value_cols: list[str],
+    k: int,
+    metric: Distance,
+    kernel: ArrayKernel,
+    out_schema: str,
+    radius: float | None = None,
+) -> DataFrame:
+    """`local_apply` feeding a stacked-array kernel: each batch's neighbor
+    slots are gathered out of the broadcast `PointData`.  Padded slots
+    (idx = -1) read row 0 and are masked by ``valid``; the gather runs
+    inside `local_apply`'s timed kernel call."""
+
+    def gathered(pdf, d, idx, dist, nvalid):
+        safe = np.maximum(idx, 0)
+        vals = {
+            v: d.values[v][safe].astype(np.float64, copy=False)
+            for v in value_cols
+        }
+        q = pdf[query_coord_cols].to_numpy(np.float64)
+        return kernel(pdf, q, d.coords[safe], vals, dist, idx >= 0)
+
+    return local_apply(
+        queries, data, query_coord_cols, k, metric, gathered, out_schema,
+        radius,
+    )
 
 
 def knn_pairs(

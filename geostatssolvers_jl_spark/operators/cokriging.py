@@ -291,7 +291,7 @@ def solve_cokriging_collocated(
     Exactness: a query AT a primary datum returns that datum exactly
     (λ = eᵢ, λ₂ = 0 satisfies the MM1 system regardless of the
     collocated secondary's value there)."""
-    from ..neighbors import local_apply
+    from ..neighbors import stacked_apply
 
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
@@ -309,8 +309,7 @@ def solve_cokriging_collocated(
         raise ValueError("invalid min/max number of neighbors")
     schema = f"{id_col} long, {var} double, {var}_variance double"
 
-    def kernel(pdf, d, idx, dist, nvalid):
-        q = pdf[query_coord_cols].to_numpy(np.float64)
+    def kernel(pdf, qcoords, NC, vals, dist, valid):
         y2col = pdf[secondary_col]
         if y2col.isna().any():
             raise ValueError(
@@ -318,17 +317,14 @@ def solve_cokriging_collocated(
                 f"estimation locations — the collocated secondary must "
                 f"be exhaustive (fail-loud contract)")
         y2 = y2col.to_numpy(np.float64)
-        z_all = d.values[var].astype(np.float64)
-        safe_idx = np.maximum(idx, 0)
-        NC = d.coords[safe_idx]
-        zn = z_all[safe_idx]
         mu, v = _solve_collocated_batch(
-            model, q, NC, zn, idx >= 0, dist, y2, metric, minneighbors)
+            model, qcoords, NC, vals[var], valid, dist, y2, metric,
+            minneighbors)
         return pd.DataFrame({
             id_col: pdf[id_col].to_numpy(np.int64),
             var: mu, f"{var}_variance": v,
         })
 
-    return local_apply(
-        grid_df, data1, query_coord_cols, k, metric, kernel, schema,
+    return stacked_apply(
+        grid_df, data1, query_coord_cols, [var], k, metric, kernel, schema,
         radius)

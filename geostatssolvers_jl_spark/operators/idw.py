@@ -11,11 +11,12 @@ Semantics reproduced exactly:
 * outputs ``var`` (weighted mean) and ``var_distance`` (min distance,
   ``idw.jl:137``).
 
-Two physical strategies:
+Two realizations:
 * `idw_agg_sql` — fully declarative join+groupBy aggregation (zero UDF;
   whole-stage codegen; the same SQL text runs on DuckDB for the oracle);
-* `solve_idw` — the zero-shuffle broadcast kernel (`local_apply`): search
-  and weighted mean fused in one vectorized mapInPandas pass.
+* `solve_idw` — one stacked-array kernel over gathered neighbor stacks,
+  run by `tiled.solve_local` on the zero-shuffle broadcast path or the
+  tiled big-big path.
 """
 
 from __future__ import annotations
@@ -25,8 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..distances import Distance, Euclidean
-from ..grid import CartesianGrid
-from ..neighbors import PointData, collect_points, local_apply
+from ..neighbors import PointData
+from .tiled import solve_local
 
 
 def idw_agg_sql(pairs: str, var: str = "z", exponent: float = 1.0,
@@ -63,39 +64,6 @@ def idw_agg_sql(pairs: str, var: str = "z", exponent: float = 1.0,
         f"SELECT {qid}, {mu} AS {var}, {sigma} AS {var}_distance "
         f"FROM {pairs} GROUP BY {qid}"
     )
-
-
-def idw_kernel(var: str, exponent: float, minneighbors: int,
-               id_col: str = "cell_id"):
-    """Vectorized IDW over stacked neighbor arrays (one Arrow batch)."""
-
-    def kernel(pdf: pd.DataFrame, d: PointData, idx: np.ndarray,
-               dist: np.ndarray, nvalid: np.ndarray) -> pd.DataFrame:
-        z = d.values[var].astype(np.float64)
-        zn = z[np.maximum(idx, 0)]  # (n, k); invalid slots masked below
-        valid = idx >= 0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            w = np.where(valid, 1.0 / np.power(dist, exponent), 0.0)
-        sw = w.sum(axis=1)
-        mu = np.where(sw > 0, (w * np.where(valid, zn, 0.0)).sum(axis=1), np.nan)
-        sw_safe = np.where(sw > 0, sw, 1.0)
-        mu = mu / sw_safe
-        dmin = dist.min(axis=1)  # invalid slots are +inf ⇒ min is the true one
-        # zero-distance exactness: first (lowest (dist, id)) slot has d=0
-        zero = (dist[:, 0] == 0.0) & valid[:, 0]
-        mu = np.where(zero, zn[:, 0], mu)
-        sigma = np.where(zero, 0.0, dmin)
-        # infinite weight sum w/o exact zero cannot happen (d>0 ⇒ finite w)
-        few = nvalid < minneighbors
-        mu = np.where(few, np.nan, mu)
-        sigma = np.where(few, np.nan, sigma)
-        return pd.DataFrame({
-            id_col: pdf[id_col].to_numpy(np.int64),
-            var: mu,
-            f"{var}_distance": sigma,
-        })
-
-    return kernel
 
 
 # ----------------------------------------------------- compositional data
@@ -163,10 +131,9 @@ def solve_idw_compositional(
     mean in ilr space (the Fréchet mean of the Aitchison geometry), output
     re-closed compositions as an array column.
 
-    ``strategy`` as in `solve_idw`: 'auto' routes a data side above
-    ``broadcast_limit`` rows through the distributed tiled join
-    (`tiled.idw_compositional_tiled`, bit-identical results) instead of a
-    driver collect."""
+    The composition array column is expanded into (D−1) ilr coordinate
+    columns + D part columns, so both physical strategies (``strategy`` as
+    in `solve_idw`) gather plain scalar stacks for one kernel."""
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
     # shared by BOTH strategies (the broadcast path must reject the same
@@ -175,67 +142,63 @@ def solve_idw_compositional(
         raise ValueError("minneighbors must be >= 1")
     if maxneighbors is not None and minneighbors > maxneighbors:
         raise ValueError("invalid min/max number of neighbors")
-    if maxneighbors is not None:
-        from ..planner import choose_strategy, choose_tile_res
-
-        if strategy == "auto":
-            n_data = data.count()
-            strategy = choose_strategy(n_data, maxneighbors, broadcast_limit)
-            if tile_res is None:
-                tile_res = choose_tile_res(n_data)
-        if strategy == "local-tiled":
-            from .tiled import idw_compositional_tiled
-
-            return idw_compositional_tiled(
-                data, grid_df, var, data_coord_cols, query_coord_cols,
-                maxneighbors, minneighbors, exponent, metric, id_col,
-                res=(tile_res if tile_res is not None else 6),
-                first_replicate=tiled_first_replicate,
-            )
-    # collect_points gives the canonical id-sorted order, so kNN ties
-    # break deterministically AND identically to the tiled path's
-    # (dist, data_id) window ordering
-    d0 = collect_points(
-        data.filter(f"{var} IS NOT NULL"), data_coord_cols, [var],
-        id_col="data_id" if "data_id" in data.columns else None,
-    )
-    if d0.n == 0:
+    # D from one data row — a bounded driver action (first row only)
+    first = data.filter(f"{var} IS NOT NULL").select(var).first()
+    if first is None:
         raise ValueError("estimation requires data")
-    comp = np.stack(d0.values[var])
-    Y = ilr(comp)
-    d = PointData(
-        coords=d0.coords,
-        values={"_ilr": Y, var: comp},
-        ids=d0.ids,
-    )
-    k = d.n if maxneighbors is None else min(maxneighbors, d.n)
+    D = len(first[0])
+    ycols = [f"_y{j}" for j in range(D - 1)]
+    ccols = [f"_c{j}" for j in range(D)]
+    ids = ["data_id"] if "data_id" in data.columns else []
+    keep = ids + data_coord_cols
 
-    def kernel(qpdf, dd, idx, dist, nvalid):
-        Yd = dd.values["_ilr"]
-        Cd = dd.values[var]
-        valid = idx >= 0
-        safe = np.maximum(idx, 0)
+    def expand_batches(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            comp = np.stack(pdf[var].to_numpy())
+            Y = ilr(comp)
+            out = pdf[keep].copy()
+            for j in range(D - 1):
+                out[ycols[j]] = Y[:, j]
+            for j in range(D):
+                out[ccols[j]] = comp[:, j]
+            yield out
+
+    exp_schema = ", ".join(
+        [f"{c} long" for c in ids]
+        + [f"{c} double" for c in data_coord_cols + ycols + ccols]
+    )
+
+    def expand(df: DataFrame) -> DataFrame:
+        return df.select(*keep, var).mapInPandas(
+            expand_batches, schema=exp_schema
+        )
+
+    def kernel(pdf, qcoords, NC, vals, dist, valid):
+        Yd = np.stack([vals[c] for c in ycols], axis=-1)
+        Cd = np.stack([vals[c] for c in ccols], axis=-1)
         with np.errstate(divide="ignore"):
             w = np.where(valid, 1.0 / np.power(dist, exponent), 0.0)
         finite_w = np.where(np.isfinite(w), w, 0.0)
         sw = finite_w.sum(axis=1, keepdims=True)
         sw = np.where(sw > 0, sw, 1.0)
-        ym = np.einsum("nk,nkd->nd", finite_w / sw, Yd[safe])
+        ym = np.einsum("nk,nkd->nd", finite_w / sw, Yd)
         out = ilr_inv(ym)
         zero = (dist[:, 0] == 0.0) & valid[:, 0]
-        out[zero] = closure(Cd[safe[:, 0][zero]])
-        few = nvalid < minneighbors
-        vals = [None if f else row.tolist() for f, row in zip(few, out)]
+        out[zero] = closure(Cd[:, 0][zero])
+        few = valid.sum(axis=1) < minneighbors
+        rows = [None if f else row.tolist() for f, row in zip(few, out)]
         return pd.DataFrame({
-            id_col: qpdf[id_col].to_numpy(np.int64),
-            var: vals,
+            id_col: pdf[id_col].to_numpy(np.int64),
+            var: rows,
         })
 
-    from ..neighbors import local_apply
-
-    schema = f"{id_col} long, {var} array<double>"
-    return local_apply(
-        grid_df, d, query_coord_cols, k, metric, kernel, schema
+    return solve_local(
+        data, grid_df, var, kernel, f"{id_col} long, {var} array<double>",
+        data_coord_cols, query_coord_cols, maxneighbors, minneighbors,
+        metric, None, id_col, strategy, tile_res, broadcast_limit,
+        tiled_first_replicate, value_cols=ycols + ccols, expand=expand,
     )
 
 
@@ -259,47 +222,41 @@ def solve_idw(
     """IDW solve. ``grid_df`` must carry ``id_col`` and the query
     coordinate columns (e.g. cx, cy from `CartesianGrid.spark_df`).
 
-    ``strategy`` as in `solve_kriging`: 'auto' routes a DataFrame data side
-    above ``broadcast_limit`` through the distributed tiled join."""
+    ``strategy`` as in `tiled.solve_local`: 'auto' routes a DataFrame data
+    side above ``broadcast_limit`` through the distributed tiled join."""
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
     if minneighbors < 1:
         raise ValueError("minneighbors must be >= 1")
     if exponent <= 0:
         raise ValueError("exponent must be positive")  # idw.jl:94
-    if isinstance(data, DataFrame) and maxneighbors is not None:
-        from ..planner import choose_strategy, choose_tile_res
 
-        if strategy == "auto":
-            n_data = data.count()
-            strategy = choose_strategy(n_data, maxneighbors, broadcast_limit)
-            if tile_res is None:
-                tile_res = choose_tile_res(n_data)
-        if strategy == "local-tiled":
-            from .tiled import idw_tiled
-
-            if minneighbors > maxneighbors:
-                raise ValueError("invalid min/max number of neighbors")
-            return idw_tiled(
-                data, grid_df, var, data_coord_cols, query_coord_cols,
-                maxneighbors, minneighbors, exponent, metric, radius,
-                id_col, res=(tile_res if tile_res is not None else 6),
-                first_replicate=tiled_first_replicate,
-            )
-    if isinstance(data, DataFrame):
-        data = collect_points(
-            data.filter(f"{var} IS NOT NULL"),
-            data_coord_cols,
-            [var],
-            id_col="data_id" if "data_id" in data.columns else None,
+    def kernel(pdf, qcoords, NC, vals, dist, valid):
+        zn = vals[var]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            w = np.where(valid, 1.0 / np.power(dist, exponent), 0.0)
+        sw = w.sum(axis=1)
+        mu = np.where(
+            sw > 0, (w * np.where(valid, zn, 0.0)).sum(axis=1), np.nan
         )
-    if data.n == 0:
-        raise ValueError("estimation requires data")  # idw.jl:93
-    k = data.n if maxneighbors is None else min(maxneighbors, data.n)
-    if minneighbors > k:
-        raise ValueError("invalid min/max number of neighbors")  # idw.jl:95
-    kernel = idw_kernel(var, exponent, minneighbors, id_col)
-    schema = f"{id_col} long, {var} double, {var}_distance double"
-    return local_apply(
-        grid_df, data, query_coord_cols, k, metric, kernel, schema, radius
+        mu = mu / np.where(sw > 0, sw, 1.0)
+        dmin = dist.min(axis=1)  # invalid slots are +inf ⇒ min is the true one
+        # zero-distance exactness: first (lowest (dist, id)) slot has d=0
+        # (idw.jl:129-132); a d>0 slot always has a finite weight
+        zero = (dist[:, 0] == 0.0) & valid[:, 0]
+        mu = np.where(zero, zn[:, 0], mu)
+        sigma = np.where(zero, 0.0, dmin)
+        few = valid.sum(axis=1) < minneighbors
+        return pd.DataFrame({
+            id_col: pdf[id_col].to_numpy(np.int64),
+            var: np.where(few, np.nan, mu),
+            f"{var}_distance": np.where(few, np.nan, sigma),
+        })
+
+    return solve_local(
+        data, grid_df, var, kernel,
+        f"{id_col} long, {var} double, {var}_distance double",
+        data_coord_cols, query_coord_cols, maxneighbors, minneighbors,
+        metric, radius, id_col, strategy, tile_res, broadcast_limit,
+        tiled_first_replicate,
     )

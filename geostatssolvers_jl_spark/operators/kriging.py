@@ -14,7 +14,8 @@ Two physical strategies behind one API, mirroring the reference's
 * **local**: per grid cell, top-k neighbor search feeds stacked
   (k+m)×(k+m) covariance systems solved with one batched
   ``np.linalg.solve`` per Arrow batch (the north rule's "stacked
-  covariance matrices, no per-row Python").
+  covariance matrices, no per-row Python") — `solve_systems`, run by
+  `tiled.solve_local` on the broadcast or the tiled gather.
 
 Math (public Matheron/GSLIB forms, covariance form C(h) = sill − γ(h)):
   SK: C λ = c₀;               μ̂ = m + λᵀ(z−m);  σ² = C(0) − λᵀc₀
@@ -35,8 +36,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..distances import Distance, Euclidean
-from ..neighbors import PointData, collect_points, local_apply, topk_search
+from ..neighbors import PointData, collect_points
 from ..variogram import GaussianVariogram, Variogram
+from .tiled import solve_local
 
 
 # ------------------------------------------------------------- estimators
@@ -174,28 +176,6 @@ def _predict_global(model: KrigingModel, fit: dict, qcoords: np.ndarray,
 # ------------------------------------------------------------- local path
 
 
-def _solve_local_batch(
-    model: KrigingModel,
-    d: PointData,
-    var: str,
-    qcoords: np.ndarray,
-    idx: np.ndarray,
-    dist: np.ndarray,
-    metric: Distance,
-    minneighbors: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Gather neighbor arrays from the broadcast PointData, then run the
-    shared stacked solve (`solve_systems`)."""
-    z_all = d.values[var].astype(np.float64)
-    safe_idx = np.maximum(idx, 0)
-    NC = d.coords[safe_idx]          # (B, k, dim)
-    zn = z_all[safe_idx]             # (B, k)
-    valid = idx >= 0                 # (B, k)
-    return solve_systems(
-        model, qcoords, NC, zn, valid, dist, metric, minneighbors
-    )
-
-
 def solve_systems(
     model: KrigingModel,
     qcoords: np.ndarray,
@@ -208,8 +188,8 @@ def solve_systems(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Stacked per-location Kriging systems over GATHERED neighbor arrays
     (NC (B,k,dim), zn (B,k), valid (B,k), dist (B,k) with +inf in invalid
-    slots), one batched solve — shared by the broadcast kernel and the
-    tiled big-big path (identical FP op order ⇒ identical results).
+    slots), one batched solve — the local kernel of both the broadcast
+    and the tiled gather (identical stacks ⇒ identical results).
 
     Arrow batches can be 16k+ rows; the stacked (B, k, k) intermediates at
     that size churn ~100 MB of temporaries per batch and stop scaling
@@ -319,36 +299,37 @@ def solve_kriging(
     ``maxneighbors=None`` → global strategy; else local (krig.jl:151-157).
     ``radius`` realizes the MetricBall neighborhood (KBallSearch).
 
-    ``strategy``: 'auto' consults `planner.choose_strategy` — a DataFrame
-    data side above ``broadcast_limit`` rows routes through the fully
-    distributed tiled join (`operators.tiled.kriging_tiled`, results
-    bit-identical to the broadcast kernel) instead of dying in a driver
-    collect; 'local-broadcast' / 'local-tiled' force a physical path.
+    ``strategy`` as in `tiled.solve_local` (local strategy only): 'auto'
+    routes a DataFrame data side above ``broadcast_limit`` rows through the
+    fully distributed tiled join instead of a driver collect.
     """
     model = model or KrigingModel()
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
     if minneighbors < 1:
         raise ValueError("minneighbors must be >= 1")
-    if isinstance(data, DataFrame) and maxneighbors is not None:
-        from ..planner import choose_strategy, choose_tile_res
+    missing = f"all samples of {var} are missing, aborting..."
+    schema = f"{id_col} long, {var} double, {var}_variance double"
 
-        if strategy == "auto":
-            n_data = data.count()
-            strategy = choose_strategy(n_data, maxneighbors, broadcast_limit)
-            if tile_res is None:
-                tile_res = choose_tile_res(n_data)
-        if strategy == "local-tiled":
-            from .tiled import kriging_tiled
+    if maxneighbors is not None or radius is not None:
+        # local; a MetricBall-only neighborhood (KBallSearch with no k
+        # cap) searches with k = n — the GLOBAL path would silently ignore
+        # the ball and weight every point (planner.searcher_ui)
+        def kernel(pdf, qcoords, NC, vals, dist, valid):
+            mu, v = solve_systems(model, qcoords, NC, vals[var], valid,
+                                  dist, metric, minneighbors)
+            return pd.DataFrame({
+                id_col: pdf[id_col].to_numpy(np.int64),
+                var: mu, f"{var}_variance": v,
+            })
 
-            if minneighbors > maxneighbors:
-                raise ValueError("invalid min/max number of neighbors")
-            return kriging_tiled(
-                data, grid_df, var, model, data_coord_cols,
-                query_coord_cols, maxneighbors, minneighbors, metric,
-                radius, id_col, res=(tile_res if tile_res is not None else 6),
-                first_replicate=tiled_first_replicate,
-            )
+        return solve_local(
+            data, grid_df, var, kernel, schema, data_coord_cols,
+            query_coord_cols, maxneighbors, minneighbors, metric, radius,
+            id_col, strategy, tile_res, broadcast_limit,
+            tiled_first_replicate, empty_msg=missing,
+        )
+
     if isinstance(data, DataFrame):
         data = collect_points(
             data.filter(f"{var} IS NOT NULL"),
@@ -357,56 +338,27 @@ def solve_kriging(
             id_col="data_id" if "data_id" in data.columns else None,
         )
     if data.n == 0:
-        raise ValueError(f"all samples of {var} are missing, aborting...")
+        raise ValueError(missing)
 
-    spark = grid_df.sparkSession
-    schema = f"{id_col} long, {var} double, {var}_variance double"
+    from pyspark import cloudpickle
 
-    if maxneighbors is None and radius is not None:
-        # MetricBall-only neighborhood (KBallSearch with no k cap): the
-        # GLOBAL path would silently ignore the ball and weight every
-        # point — route local with k = n instead, matching what the same
-        # arguments mean in solve_idw/solve_lwr (planner.searcher_ui)
-        maxneighbors = data.n
-
-    if maxneighbors is None:
-        from pyspark import cloudpickle
-
-        fit = _fit_global(model, data, var, metric)
-        # cloudpickle: drift functions may be lambdas/closures, which the
-        # default broadcast pickler rejects
-        bc = spark.sparkContext.broadcast(
-            cloudpickle.dumps((model, fit, metric))
-        )
-
-        def run(batches: Iterable[pd.DataFrame]):
-            mdl, f, met = cloudpickle.loads(bc.value)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                q = pdf[query_coord_cols].to_numpy(np.float64)
-                mu, v = _predict_global(mdl, f, q, met)
-                yield pd.DataFrame({
-                    id_col: pdf[id_col].to_numpy(np.int64),
-                    var: mu, f"{var}_variance": v,
-                })
-
-        return grid_df.mapInPandas(run, schema=schema)
-
-    k = min(maxneighbors, data.n)
-    if minneighbors > k:
-        raise ValueError("invalid min/max number of neighbors")
-
-    def kernel(pdf, d, idx, dist, nvalid):
-        q = pdf[query_coord_cols].to_numpy(np.float64)
-        mu, v = _solve_local_batch(
-            model, d, var, q, idx, dist, metric, minneighbors
-        )
-        return pd.DataFrame({
-            id_col: pdf[id_col].to_numpy(np.int64),
-            var: mu, f"{var}_variance": v,
-        })
-
-    return local_apply(
-        grid_df, data, query_coord_cols, k, metric, kernel, schema, radius
+    fit = _fit_global(model, data, var, metric)
+    # cloudpickle: drift functions may be lambdas/closures, which the
+    # default broadcast pickler rejects
+    bc = grid_df.sparkSession.sparkContext.broadcast(
+        cloudpickle.dumps((model, fit, metric))
     )
+
+    def run(batches: Iterable[pd.DataFrame]):
+        mdl, f, met = cloudpickle.loads(bc.value)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            q = pdf[query_coord_cols].to_numpy(np.float64)
+            mu, v = _predict_global(mdl, f, q, met)
+            yield pd.DataFrame({
+                id_col: pdf[id_col].to_numpy(np.int64),
+                var: mu, f"{var}_variance": v,
+            })
+
+    return grid_df.mapInPandas(run, schema=schema)

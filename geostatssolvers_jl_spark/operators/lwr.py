@@ -8,9 +8,10 @@ X = [1 coords], predict at the location, and report
 σ = ‖W·X·(XᵀWX)⁻¹·x₀‖₂ as ``var_variance`` (Gaussian-residual assumption,
 ``lwr.jl:50-51,142-143``).
 
-Spark realization: the shared zero-shuffle broadcast kernel — neighbor
-search and the stacked WLS solves fused in one vectorized mapInPandas
-pass; one batched ``np.linalg.solve`` over (B, p, p) normal matrices.
+Spark realization: one stacked-array kernel — the WLS solves over
+gathered (B, k) neighbor stacks, one batched ``np.linalg.solve`` over
+(B, p, p) normal matrices — run by `tiled.solve_local` on the zero-shuffle
+broadcast path or the tiled big-big path.
 """
 
 from __future__ import annotations
@@ -22,7 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..distances import Distance, Euclidean
-from ..neighbors import PointData, collect_points, local_apply
+from ..neighbors import PointData
+from .tiled import solve_local
 
 
 def default_weightfun(h: np.ndarray) -> np.ndarray:
@@ -58,57 +60,6 @@ def _wls_solve(
     return theta, Ginv_x0
 
 
-def lwr_kernel(var: str, weightfun: Callable, minneighbors: int,
-               id_col: str = "cell_id", query_coord_cols: list[str] | None = None):
-    qcols = query_coord_cols or ["cx", "cy"]
-
-    def kernel(pdf: pd.DataFrame, d: PointData, idx: np.ndarray,
-               dist: np.ndarray, nvalid: np.ndarray) -> pd.DataFrame:
-        B, k = idx.shape
-        dim = d.coords.shape[1]
-        p = dim + 1
-        z = d.values[var].astype(np.float64)
-        safe = np.maximum(idx, 0)
-        valid = idx >= 0
-        vm = valid.astype(np.float64)
-
-        fd = np.where(valid, dist, 0.0)
-        dmax = fd.max(axis=1, keepdims=True)
-        dmax = np.where(dmax > 0, dmax, 1.0)
-        delta = fd / dmax
-        w = np.asarray(weightfun(delta), dtype=np.float64) * vm  # (B, k)
-
-        X = np.concatenate(
-            [np.ones((B, k, 1)), d.coords[safe]], axis=2
-        )  # (B, k, p)
-        X = X * vm[:, :, None]
-        zn = z[safe] * vm  # (B, k)
-
-        WX = w[:, :, None] * X                     # (B, k, p)
-        G = np.einsum("bkp,bkq->bpq", X, WX)       # XᵀWX (B, p, p)
-        b = np.einsum("bkp,bk->bp", WX, zn)        # XᵀWz (B, p)
-
-        q = pdf[qcols].to_numpy(np.float64)
-        x0 = np.concatenate([np.ones((B, 1)), q], axis=1)  # (B, p)
-
-        theta, Ginv_x0 = _wls_solve(G, b, x0)
-
-        mu = np.einsum("bp,bp->b", theta, x0)
-        r = WX @ Ginv_x0[:, :, None]               # W X (XᵀWX)⁻¹ x₀, (B,k,1)
-        sigma = np.sqrt(np.einsum("bk,bk->b", r[:, :, 0], r[:, :, 0]))
-
-        few = nvalid < minneighbors
-        mu = np.where(few, np.nan, mu)
-        sigma = np.where(few, np.nan, sigma)
-        return pd.DataFrame({
-            id_col: pdf[id_col].to_numpy(np.int64),
-            var: mu,
-            f"{var}_variance": sigma,
-        })
-
-    return kernel
-
-
 def solve_lwr(
     data: DataFrame | PointData,
     grid_df: DataFrame,
@@ -126,45 +77,43 @@ def solve_lwr(
     broadcast_limit: int = 2_000_000,
     tiled_first_replicate: str = "auto",
 ) -> DataFrame:
-    """``strategy`` as in `solve_kriging`: 'auto' routes a DataFrame data
-    side above ``broadcast_limit`` through the distributed tiled join."""
+    """``strategy`` as in `tiled.solve_local`: 'auto' routes a DataFrame
+    data side above ``broadcast_limit`` through the distributed tiled
+    join."""
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
     if minneighbors < 1:
         raise ValueError("minneighbors must be >= 1")
-    if isinstance(data, DataFrame) and maxneighbors is not None:
-        from ..planner import choose_strategy, choose_tile_res
 
-        if strategy == "auto":
-            n_data = data.count()
-            strategy = choose_strategy(n_data, maxneighbors, broadcast_limit)
-            if tile_res is None:
-                tile_res = choose_tile_res(n_data)
-        if strategy == "local-tiled":
-            from .tiled import lwr_tiled
+    def kernel(pdf, qcoords, NC, vals, dist, valid):
+        B, k = valid.shape
+        vm = valid.astype(np.float64)
+        fd = np.where(valid, dist, 0.0)
+        dmax = fd.max(axis=1, keepdims=True)
+        dmax = np.where(dmax > 0, dmax, 1.0)
+        w = np.asarray(weightfun(fd / dmax), dtype=np.float64) * vm
+        # affine design X = [1 coords], (B, k, p)
+        X = np.concatenate([np.ones((B, k, 1)), NC], axis=2) * vm[:, :, None]
+        zn = vals[var] * vm
+        WX = w[:, :, None] * X
+        G = np.einsum("bkp,bkq->bpq", X, WX)       # XᵀWX (B, p, p)
+        b_ = np.einsum("bkp,bk->bp", WX, zn)       # XᵀWz (B, p)
+        x0 = np.concatenate([np.ones((B, 1)), qcoords], axis=1)
+        theta, Ginv_x0 = _wls_solve(G, b_, x0)
+        mu = np.einsum("bp,bp->b", theta, x0)
+        r = (WX @ Ginv_x0[:, :, None])[:, :, 0]   # W X (XᵀWX)⁻¹ x₀
+        sigma = np.sqrt(np.einsum("bk,bk->b", r, r))
+        few = valid.sum(axis=1) < minneighbors
+        return pd.DataFrame({
+            id_col: pdf[id_col].to_numpy(np.int64),
+            var: np.where(few, np.nan, mu),
+            f"{var}_variance": np.where(few, np.nan, sigma),
+        })
 
-            if minneighbors > maxneighbors:
-                raise ValueError("invalid min/max number of neighbors")
-            return lwr_tiled(
-                data, grid_df, var, data_coord_cols, query_coord_cols,
-                maxneighbors, minneighbors, weightfun, metric, radius,
-                id_col, res=(tile_res if tile_res is not None else 6),
-                first_replicate=tiled_first_replicate,
-            )
-    if isinstance(data, DataFrame):
-        data = collect_points(
-            data.filter(f"{var} IS NOT NULL"),
-            data_coord_cols,
-            [var],
-            id_col="data_id" if "data_id" in data.columns else None,
-        )
-    if data.n == 0:
-        raise ValueError("estimation requires data")
-    k = data.n if maxneighbors is None else min(maxneighbors, data.n)
-    if minneighbors > k:
-        raise ValueError("invalid min/max number of neighbors")
-    kernel = lwr_kernel(var, weightfun, minneighbors, id_col, query_coord_cols)
-    schema = f"{id_col} long, {var} double, {var}_variance double"
-    return local_apply(
-        grid_df, data, query_coord_cols, k, metric, kernel, schema, radius
+    return solve_local(
+        data, grid_df, var, kernel,
+        f"{id_col} long, {var} double, {var}_variance double",
+        data_coord_cols, query_coord_cols, maxneighbors, minneighbors,
+        metric, radius, id_col, strategy, tile_res, broadcast_limit,
+        tiled_first_replicate,
     )

@@ -1,30 +1,41 @@
-"""Tiled (big-big) physical strategy for the local estimation operators.
+"""Physical routing for the local estimators, and their tiled (big-big)
+gather.
 
-The broadcast path (`neighbors.local_apply`) mirrors the reference's
-global in-memory kd-tree (``/root/reference/src/ui.jl:27``) and is valid
-while the conditioning data fits one executor.  Above
-``planner.choose_strategy``'s broadcast limit the solvers route HERE:
+Every local estimator (IDW, compositional IDW, LWR, kriging) is one
+stacked-array kernel ``kernel(q_pdf, qcoords, NC, vals, dist, valid)``
+(`neighbors.ArrayKernel`), written once in its operator module.
+`solve_local` decides which of two gathers fills the kernel's (B, k)
+stacks:
 
-1. exact neighbor pairs via the fully-distributed escalating tiled join
-   (`neighbors.knn_join_tiled_exact` — no driver collect of either side);
-2. neighbor attributes (coords + values) joined back on ``data_id``
-   (ordinary shuffle equi-join, AQE-optimizable, skew-salted upstream);
-3. per-query neighbor ARRAYS via ``sort_array(collect_list(struct(...)))``
-   — rank-sorted, so the gathered (B, k, ·) stacks are in the identical
-   (dist, data_id) order the broadcast kernel uses;
-4. one vectorized ``mapInPandas`` pass runs the SAME stacked math kernels
-   (`kriging.solve_systems`, IDW / LWR array kernels) over the gathered
-   arrays — identical FP op order ⇒ results bit-identical to the
-   broadcast path whenever the distance bits agree (proven by
-   tests/test_tiled_estimation.py).  On Haversine the tiled path's
-   distances come from JVM trig instead of numpy trig; 1-ulp libm
-   differences can propagate to ~1e-11 relative on ill-conditioned
-   (duplicate-coordinate) kriging systems — far below the round-6
-   correctness gate.
+* **broadcast** (`neighbors.stacked_apply`) mirrors the reference's
+  global in-memory kd-tree (``src/ui.jl:27``): collect the
+  data side, search per Arrow batch, index the stacks out of the
+  broadcast `PointData`.  Valid while the conditioning data fits one
+  executor.
+* **tiled** (`tiled_local_apply`), chosen above
+  ``planner.choose_strategy``'s broadcast limit:
 
-Scale shape: two shuffles (pair join + group-to-arrays) over rows
-proportional to queries×k, never a broadcast or driver materialization of
-the data side.
+  1. exact neighbor pairs via the fully-distributed escalating tiled join
+     (`neighbors.knn_join_tiled_exact` — no driver collect of either
+     side);
+  2. neighbor attributes (coords + values) joined back on ``data_id``
+     (ordinary shuffle equi-join, AQE-optimizable);
+  3. per-query neighbor ARRAYS via ``sort_array(collect_list(struct(...)))``
+     — rank-sorted, so the gathered stacks are in the identical
+     (dist, data_id) order the broadcast gather produces;
+  4. one vectorized ``mapInPandas`` pass zero-fills the stacks from the
+     arrays and runs the same kernel.
+
+Same kernel, same stacks ⇒ results bit-identical between the two paths
+whenever the distance bits agree (proven by tests/test_tiled_estimation.py).
+On Haversine the tiled path's distances come from JVM trig instead of
+numpy trig; 1-ulp libm differences can propagate to ~1e-11 relative on
+ill-conditioned (duplicate-coordinate) kriging systems — far below the
+round-6 correctness gate.
+
+Scale shape of the tiled path: two shuffles (pair join + group-to-arrays)
+over rows proportional to queries×k, never a broadcast or driver
+materialization of the data side.
 """
 
 from __future__ import annotations
@@ -32,16 +43,14 @@ from __future__ import annotations
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..distances import Distance, Haversine
-from ..neighbors import knn_join_tiled_exact
-
-# kernel(q_pdf, qcoords (B,d), NC (B,k,d), vals {name: (B,k)},
-#        dist (B,k) +inf-padded, valid (B,k)) -> pd.DataFrame
-ArrayKernel = Callable[..., pd.DataFrame]
+from ..neighbors import (
+    ArrayKernel, PointData, collect_points, knn_join_tiled_exact,
+    stacked_apply,
+)
 
 # one live final-pairs cache per application (see tiled_local_apply);
 # entries are (owning SparkSession, pairs DataFrame, semanticHash) and
@@ -64,7 +73,6 @@ def tiled_local_apply(
     radius: float | None = None,
     res: int = 6,
     id_col: str = "cell_id",
-    salt: int = 0,
     first_replicate: str = "auto",
 ) -> DataFrame:
     """Search + gather + solve for a data side too big to broadcast.
@@ -112,7 +120,7 @@ def tiled_local_apply(
             "queries" if qsel.count() <= dsel.count() else "data"
         )
     pairs = knn_join_tiled_exact(
-        qsel, dsel, k, res, metric=metric, salt=salt,
+        qsel, dsel, k, res, metric=metric,
         first_replicate=first_replicate,
     )
     # the ladder returns its final pairs CACHED (callers re-scan them in
@@ -233,218 +241,75 @@ def tiled_local_apply(
     return joined.mapInPandas(run, schema=out_schema)
 
 
-def kriging_tiled(
-    data_df: DataFrame,
+def solve_local(
+    data: DataFrame | PointData,
     grid_df: DataFrame,
     var: str,
-    model,
+    kernel: ArrayKernel,
+    out_schema: str,
     data_coord_cols: list[str],
     query_coord_cols: list[str],
-    k: int,
+    maxneighbors: int | None,
     minneighbors: int,
     metric: Distance,
     radius: float | None,
     id_col: str,
-    res: int = 6,
-    salt: int = 0,
-    first_replicate: str = "auto",
+    strategy: str,
+    tile_res: int | None,
+    broadcast_limit: int,
+    first_replicate: str,
+    empty_msg: str = "estimation requires data",
+    value_cols: list[str] | None = None,
+    expand: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
-    from .kriging import solve_systems
+    """Run one local estimator's ``kernel`` on its physical path.
 
-    def kernel(pdf, qcoords, NC, vals, dist, valid):
-        mu, v = solve_systems(
-            model, qcoords, NC, vals[var], valid, dist, metric, minneighbors
+    ``strategy``: 'auto' consults `planner.choose_strategy` — a DataFrame
+    data side above ``broadcast_limit`` rows routes through the tiled
+    gather instead of a driver collect; 'local-broadcast' / 'local-tiled'
+    force a path.  A `PointData` data side or ``maxneighbors=None`` (all
+    data / ball-only search) always runs broadcast.
+
+    The data side is the rows with ``var`` non-missing, passed through
+    ``expand`` when given (a DataFrame → DataFrame step that flattens
+    ``var`` into the scalar ``value_cols`` the kernel gathers; default
+    ``[var]``)."""
+    value_cols = value_cols or [var]
+    if isinstance(data, DataFrame):
+        points = data.filter(f"{var} IS NOT NULL")
+        if expand is not None:
+            points = expand(points)
+        if maxneighbors is not None:
+            # lazy: planner imports operators.kriging, which imports us
+            from ..planner import choose_strategy, choose_tile_res
+
+            if strategy == "auto":
+                n_data = data.count()
+                strategy = choose_strategy(
+                    n_data, maxneighbors, broadcast_limit
+                )
+                if tile_res is None:
+                    tile_res = choose_tile_res(n_data)
+            if strategy == "local-tiled":
+                if minneighbors > maxneighbors:
+                    raise ValueError("invalid min/max number of neighbors")
+                return tiled_local_apply(
+                    grid_df, points, query_coord_cols, data_coord_cols,
+                    value_cols, maxneighbors, kernel, out_schema,
+                    metric=metric, radius=radius,
+                    res=(tile_res if tile_res is not None else 6),
+                    id_col=id_col, first_replicate=first_replicate,
+                )
+        data = collect_points(
+            points, data_coord_cols, value_cols,
+            id_col="data_id" if "data_id" in data.columns else None,
         )
-        return pd.DataFrame({
-            id_col: pdf[id_col].to_numpy(np.int64),
-            var: mu, f"{var}_variance": v,
-        })
-
-    schema = f"{id_col} long, {var} double, {var}_variance double"
-    return tiled_local_apply(
-        grid_df, data_df.filter(f"{var} IS NOT NULL"),
-        query_coord_cols, data_coord_cols, [var], k, kernel, schema,
-        metric=metric, radius=radius, res=res, id_col=id_col, salt=salt,
-        first_replicate=first_replicate,
-    )
-
-
-def idw_tiled(
-    data_df: DataFrame,
-    grid_df: DataFrame,
-    var: str,
-    data_coord_cols: list[str],
-    query_coord_cols: list[str],
-    k: int,
-    minneighbors: int,
-    exponent: float,
-    metric: Distance,
-    radius: float | None,
-    id_col: str,
-    res: int = 6,
-    salt: int = 0,
-    first_replicate: str = "auto",
-) -> DataFrame:
-    """Tiled IDW: gathered-array form of `idw.idw_kernel` (same math/order)."""
-
-    def kernel(pdf, qcoords, NC, vals, dist, valid):
-        zn = vals[var]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            w = np.where(valid, 1.0 / np.power(dist, exponent), 0.0)
-        sw = w.sum(axis=1)
-        mu = np.where(
-            sw > 0, (w * np.where(valid, zn, 0.0)).sum(axis=1), np.nan
-        )
-        mu = mu / np.where(sw > 0, sw, 1.0)
-        dmin = dist.min(axis=1)
-        zero = (dist[:, 0] == 0.0) & valid[:, 0]
-        mu = np.where(zero, zn[:, 0], mu)
-        sigma = np.where(zero, 0.0, dmin)
-        few = valid.sum(axis=1) < minneighbors
-        return pd.DataFrame({
-            id_col: pdf[id_col].to_numpy(np.int64),
-            var: np.where(few, np.nan, mu),
-            f"{var}_distance": np.where(few, np.nan, sigma),
-        })
-
-    schema = f"{id_col} long, {var} double, {var}_distance double"
-    return tiled_local_apply(
-        grid_df, data_df.filter(f"{var} IS NOT NULL"),
-        query_coord_cols, data_coord_cols, [var], k, kernel, schema,
-        metric=metric, radius=radius, res=res, id_col=id_col, salt=salt,
-        first_replicate=first_replicate,
-    )
-
-
-def idw_compositional_tiled(
-    data_df: DataFrame,
-    grid_df: DataFrame,
-    var: str,
-    data_coord_cols: list[str],
-    query_coord_cols: list[str],
-    k: int,
-    minneighbors: int,
-    exponent: float,
-    metric: Distance,
-    id_col: str,
-    res: int = 6,
-    salt: int = 0,
-    first_replicate: str = "auto",
-) -> DataFrame:
-    """Tiled compositional IDW: the composition array column is expanded
-    into D part columns + (D−1) ilr coordinate columns (computed with the
-    SAME numpy `ilr` as the broadcast path, so the gathered values are
-    bit-identical), then the scalar tiled machinery gathers them and the
-    kernel runs the broadcast kernel's exact op order (weighted mean in
-    ilr space, `ilr_inv`, zero-distance closure override)."""
-    from .idw import closure, ilr, ilr_inv
-
-    # D from one data row — a bounded driver action (first row only)
-    first = data_df.filter(f"{var} IS NOT NULL").select(var).first()
-    if first is None:
-        raise ValueError("estimation requires data")
-    D = len(first[0])
-    ycols = [f"_y{j}" for j in range(D - 1)]
-    ccols = [f"_c{j}" for j in range(D)]
-
-    def expand(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            comp = np.stack(pdf[var].to_numpy())
-            Y = ilr(comp)
-            out = pdf[["data_id", *data_coord_cols]].copy()
-            for j in range(D - 1):
-                out[ycols[j]] = Y[:, j]
-            for j in range(D):
-                out[ccols[j]] = comp[:, j]
-            yield out
-
-    exp_schema = (
-        f"data_id long, {data_coord_cols[0]} double, "
-        f"{data_coord_cols[1]} double, "
-        + ", ".join(f"{c} double" for c in ycols + ccols)
-    )
-    expanded = data_df.filter(f"{var} IS NOT NULL").select(
-        "data_id", *data_coord_cols, var
-    ).mapInPandas(expand, schema=exp_schema)
-
-    def kernel(pdf, qcoords, NC, vals, dist, valid):
-        Yd = np.stack([vals[c] for c in ycols], axis=-1)
-        Cd = np.stack([vals[c] for c in ccols], axis=-1)
-        with np.errstate(divide="ignore"):
-            w = np.where(valid, 1.0 / np.power(dist, exponent), 0.0)
-        finite_w = np.where(np.isfinite(w), w, 0.0)
-        sw = finite_w.sum(axis=1, keepdims=True)
-        sw = np.where(sw > 0, sw, 1.0)
-        ym = np.einsum("nk,nkd->nd", finite_w / sw, Yd)
-        out = ilr_inv(ym)
-        zero = (dist[:, 0] == 0.0) & valid[:, 0]
-        out[zero] = closure(Cd[:, 0][zero])
-        few = valid.sum(axis=1) < minneighbors
-        rows = [None if f else row.tolist() for f, row in zip(few, out)]
-        return pd.DataFrame({
-            id_col: pdf[id_col].to_numpy(np.int64),
-            var: rows,
-        })
-
-    schema = f"{id_col} long, {var} array<double>"
-    return tiled_local_apply(
-        grid_df, expanded, query_coord_cols, data_coord_cols,
-        ycols + ccols, k, kernel, schema,
-        metric=metric, radius=None, res=res, id_col=id_col, salt=salt,
-        first_replicate=first_replicate,
-    )
-
-
-def lwr_tiled(
-    data_df: DataFrame,
-    grid_df: DataFrame,
-    var: str,
-    data_coord_cols: list[str],
-    query_coord_cols: list[str],
-    k: int,
-    minneighbors: int,
-    weightfun,
-    metric: Distance,
-    radius: float | None,
-    id_col: str,
-    res: int = 6,
-    salt: int = 0,
-    first_replicate: str = "auto",
-) -> DataFrame:
-    """Tiled LWR: gathered-array form of `lwr.lwr_kernel` (same math)."""
-
-    def kernel(pdf, qcoords, NC, vals, dist, valid):
-        B, kk = valid.shape
-        vm = valid.astype(np.float64)
-        fd = np.where(valid, dist, 0.0)
-        dmax = fd.max(axis=1, keepdims=True)
-        dmax = np.where(dmax > 0, dmax, 1.0)
-        w = np.asarray(weightfun(fd / dmax), dtype=np.float64) * vm
-        X = np.concatenate([np.ones((B, kk, 1)), NC], axis=2) * vm[:, :, None]
-        zn = vals[var] * vm
-        WX = w[:, :, None] * X
-        G = np.einsum("bkp,bkq->bpq", X, WX)
-        b_ = np.einsum("bkp,bk->bp", WX, zn)
-        x0 = np.concatenate([np.ones((B, 1)), qcoords], axis=1)
-        from .lwr import _wls_solve
-
-        theta, Ginv_x0 = _wls_solve(G, b_, x0)
-        mu = np.einsum("bp,bp->b", theta, x0)
-        r = (WX @ Ginv_x0[:, :, None])[:, :, 0]
-        sigma = np.sqrt(np.einsum("bk,bk->b", r, r))
-        few = valid.sum(axis=1) < minneighbors
-        return pd.DataFrame({
-            id_col: pdf[id_col].to_numpy(np.int64),
-            var: np.where(few, np.nan, mu),
-            f"{var}_variance": np.where(few, np.nan, sigma),
-        })
-
-    schema = f"{id_col} long, {var} double, {var}_variance double"
-    return tiled_local_apply(
-        grid_df, data_df.filter(f"{var} IS NOT NULL"),
-        query_coord_cols, data_coord_cols, [var], k, kernel, schema,
-        metric=metric, radius=radius, res=res, id_col=id_col, salt=salt,
-        first_replicate=first_replicate,
+    if data.n == 0:
+        raise ValueError(empty_msg)
+    k = data.n if maxneighbors is None else min(maxneighbors, data.n)
+    if minneighbors > k:
+        raise ValueError("invalid min/max number of neighbors")
+    return stacked_apply(
+        grid_df, data, query_coord_cols, value_cols, k, metric, kernel,
+        out_schema, radius,
     )

@@ -36,7 +36,7 @@ def get_spark(
     apply (AQE handles the runtime partition coalescing at 1000-executor
     scale, maxRecordsPerBatch bounds Arrow batch memory inside pandas UDFs).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
     master = master or f"local[{cpus}]"
     # make the engine package importable on executor Python workers; on a
     # real cluster the same is done via `spark-submit --py-files pkg.zip`

@@ -246,7 +246,12 @@ def minhash128_sig_kernel(spark, docs_df, k: int = 3,
     DISTINCT is a set of the derived h values (exactly the SQL's
     DISTINCT (doc_id, h)); docs with no shingles (< k tokens, NULL
     text) emit no row, matching the SQL's empty explode.  Pinned
-    against the SQL by tests/test_webtext.py."""
+    against the SQL by tests/test_webtext.py.
+
+    Precondition: ``docs_df`` carries one row per ``doc_id`` (every
+    corpus here satisfies it).  The SQL's global DISTINCT + GROUP BY
+    merges duplicate doc_ids into one signature; the kernel works per
+    input row, so a duplicated id would emit one signature row each."""
     import hashlib
 
     import numpy as np

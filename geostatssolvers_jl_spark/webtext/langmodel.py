@@ -153,12 +153,12 @@ def _score_ctes(dialect: str, train_rel: str, score_rel: str,
         f"SELECT lang, tg, c FROM {cnt_rel}" if cnt_rel else
         pruned_count_sql(dialect, train_rel, vocab_topk)
     )
-    tgs_src = trigram_select(dialect, score_rel, "doc_id")
     if match_rel is not None:
         match_chain = f"""_match AS (
   SELECT doc_id, lang, msum FROM {match_rel}
 )"""
     else:
+        tgs_src = trigram_select(dialect, score_rel, "doc_id")
         match_chain = f"""_tgs AS (
   {tgs_src}
 ), _madj AS (
@@ -482,9 +482,17 @@ def match_scores_kernel(spark, score_df: DataFrame, madj_rows,
                 w = D[ix, j]
                 nz = w != 0
                 if nz.any():
-                    # float64 bincount is exact here: |msum| < 2^53
+                    wz = w[nz]
+                    # float64 bincount sums integers exactly only while
+                    # every partial sum stays below 2^53; Σ|w| over the
+                    # column bounds them all
+                    if int(np.abs(wz).sum()) >= 2**53:
+                        raise OverflowError(
+                            "match_scores_kernel: |dlp| sum of a batch "
+                            "column reaches 2^53; float64 accumulation "
+                            "would round msum")
                     acc[:, j] = np.bincount(
-                        ds[nz], weights=w[nz].astype(np.float64),
+                        ds[nz], weights=wz.astype(np.float64),
                         minlength=n).astype(np.int64)
             docs = b["doc_id"].to_numpy(dtype=np.int64)
             dd, ll = np.nonzero(acc)

@@ -48,15 +48,19 @@ def _rows(df):
 
 def test_kriging_tiled_bit_identical(spark, geo):
     d, q = geo
-    kw = dict(
-        var="z",
-        model=KrigingModel(variogram=GaussianVariogram(range=2000.0, sill=9.0)),
-        data_coord_cols=["lon", "lat"], query_coord_cols=["lon", "lat"],
-        maxneighbors=6, metric=Haversine(6371.0),
-    )
-    a = _rows(solve_kriging(d, q, strategy="local-broadcast", **kw))
-    b = _rows(solve_kriging(d, q, strategy="local-tiled", tile_res=4, **kw))
-    assert a == b
+    # a 600 km ball cuts some of the 6 nearest for ~1/3 of the queries
+    for radius in (None, 600.0):
+        kw = dict(
+            var="z",
+            model=KrigingModel(
+                variogram=GaussianVariogram(range=2000.0, sill=9.0)),
+            data_coord_cols=["lon", "lat"], query_coord_cols=["lon", "lat"],
+            maxneighbors=6, metric=Haversine(6371.0), radius=radius,
+        )
+        a = _rows(solve_kriging(d, q, strategy="local-broadcast", **kw))
+        b = _rows(solve_kriging(d, q, strategy="local-tiled", tile_res=4,
+                                **kw))
+        assert a == b, radius
 
 
 def test_idw_tiled_bit_identical(spark, geo):
@@ -85,14 +89,19 @@ def test_idw_tiled_radius_bit_identical(spark, geo):
 
 def test_lwr_tiled_bit_identical(spark, geo):
     d, q = geo
-    kw = dict(
-        var="z", data_coord_cols=["lon", "lat"],
-        query_coord_cols=["lon", "lat"], maxneighbors=8,
-        metric=Haversine(6371.0),
-    )
-    a = _rows(solve_lwr(d, q, strategy="local-broadcast", **kw))
-    b = _rows(solve_lwr(d, q, strategy="local-tiled", tile_res=4, **kw))
-    assert a == b
+    # a 900 km ball cuts the 8th neighbor of a few queries and leaves each
+    # query >= 3 neighbors; under-determined systems (< 3 neighbors, e.g.
+    # in a 600 km ball) are not path-stable: ulp-level distance
+    # differences move their singular-system fallback
+    for radius in (None, 900.0):
+        kw = dict(
+            var="z", data_coord_cols=["lon", "lat"],
+            query_coord_cols=["lon", "lat"], maxneighbors=8,
+            metric=Haversine(6371.0), radius=radius,
+        )
+        a = _rows(solve_lwr(d, q, strategy="local-broadcast", **kw))
+        b = _rows(solve_lwr(d, q, strategy="local-tiled", tile_res=4, **kw))
+        assert a == b, radius
 
 
 def test_auto_strategy_routes_big_data_tiled(spark, geo, monkeypatch):
@@ -100,12 +109,14 @@ def test_auto_strategy_routes_big_data_tiled(spark, geo, monkeypatch):
     through collect_points)."""
     import geostatssolvers_jl_spark.neighbors as nb
     import geostatssolvers_jl_spark.operators.kriging as krig
+    import geostatssolvers_jl_spark.operators.tiled as tiled
 
     def boom(*a, **kw):  # pragma: no cover
         raise AssertionError("collect_points called for big data side")
 
     monkeypatch.setattr(krig, "collect_points", boom)
     monkeypatch.setattr(nb, "collect_points", boom)
+    monkeypatch.setattr(tiled, "collect_points", boom)
     d, q = geo
     out = solve_kriging(
         d, q, var="z",

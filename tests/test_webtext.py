@@ -743,6 +743,22 @@ def test_langmodel_match_kernel_equals_inline_sql(spark):
     assert got == want and got
 
 
+def test_langmodel_match_kernel_refuses_inexact_sum(spark):
+    """msum is accumulated in float64, which sums integers exactly only
+    below 2^53: a batch column whose |dlp| sum reaches it must raise
+    instead of scoring a rounded msum."""
+    from pyspark.sql import Row
+
+    from geostatssolvers_jl_spark.webtext.langmodel import (
+        match_scores_kernel,
+    )
+
+    df = spark.createDataFrame([(0, "abcabc")], "doc_id long, text string")
+    madj = [Row(lang="en", tg="abc", dlp=2**52)]  # "abc" occurs twice
+    with pytest.raises(Exception, match=r"2\^53"):
+        match_scores_kernel(spark, df, madj, ["en"]).collect()
+
+
 def test_langid_model_empty_training_corpus_raises(spark):
     """An all-sub-3-char training corpus cannot train a trigram model —
     the wrapper must refuse instead of silently emitting zero rows for

@@ -33,7 +33,8 @@ def norm(v):
 
 
 def run(sf_dir: str, only: list[str]) -> int:
-    spark = get_spark("check-oracle", master="local[8]")
+    # local[SPARK_GRAFT_CPUS], else local[<this machine's cores>]
+    spark = get_spark("check-oracle")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
