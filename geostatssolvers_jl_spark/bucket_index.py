@@ -5,10 +5,16 @@ in numpy (no scipy in the runtime).
 Built once per broadcast payload (driver or lazily per worker process) and
 queried inside ``mapInPandas`` batches.  Exact kNN with certification:
 
-* data points land in a uniform bucket grid (CSR layout: ``starts`` +
-  permutation) sized for ~``target`` points per bucket;
+* data points land in a uniform d-D bucket grid (CSR layout: ``starts`` +
+  permutation) sized for ~``target`` points per bucket — per *occupied*
+  bucket when the data wraps its whole grid, as globe-spread sphere data
+  does (see ``__init__``).  The grid lives in
+  the metric's ranking-feature space (``rank_features``): the coordinates
+  for Euclidean, the per-axis scaled coordinates for Anisotropic, and 3-D
+  unit vectors for Haversine — in each of those spaces the metric is a
+  monotone function of the plain Euclidean distance;
 * queries are grouped by bucket — every query in a group shares one
-  candidate set (the (2r+1)² bucket window), so each group is one small
+  candidate set (the (2r+1)^d bucket window), so each group is one small
   GEMM + argpartition over ~10² candidates instead of the full data set,
   keeping the working set cache-resident (brute force is memory-bandwidth
   bound and stops scaling across executor cores exactly there);
@@ -18,12 +24,12 @@ queried inside ``mapInPandas`` batches.  Exact kNN with certification:
   parity);
 * a query is *certified* when its kth exact distance is ≤ a lower bound on
   the distance to any point outside the covered window.  The bound is the
-  distance to the window's boundary curves — on the sphere: meridian great
-  circles for the lon edges (periodic in Δλ, so wrap and over-pole paths
-  are covered) and latitude circles for the lat edges (droppable when the
-  edge sits on the data bbox: no data beyond it, and any wrapped path to
-  other data crosses a meridian edge first).  Uncertified queries expand
-  the ring (doubling) until certified or the window covers all data.
+  axis-aligned margin from the query to the window's faces in feature
+  space; a face on the data bbox is dropped (no data lies beyond it).  On
+  the sphere that margin is a chord, and the arc it bounds is
+  ``2R·asin(min(1, c/2))`` — the unit-vector space has no wrap and no
+  pole, so no special case exists.  Uncertified queries widen the window
+  (ring 1 → 4 → all data).
 
 Ties break by original data position (== data id after `collect_points`'
 canonical sort) — identical to the brute-force path and the SQL oracle.
@@ -33,137 +39,111 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import neighbors
 from .distances import Distance, Haversine
+
+
+def _grid_shape(span: np.ndarray, total: int) -> np.ndarray:
+    """Buckets per axis: cubic cells whose count is ≤ ``total``.  An axis
+    thinner than one cell gets a single bucket and leaves the budget to
+    the others, so degenerate (near-collinear, single-latitude) data
+    cannot explode the remaining axes."""
+    act = np.ones(span.size, dtype=bool)
+    while True:
+        w = (np.prod(span[act]) / total) ** (1.0 / act.sum())
+        thin = act & (span < w)
+        if not thin.any():
+            break
+        act &= ~thin  # the widest axis always stays: its span ≥ w
+    return np.where(act, np.maximum(1, np.floor(span / w)), 1).astype(np.int64)
 
 
 class BucketIndex:
     def __init__(self, coords: np.ndarray, metric: Distance,
                  target: int = 32):
-        from .distances import Anisotropic
-
         self.metric = metric
         self.coords = coords
-        m, dim = coords.shape
-        assert dim == 2, "bucket index is 2-D; use brute force otherwise"
+        m = coords.shape[0]
+        assert coords.shape[1] == 2, "bucket index is 2-D; use brute force otherwise"
         self.is_sphere = isinstance(metric, Haversine)
-        # center the float64 ranking features on the data mean before the
-        # float32 cast — large-magnitude planar coords AND tightly
-        # clustered spherical unit vectors otherwise carry absolute key
-        # noise past the shortlist slack (exact float64 distances always
-        # use the ORIGINAL coords; see neighbors.topk_search)
+        # float64 features place the buckets and bound the certification;
+        # centered on the data mean before the float32 cast they rank —
+        # large-magnitude planar coords AND tightly clustered spherical
+        # unit vectors otherwise carry absolute key noise past the
+        # shortlist slack (exact float64 distances always use the
+        # ORIGINAL coords; see neighbors.topk_search)
         F64 = metric.rank_features(coords)
         self._fcenter = F64.mean(axis=0)
         self.features = (F64 - self._fcenter).astype(np.float32)
-        # Anisotropic: bucket GEOMETRY (assignment + boundary margins)
-        # lives in the scaled space, where the metric is plain Euclidean —
-        # raw-coordinate margins would over-estimate the bound for
-        # radii > 1 and falsely certify
-        self._aniso = isinstance(metric, Anisotropic)
-        geo = metric._scaled(coords) if self._aniso else coords
 
-        lo = geo.min(axis=0)
-        hi = geo.max(axis=0)
-        span = np.maximum(hi - lo, 1e-9)
-        # total bucket budget ≈ m/target, split by aspect but CLAMPED so
-        # degenerate (near-collinear) data cannot explode one axis: the
-        # span floor makes aspect ~1e11 for a single-latitude transect,
-        # and unclamped nbx ≈ nb·√aspect allocated multi-MB start arrays
-        # per worker; a 1-D strip of ≤ total buckets is the correct limit
+        self.lo = F64.min(axis=0)
+        self.span = np.maximum(F64.max(axis=0) - self.lo, 1e-9)
         total = max(1, int(m / target))
-        aspect = span[0] / span[1] if span[1] > 0 else 1.0
-        self.nbx = int(np.clip(round(np.sqrt(total * aspect)), 1, total))
-        self.nby = max(1, total // self.nbx)
-        self.lo, self.hi, self.span = lo, hi, span
-        self.wx = span[0] / self.nbx
-        self.wy = span[1] / self.nby
+        self._layout(F64, total)
+        # a flat sheet across a d-D grid occupies ~prod(nb)^(2/d) buckets;
+        # data occupying more than π such sheets wraps its whole box, as
+        # sphere data spread over the globe does (a shell: π× the area
+        # of the box's cross-section).  Every query then lies near data,
+        # but occupied buckets grow only as nb² while all grow as nb^d, so
+        # the budget leaves most of them empty: one rescale puts ~target
+        # points into each OCCUPIED bucket, capped at one bucket per data
+        # point.  Data below that (clusters, caps, strips, any planar
+        # data) keeps its budget: finer buckets there push the queries
+        # between the data onto the brute path.
+        occ = np.count_nonzero(np.diff(self.starts))
+        d = max(1, np.count_nonzero(self.nb > 1))
+        if occ >= np.pi * np.prod(self.nb) ** (2.0 / d) and occ < total:
+            self._layout(F64, min(m, int(total * (total / occ) ** (d / 2))))
 
-        bx = np.clip(((geo[:, 0] - lo[0]) / span[0] * self.nbx).astype(np.int64), 0, self.nbx - 1)
-        by = np.clip(((geo[:, 1] - lo[1]) / span[1] * self.nby).astype(np.int64), 0, self.nby - 1)
-        bid = by * self.nbx + bx
+    def _layout(self, F64: np.ndarray, total: int) -> None:
+        self.nb = _grid_shape(self.span, total)
+        self.w = self.span / self.nb
+        # axis 0 varies fastest: a window row along it is one CSR range
+        self.stride = np.concatenate([[1], np.cumprod(self.nb[:-1])])
+        bid = self._cells(F64) @ self.stride
         self.perm = np.argsort(bid, kind="stable")
         self.starts = np.searchsorted(
-            bid[self.perm], np.arange(self.nbx * self.nby + 1)
+            bid[self.perm], np.arange(int(np.prod(self.nb)) + 1)
         )
 
     # -- helpers ----------------------------------------------------------
 
-    def _geo(self, q: np.ndarray) -> np.ndarray:
-        return self.metric._scaled(q) if self._aniso else q
+    def _cells(self, F: np.ndarray) -> np.ndarray:
+        """(n, d) bucket coordinates; points beyond the bbox clamp in."""
+        c = ((F - self.lo) / self.span * self.nb).astype(np.int64)
+        return np.clip(c, 0, self.nb - 1)
 
-    def _query_bucket(self, q: np.ndarray) -> np.ndarray:
-        q = self._geo(q)
-        bx = np.clip(((q[:, 0] - self.lo[0]) / self.span[0] * self.nbx).astype(np.int64), 0, self.nbx - 1)
-        by = np.clip(((q[:, 1] - self.lo[1]) / self.span[1] * self.nby).astype(np.int64), 0, self.nby - 1)
-        return by * self.nbx + bx
-
-    def _window_members(self, bx: int, by: int, r: int) -> np.ndarray:
-        x0, x1 = max(0, bx - r), min(self.nbx - 1, bx + r)
-        y0, y1 = max(0, by - r), min(self.nby - 1, by + r)
-        rows = []
-        for yy in range(y0, y1 + 1):
-            s = self.starts[yy * self.nbx + x0]
-            e = self.starts[yy * self.nbx + x1 + 1]
-            if e > s:
-                rows.append(self.perm[s:e])
+    def _window_members(self, c0: np.ndarray, c1: np.ndarray) -> np.ndarray:
+        """Data positions in the bucket box [c0, c1] (inclusive)."""
+        bases = np.zeros(1, dtype=np.int64)
+        for ax in range(1, self.nb.size):
+            bases = (bases[:, None] + np.arange(c0[ax], c1[ax] + 1)
+                     * self.stride[ax]).ravel()
+        s = self.starts[bases + c0[0]]
+        e = self.starts[bases + c1[0] + 1]
+        rows = [self.perm[a:b] for a, b in zip(s, e) if b > a]
         if not rows:
             return np.empty(0, dtype=np.int64)
         return np.concatenate(rows) if len(rows) > 1 else rows[0]
 
-    def _boundary_dist(self, q: np.ndarray, bx: int, by: int, r: int) -> np.ndarray:
-        """Exact-metric lower bound on the distance from each query to any
-        point OUTSIDE the (2r+1)² window.  Conservative; float64."""
-        x_lo = self.lo[0] + max(0, bx - r) * self.wx
-        x_hi = self.lo[0] + (min(self.nbx - 1, bx + r) + 1) * self.wx
-        y_lo = self.lo[1] + max(0, by - r) * self.wy
-        y_hi = self.lo[1] + (min(self.nby - 1, by + r) + 1) * self.wy
-        open_left = bx - r <= 0      # window edge sits on the data bbox
-        open_right = bx + r >= self.nbx - 1
-        open_bot = by - r <= 0
-        open_top = by + r >= self.nby - 1
-
-        if not self.is_sphere:
-            edges = []
-            if not open_left:
-                edges.append(q[:, 0] - x_lo)
-            if not open_right:
-                edges.append(x_hi - q[:, 0])
-            if not open_bot:
-                edges.append(q[:, 1] - y_lo)
-            if not open_top:
-                edges.append(y_hi - q[:, 1])
-            if not edges:
-                return np.full(q.shape[0], np.inf)
-            return np.maximum(np.minimum.reduce(edges), 0.0)
-
-        # sphere (lon/lat degrees, great-circle distance = R·angle):
-        # lat edges — meridian distance R·|Δφ|; droppable at the bbox
-        # (no data beyond, and wrapped paths must cross a meridian edge);
-        # lon edges — distance to the FULL meridian great circle
-        # R·asin(|cos φ · sin Δλ|): periodic in Δλ (wrap-safe) and the
-        # poles lie on every meridian (over-pole-safe).  Never droppable:
-        # beyond the bbox in longitude may wrap onto data.
-        R = self.metric.radius
-        phi = np.radians(q[:, 1])
-        angles = []
-        if not open_bot:
-            angles.append(np.radians(np.maximum(q[:, 1] - y_lo, 0.0)))
-        if not open_top:
-            angles.append(np.radians(np.maximum(y_hi - q[:, 1], 0.0)))
-        # lon edges are droppable once the window spans the full data-bbox
-        # lon range: beyond it (in wrapped longitude) lies only data-free
-        # space, so any data point outside the window is outside in LAT and
-        # the lat edges above bound it.  Without this, near-pole queries
-        # (cos φ → 0 kills the meridian bound) could never certify.
-        if not (open_left and open_right):
-            inside_x = (q[:, 0] >= x_lo) & (q[:, 0] <= x_hi)
-            for edge in (x_lo, x_hi):
-                a = np.arcsin(
-                    np.abs(np.cos(phi) * np.sin(np.radians(q[:, 0] - edge)))
-                )
-                angles.append(np.where(inside_x, a, 0.0))
-        if not angles:
-            return np.full(q.shape[0], np.inf)
-        return R * np.maximum(np.minimum.reduce(angles), 0.0)
+    def _boundary_dist(self, QF: np.ndarray, c0: np.ndarray, c1: np.ndarray
+                       ) -> np.ndarray:
+        """Exact-metric lower bound on the distance from each query
+        (float64 features ``QF``) to any point OUTSIDE the bucket box
+        [c0, c1].  Conservative; float64."""
+        edges = []
+        for ax in range(self.nb.size):
+            if c0[ax] > 0:  # a face on the data bbox has no data beyond it
+                edges.append(QF[:, ax] - (self.lo[ax] + c0[ax] * self.w[ax]))
+            if c1[ax] < self.nb[ax] - 1:
+                edges.append(self.lo[ax] + (c1[ax] + 1) * self.w[ax] - QF[:, ax])
+        if not edges:
+            return np.full(QF.shape[0], np.inf)
+        bound = np.maximum(np.minimum.reduce(edges), 0.0)
+        if self.is_sphere:  # chord → great-circle arc
+            bound = 2.0 * self.metric.radius * np.arcsin(
+                np.minimum(1.0, bound / 2.0))
+        return bound
 
     # -- main entry -------------------------------------------------------
 
@@ -179,41 +159,35 @@ class BucketIndex:
         if n == 0 or k == 0 or m == 0:
             return out_idx, out_dist, np.zeros(n, dtype=np.int64)
 
-        bid = self._query_bucket(qcoords)
+        QF64 = metric.rank_features(qcoords)
+        QF_all = (QF64 - self._fcenter).astype(np.float32)
+        qcell = self._cells(QF64)
+        bid = qcell @ self.stride
         order = np.argsort(bid, kind="stable")
-        QF_all = (metric.rank_features(qcoords) - self._fcenter).astype(
-            np.float32
-        )
         bid_sorted = bid[order]
-        gstarts = np.searchsorted(bid_sorted, np.arange(self.nbx * self.nby + 1))
-        max_r = max(self.nbx, self.nby)
+        gstarts = np.searchsorted(bid_sorted, np.arange(self.starts.size))
+        max_r = int(self.nb.max())
         buffer_extra = 16
 
         for b in np.unique(bid_sorted):
             qsel = order[gstarts[b]:gstarts[b + 1]]
-            gbx, gby = int(b % self.nbx), int(b // self.nbx)
+            cell = qcell[qsel[0]]
             pending = qsel
             r = 1
             while pending.size:
-                cand = self._window_members(gbx, gby, r)
-                full_cover = (
-                    gbx - r <= 0 and gbx + r >= self.nbx - 1
-                    and gby - r <= 0 and gby + r >= self.nby - 1
-                )
-                if full_cover:
+                c0 = np.maximum(cell - r, 0)
+                c1 = np.minimum(cell + r, self.nb - 1)
+                if (c0 == 0).all() and (c1 == self.nb - 1).all():
                     # window == all data: the chunked brute path does this
                     # cache-optimally (and with identical tie semantics)
-                    from .neighbors import topk_search
-
-                    bi, bd, _ = topk_search(
+                    bi, bd, _ = neighbors.topk_search(
                         qcoords[pending], self.coords, k, metric, radius
                     )
                     out_idx[pending] = bi
                     out_dist[pending] = bd
                     break
+                cand = self._window_members(c0, c1)
                 if cand.size >= k:
-                    from .neighbors import shortlist_topk
-
                     # chunk the query side so each key block stays cache-
                     # resident (same rationale as topk_search's qchunk)
                     qstep = max(32, 1_500_000 // cand.size)
@@ -222,7 +196,7 @@ class BucketIndex:
                         psel = pending[cs:cs + qstep]
                         K = metric.rank_keys(QF_all[psel], self.features[cand])
                         nbuf = min(cand.size, k + buffer_extra)
-                        sel, overflow = shortlist_topk(K, nbuf)
+                        sel, overflow = neighbors.shortlist_topk(K, nbuf)
                         cidx = cand[sel]
                         # exact float64 distances on the shortlist
                         cd = metric.np_pairs(qcoords[psel], self.coords[cidx])
@@ -243,12 +217,7 @@ class BucketIndex:
                             cidx[row, : len(o)] = rcols[o]
                             cd[row, : len(o)] = rd[o]
                         kth = cd.max(axis=1)  # inf if any slot unfilled
-                        # margins in GEO space (scaled for Anisotropic:
-                        # there the metric is plain Euclidean, so the
-                        # bound is exact)
-                        bound = self._boundary_dist(
-                            self._geo(qcoords[psel]), gbx, gby, r
-                        )
+                        bound = self._boundary_dist(QF64[psel], c0, c1)
                         done = kth <= bound * (1.0 - 1e-12)
                         if radius is not None:
                             # window provably covering the whole ball also
@@ -261,12 +230,9 @@ class BucketIndex:
                             out_dist[dsel] = cd[done]
                         still.append(psel[~done])
                     pending = np.concatenate(still) if still else pending[:0]
-                if pending.size:
-                    if r >= max_r:
-                        break  # unreachable: full_cover triggers first
-                    # aggressive schedule: ring 1 → 4 → everything.  Each
-                    # failed ring re-pays its GEMM, so a slow doubling walk
-                    # costs more than jumping straight to the full window
-                    r = 4 if r == 1 else max_r
+                # aggressive schedule: ring 1 → 4 → everything.  Each
+                # failed ring re-pays its GEMM, so a slow doubling walk
+                # costs more than jumping straight to the full window
+                r = 4 if r == 1 else max_r
         nvalid = np.isfinite(out_dist).sum(axis=1).astype(np.int64)
         return out_idx, out_dist, nvalid

@@ -8,10 +8,17 @@ it is an engine addition (SURVEY.md §2.9, §4).
 Model: a *stage* writes its output partitioned by a **unit key** (tile
 cell, realization id, shard id...).  Each successfully written unit gets a
 manifest row ``(unit, rows, stage, wall_s)`` committed *after* the data.
-On restart, `pending_units` anti-joins the input's units against the
-manifest — only unfinished units are recomputed.  Unit writes are
-idempotent (dynamic partition overwrite), so a crash between data and
-manifest commit re-runs that unit harmlessly.
+Unit writes are idempotent (dynamic partition overwrite), so a crash
+between data and manifest commit re-runs that unit harmlessly.
+
+The manifest holds one row per unit, so the control plane runs on the
+driver: on restart the done units of the stage are collected (when the
+manifest exists) and subtracted from the input's units as a set; compute
+gets ``units.filter(unit IN todo)``.  The per-unit row counts are one
+``groupBy`` over the persisted output, and the manifest batch is appended
+from a local (driver) table.  No lineage step starts a Python worker —
+every plan it builds is JVM-only (``createDataFrame`` from a list, or from
+an empty pandas frame, would scan a Python RDD).
 
 Sandbox backend is parquet directories; on a production cluster the same
 two tables are Iceberg tables and the manifest commit is the Iceberg
@@ -21,10 +28,13 @@ changes (`FORMAT` below).
 
 from __future__ import annotations
 
+import json
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 FORMAT = "parquet"  # "iceberg" in production
 
@@ -35,15 +45,20 @@ def _manifest_path(base: str) -> str:
     return f"{base}/_lineage_manifest"
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — any URI Spark can write
+    (hdfs://, s3a://), never driver-local I/O."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
 def _sidecar_write(spark: SparkSession, path: str, payload: str) -> None:
     """Write a tiny driver-side sidecar file through the Hadoop
     FileSystem API, so it lands next to the Spark-written data even when
     ``base`` is a non-local URI (hdfs://, s3a://) — a driver-local
     ``open()`` would silently write into a bogus local directory and the
     all-empty-stage resume fallback would never find it."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _fs_path(spark, path)
     out = fs.create(jpath, True)
     try:
         out.write(bytearray(payload.encode("utf-8")))
@@ -58,11 +73,10 @@ def _sidecar_read(spark: SparkSession, path: str) -> str | None:
     is deliberate so the stage's parquet read skips the sidecar), so any
     URI the writer could reach is readable — no driver-local I/O.  One
     py4j round-trip per line; the sidecar is one JSON line."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _fs_path(spark, path)
     if not fs.exists(jpath):
         return None
+    jvm = spark._jvm
     reader = jvm.java.io.BufferedReader(
         jvm.java.io.InputStreamReader(fs.open(jpath), "UTF-8")
     )
@@ -78,30 +92,58 @@ def _sidecar_read(spark: SparkSession, path: str) -> str | None:
         reader.close()
 
 
-def read_manifest(spark: SparkSession, base: str, stage: str) -> DataFrame:
-    from pyspark.errors import AnalysisException
+def _empty(spark: SparkSession, schema: StructType | str) -> DataFrame:
+    """A typed empty relation planned on the JVM (an empty ``Range``)."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
 
-    try:
-        m = spark.read.schema(MANIFEST_SCHEMA).format(FORMAT).load(
-            _manifest_path(base)
-        )
-        return m.filter(F.col("stage") == stage)
-    except AnalysisException:
-        # path not found = fresh run.  A CORRUPT or transiently unreadable
-        # manifest must SURFACE (a blanket except would silently schedule
-        # a full recompute of every unit and append duplicate rows)
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+
+def _manifest(spark: SparkSession, base: str, stage: str
+              ) -> DataFrame | None:
+    """The stage's manifest rows, or None on a fresh run.  Existence is
+    checked through the FileSystem API, so a CORRUPT or transiently
+    unreadable manifest still surfaces (a blanket except would silently
+    schedule a full recompute of every unit and append duplicate rows)."""
+    path = _manifest_path(base)
+    fs, jpath = _fs_path(spark, path)
+    if not fs.exists(jpath):
+        return None
+    m = spark.read.schema(MANIFEST_SCHEMA).format(FORMAT).load(path)
+    return m.filter(F.col("stage") == stage)
+
+
+def read_manifest(spark: SparkSession, base: str, stage: str) -> DataFrame:
+    """The stage's manifest rows; a typed empty relation on a fresh run."""
+    m = _manifest(spark, base, stage)
+    return _empty(spark, MANIFEST_SCHEMA) if m is None else m
+
+
+def _pending(
+    units: DataFrame, spark: SparkSession, base: str, stage: str,
+    unit_col: str,
+) -> tuple[DataFrame, bool]:
+    """(this stage's unfinished rows of ``units``, whether any unit is
+    unfinished).  The input's units minus the manifest's, a set difference
+    on the driver (both are one row per unit); a row whose unit is NULL or
+    does not cast to long matches no manifest row, so it stays pending."""
+    m = _manifest(spark, base, stage)
+    done = set() if m is None else {r[0] for r in m.select("unit").collect()}
+    unit = F.col(unit_col).cast("long")
+    have = {r[0] for r in units.select(unit).collect()}
+    todo = sorted(have - done - {None})
+    return units.filter(unit.isin(todo) | unit.isNull()), bool(todo)
 
 
 def pending_units(
     units: DataFrame, spark: SparkSession, base: str, stage: str,
     unit_col: str = "unit",
 ) -> DataFrame:
-    """Anti-join this stage's work units against the done-manifest."""
-    done = read_manifest(spark, base, stage).select(
-        F.col("unit").alias(unit_col)
-    )
-    return units.join(done, unit_col, "left_anti")
+    """This stage's work units that have no manifest row as of this call
+    (the manifest is read when this is called, not when an action runs)."""
+    return _pending(units, spark, base, stage, unit_col)[0]
 
 
 def commit_units(
@@ -123,6 +165,7 @@ def commit_units(
     'resume' would re-run the whole stage.
     """
     t0 = time.time()
+    spark = df.sparkSession
     # persist so the manifest counts reuse the materialized rows instead of
     # re-executing the whole compute DAG (each unit's kriging would run
     # TWICE per commit otherwise — and a nondeterministic compute could
@@ -141,40 +184,31 @@ def commit_units(
         # ZERO parquet part files under partitionBy, so a later read
         # cannot infer the schema — the sidecar makes the empty stage
         # readable instead of wedging every subsequent resume
-        import json as _json
-
         _sidecar_write(
-            df.sparkSession,
+            spark,
             f"{base}/{stage}/_engine_schema.json",
-            _json.dumps(df.schema.jsonValue()),
+            json.dumps(df.schema.jsonValue()),
         )
         # lineage rows for THIS batch only — never rescan previously-
         # committed units (at 10^12-row scale a full rescan per batch is
-        # the bottleneck)
-        counts = df.groupBy("unit").agg(F.count(F.lit(1)).alias("rows"))
-        if units is not None:
-            allu = units.select(
-                F.col(unit_col).cast("long").alias("unit")
-            ).distinct()
-            counts = allu.join(counts, "unit", "left").fillna(0, ["rows"])
-        counts = counts.select(
-            "unit", "rows", F.lit(stage).alias("stage"),
-            F.lit(wall).alias("wall_s"),
-        )
-        # ONE execution of the counts plan feeds both the manifest append
-        # and the returned rows: collect first (tiny — one row per unit),
-        # then write the collected batch.  Appending the live plan and
-        # re-executing it for the return value would run the counts twice,
-        # and when `units` is supplied that plan reads the manifest path
-        # being appended to (via pending_units' anti-join) — a file-index
-        # refresh between the two executions would make the second see the
-        # just-written rows and return a wrong result.
-        rows = counts.collect()
-        spark = df.sparkSession
-        out = spark.createDataFrame(rows, counts.schema)
-        out.write.format(FORMAT).mode("append").save(_manifest_path(base))
+        # the bottleneck); one row per unit, so the counts come back to
+        # the driver and the covered units without rows are filled in there
+        counts = {r["unit"]: r["count"]
+                  for r in df.groupBy("unit").count().collect()}
     finally:
         df.unpersist()
+    if units is not None:
+        # deduplicated here, not by a distinct(): no shuffle job
+        covered = units.select(F.col(unit_col).cast("long")).collect()
+        counts = {r[0]: counts.get(r[0], 0) for r in covered}
+    if not counts:
+        return _empty(spark, MANIFEST_SCHEMA)
+    # a non-empty pandas frame plans as a LocalTableScan: the append runs
+    # no Python worker
+    batch = pd.DataFrame({"unit": list(counts), "rows": list(counts.values()),
+                          "stage": stage, "wall_s": wall})
+    out = spark.createDataFrame(batch, MANIFEST_SCHEMA)
+    out.write.format(FORMAT).mode("append").save(_manifest_path(base))
     return out
 
 
@@ -188,10 +222,9 @@ def run_stage_resumable(
 ) -> DataFrame:
     """Compute only unfinished units, commit data + lineage, return the
     stage's full output (previous + new)."""
-    todo = pending_units(units, spark, base, stage, unit_col)
-    if todo.limit(1).count() > 0:
-        out = compute(todo)
-        commit_units(out, base, stage, unit_col, units=todo)
+    todo, any_todo = _pending(units, spark, base, stage, unit_col)
+    if any_todo:
+        commit_units(compute(todo), base, stage, unit_col, units=todo)
     from pyspark.errors import AnalysisException
 
     try:
@@ -200,12 +233,7 @@ def run_stage_resumable(
         # a stage whose every unit legitimately produced 0 rows has
         # manifest entries but no data files — return a typed empty
         # frame from the schema sidecar instead of wedging every resume
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
         txt = _sidecar_read(spark, f"{base}/{stage}/_engine_schema.json")
         if txt is not None:
-            schema = StructType.fromJson(_json.loads(txt))
-            return spark.createDataFrame([], schema)
+            return _empty(spark, StructType.fromJson(json.loads(txt)))
         raise

@@ -387,8 +387,8 @@ def _block_guard_sql(res: int, ring: int, metric: Distance) -> str:
     ``_qlat``, cell ``_qcell``) to ANY point outside its (2·ring+1)² cell
     block — the certification radius of the tiled kNN join.
 
-    Sphere (Haversine): the same exact wrap/pole-safe bounds proven in
-    ``bucket_index._boundary_dist``:
+    Sphere (Haversine): exact wrap/pole-safe bounds on the lon/lat cell
+    block:
 
     * lat edges — meridian arc ``R·radians(Δφ)``; DROPPED when the block
       edge sits on the world boundary (±90): no data exists beyond it and

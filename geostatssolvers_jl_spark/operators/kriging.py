@@ -148,7 +148,7 @@ def _predict_global(model: KrigingModel, fit: dict, qcoords: np.ndarray,
     # cache-resident sub-chunks: the (q, n) covariance block plus the
     # (q, n, d) difference temporaries inside metric.np would otherwise
     # churn gigabytes per Arrow batch at n ~ 10⁴⁺ data points (same
-    # rationale as solve_systems' step=2048)
+    # rationale as solve_systems' sub-chunks)
     q_total = qcoords.shape[0]
     step = max(1, 2_000_000 // max(n, 1))
     if q_total > step:
@@ -175,6 +175,9 @@ def _predict_global(model: KrigingModel, fit: dict, qcoords: np.ndarray,
 
 # ------------------------------------------------------------- local path
 
+# doubles per stacked solve block: 2048 systems up to k + m = 32
+_SOLVE_BLOCK = 2048 * 32 * 32
+
 
 def solve_systems(
     model: KrigingModel,
@@ -193,9 +196,14 @@ def solve_systems(
 
     Arrow batches can be 16k+ rows; the stacked (B, k, k) intermediates at
     that size churn ~100 MB of temporaries per batch and stop scaling
-    across executor cores — process in cache-resident sub-chunks."""
+    across executor cores — process in cache-resident sub-chunks of at
+    most 2048 systems, fewer as k + m grows so each stacked
+    (step, k+m, k+m) block stays within `_SOLVE_BLOCK` doubles (a ball
+    search with no k cap has k = n).  Systems solve independently, so the
+    chunking never changes a row."""
     B, k = zn.shape
-    step = 2048
+    m = model.drift_matrix(qcoords[:1]).shape[-1]
+    step = max(1, min(2048, _SOLVE_BLOCK // (k + m) ** 2))
     if B > step:
         mu = np.empty(B)
         var_ = np.empty(B)
@@ -213,7 +221,6 @@ def solve_systems(
     C = model.variogram.cov(H)  # (B, k, k)
 
     Fm = model.drift_matrix(NC)          # (B, k, m)
-    m = Fm.shape[-1]
     fdist = np.where(valid, dist, 0.0)   # keep inf out of the variogram
     c0 = np.where(valid, model.variogram.cov(fdist), 0.0)  # (B, k)
     f0 = model.drift_matrix(qcoords)     # (B, m)

@@ -5,9 +5,10 @@ job resumes without recompute).
 The grid is split into ``n_units`` contiguous cell-id blocks; each block
 is one resumable work unit (`lineage.run_stage_resumable`): its estimation
 output lands partitioned by unit with a per-unit lineage row (rows, wall),
-and a restart anti-joins against the manifest so only unfinished blocks
-recompute.  Unit granularity trades resume precision against manifest
-size — at 10¹² pages one unit ≈ one tile-group of the output grid.
+and a restart subtracts the manifest's done units so only unfinished
+blocks recompute.  Unit granularity trades resume precision against
+manifest size — at 10¹² pages one unit ≈ one tile-group of the output
+grid.
 """
 
 from __future__ import annotations

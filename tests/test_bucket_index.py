@@ -8,6 +8,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from geostatssolvers_jl_spark import neighbors
 from geostatssolvers_jl_spark.bucket_index import BucketIndex
 from geostatssolvers_jl_spark.distances import Euclidean, Haversine
 from geostatssolvers_jl_spark.neighbors import topk_search
@@ -57,3 +58,39 @@ def test_duplicate_locations_tiebreak():
     assert list(i1[0]) == [0, 1, 2, 3, 4]
     i2, d2, n2 = topk_search(Q, D, 5, Euclidean())
     assert np.array_equal(i1, i2)
+
+
+def test_sphere_index_certifies_poles(monkeypatch):
+    """The kriging bench shape: 20k points with |lat| ≤ 80 and a 1° world
+    grid of queries, poles included.  Every query certifies inside a
+    bucket window — none falls back to the full-cover brute search — and
+    the result equals brute force exactly on every polar query (|lat| ≥
+    80) and a sample of the rest.  (A lon/lat bucket grid bounds its lon
+    edges by meridian circles, a bound that vanishes as cos φ → 0, so
+    polar queries could only certify through brute force.)"""
+    rng = np.random.default_rng(1)
+    m = 20000
+    D = np.column_stack([rng.uniform(-180, 180, m), rng.uniform(-80, 80, m)])
+    lon, lat = np.meshgrid(np.arange(-180.0, 180.0), np.arange(-90.0, 91.0))
+    Q = np.column_stack([lon.ravel(), lat.ravel()])
+    met = Haversine(6371.0)
+
+    brute_calls = []
+
+    def counting(q, *a, **kw):
+        brute_calls.append(len(q))
+        return topk_search(q, *a, **kw)
+
+    monkeypatch.setattr(neighbors, "topk_search", counting)
+    i1, d1, n1 = BucketIndex(D, met).topk(Q, 8)
+    assert brute_calls == []
+
+    polar = np.abs(Q[:, 1]) >= 80
+    sample = np.sort(np.concatenate([
+        np.nonzero(polar)[0],
+        rng.choice(np.nonzero(~polar)[0], 2000, replace=False),
+    ]))
+    i2, d2, n2 = topk_search(Q[sample], D, 8, met)
+    assert np.array_equal(i1[sample], i2)
+    assert np.array_equal(d1[sample], d2)
+    assert np.array_equal(n1[sample], n2)

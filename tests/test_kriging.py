@@ -149,3 +149,68 @@ def test_nugget_effect_defaults_and_validation():
         NuggetEffect(nugget=0.0)
     with pytest.raises(ValueError, match="nugget > 0"):
         NuggetEffect(-1.0)
+
+
+def _ball_systems(n, nq, radius, seed=0):
+    """Gathered neighbor arrays of a ball search with no k cap (k = n)."""
+    import numpy as np
+
+    from geostatssolvers_jl_spark.distances import Euclidean
+    from geostatssolvers_jl_spark.neighbors import topk_search
+
+    rng = np.random.default_rng(seed)
+    X = rng.uniform(0, 100, size=(n, 2))
+    z = rng.normal(size=n)
+    q = rng.uniform(0, 100, size=(nq, 2))
+    idx, dist, _ = topk_search(q, X, n, Euclidean(), radius)
+    valid = idx >= 0
+    safe = np.where(valid, idx, 0)
+    return q, X[safe], np.where(valid, z[safe], 0.0), valid, dist
+
+
+def test_ball_search_solve_memory_bounded():
+    """``maxneighbors=None, radius=r`` solves systems of size k = n.  At
+    n = 800 a fixed 2048-system chunk stacked ~10.5 GB per (B, k+m, k+m)
+    array; the chunk shrinks with k + m, so the peak stays near a few
+    solve blocks."""
+    import tracemalloc
+
+    import numpy as np
+
+    from geostatssolvers_jl_spark.distances import Euclidean
+    from geostatssolvers_jl_spark.operators import kriging as K
+
+    q, NC, zn, valid, dist = _ball_systems(800, 24, radius=1e9)
+    assert valid.all()  # k = n = 800 neighbors each
+    model = KrigingModel(variogram=GaussianVariogram(range=35.0, sill=1.0,
+                                                     nugget=0.1))
+    tracemalloc.start()
+    try:
+        mu, var = K.solve_systems(model, q, NC, zn, valid, dist,
+                                  Euclidean(), 1)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert np.isfinite(mu).all() and np.isfinite(var).all()
+    # one 24-system chunk alone would stack 24·801² doubles ≈ 123 MB
+    assert peak < 16 * K._SOLVE_BLOCK * 8, peak
+
+
+def test_solve_chunking_keeps_rows_bit_identical(monkeypatch):
+    """Chunks sized from k + m give the same rows, bit for bit, as one
+    2048-system chunk — with a ball that cuts neighbors (padded slots)."""
+    import numpy as np
+
+    from geostatssolvers_jl_spark.distances import Euclidean
+    from geostatssolvers_jl_spark.operators import kriging as K
+
+    q, NC, zn, valid, dist = _ball_systems(90, 1500, radius=30.0, seed=1)
+    assert (~valid).any() and valid.sum(axis=1).min() >= 1
+    model = KrigingModel(variogram=GaussianVariogram(range=35.0, sill=1.0,
+                                                     nugget=0.1))
+    assert K._SOLVE_BLOCK // (90 + 1) ** 2 < 1500  # several chunks
+    got = K.solve_systems(model, q, NC, zn, valid, dist, Euclidean(), 1)
+    monkeypatch.setattr(K, "_SOLVE_BLOCK", 2048 * 91 * 91)
+    want = K.solve_systems(model, q, NC, zn, valid, dist, Euclidean(), 1)
+    for a, b in zip(got, want):
+        assert np.array_equal(a, b)

@@ -241,21 +241,53 @@ def test_topk_small_radius_keeps_in_radius_points():
 
 
 def test_bucket_index_collinear_data_bounded():
-    """Near-collinear data (single-latitude transect): the aspect-driven
-    bucket split must stay within the m/target budget instead of
-    exploding one axis to millions of buckets — r3 review finding."""
+    """Near-collinear data (a single-latitude transect): the bucket split
+    must stay bounded instead of exploding one axis to millions of
+    buckets.  Both grids keep the m/target budget: planar data buckets in
+    2-D; sphere data buckets its 3-D unit vectors, where the transect is
+    a circle and its constant-z axis gets a single bucket.  (World-spread
+    sphere data rescales to ~target points per occupied bucket instead,
+    capped at one bucket per data point.)"""
     rng = np.random.default_rng(3)
     n = 4096
     d = np.column_stack([
         rng.uniform(-180, 180, n), np.full(n, 37.5),
     ])
-    metric = Haversine(6371.0)
-    idx = BucketIndex(d, metric, target=32)
-    assert idx.nbx * idx.nby <= max(1, n // 32)
     q = np.column_stack([rng.uniform(-180, 180, 25), np.full(25, 37.2)])
-    ai, ad, _ = idx.topk(q, 5)
-    bi, bd, _ = topk_search(q, d, 5, metric)
-    assert np.array_equal(ai, bi)
+    planar = BucketIndex(d, Euclidean(), target=32)
+    assert planar.nb.size == 2
+    assert np.prod(planar.nb) <= max(1, n // 32)
+    sphere = BucketIndex(d, Haversine(6371.0), target=32)
+    assert sphere.nb.size == 3 and sphere.nb[2] == 1
+    assert np.prod(sphere.nb) <= max(1, n // 32)
+    world = np.column_stack([rng.uniform(-180, 180, n), rng.uniform(-90, 90, n)])
+    assert np.prod(BucketIndex(world, Haversine(6371.0), target=32).nb) <= n
+    for idx in (planar, sphere):
+        ai, ad, _ = idx.topk(q, 5)
+        bi, bd, _ = topk_search(q, d, 5, idx.metric)
+        assert np.array_equal(ai, bi)
+
+
+def test_bucket_index_rescale_follows_occupancy():
+    """The one-shot rescale past the m/target budget is chosen by observed
+    occupancy, not by dimension: sphere data spread over the globe fills
+    more than π flat sheets of its 3-D grid and rescales; clustered or
+    polar-cap sphere data, and planar clusters, keep the budget (finer
+    buckets there slow the queries between the data)."""
+    rng = np.random.default_rng(5)
+    n = 8000
+    budget = n // 32
+    sphere = Haversine(6371.0)
+    world = np.column_stack([rng.uniform(-180, 180, n), rng.uniform(-90, 90, n)])
+    assert np.prod(BucketIndex(world, sphere).nb) > budget
+    cluster = np.column_stack([rng.normal(10, 5, n), rng.normal(45, 5, n)])
+    caps = np.column_stack([rng.uniform(-180, 180, n),
+                            rng.uniform(82, 90, n) * rng.choice([-1, 1], n)])
+    for pts in (cluster, caps):
+        assert np.prod(BucketIndex(pts, sphere).nb) <= budget
+    planar = np.concatenate([rng.normal(c, 2, size=(n // 4, 2))
+                             for c in [(10, 10), (80, 20), (50, 50), (20, 90)]])
+    assert np.prod(BucketIndex(planar, Euclidean()).nb) <= budget
 
 
 def test_tile_res_decode_exactness_bound():

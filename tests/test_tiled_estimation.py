@@ -79,9 +79,17 @@ def test_idw_tiled_radius_bit_identical(spark, geo):
     d, q = geo
     kw = dict(
         var="z", data_coord_cols=["lon", "lat"],
-        query_coord_cols=["lon", "lat"], maxneighbors=5, radius=900.0,
+        query_coord_cols=["lon", "lat"], maxneighbors=5, radius=500.0,
         minneighbors=1, metric=Haversine(6371.0),
     )
+    # the ball must cut: some query keeps fewer than k neighbors, or the
+    # tiled path's radius filter goes untested
+    from geostatssolvers_jl_spark.neighbors import topk_search
+
+    D = d.orderBy("data_id").select("lon", "lat").toPandas().to_numpy()
+    Q = q.select("lon", "lat").toPandas().to_numpy()
+    _, _, nvalid = topk_search(Q, D, 5, kw["metric"], kw["radius"])
+    assert (nvalid < 5).any()
     a = _rows(solve_idw(d, q, strategy="local-broadcast", **kw))
     b = _rows(solve_idw(d, q, strategy="local-tiled", tile_res=4, **kw))
     assert a == b
