@@ -25,23 +25,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-BENCH_NAMES = (
-    "idw_pages", "knn_join", "knn_join_tiled", "idw_pages_tiled",
-    "tile_assign", "dedup_exact", "token_count", "langid",
-    "ann_cosine", "ann_topk_lsh", "dedup_minhash_lsh", "pip_polygon",
-    "url_canonical", "split_assign", "redact_pii", "repetition_ratio",
-    "langid_model", "events_sessions", "zonal_stats",
-    "token_count_subword", "zonal_stats_join",
-    "multimodal_decode_real", "ann_topk_ivf",
-    "bm25_rank", "lm_quality",
-    "variogram_empirical", "variogram_fit", "nscore_transform",
-    "loo_idw_cv", "substring_dedup",
-    "corpus_curation", "curation_funnel", "sample_stratified",
-    "quantile_thresholds", "kmeans_assign", "kmeans_step",
-    "tfidf_topterms", "variogram_cross", "pagerank", "logreg_score",
-    "heavy_hitters", "indicator_kriging", "cokriging_collocated",
-    "etype_estimate", "quantile_map",
-)
+import bench  # noqa: E402
 
 
 def main():
@@ -60,7 +44,8 @@ def main():
                     help="use .count() like bench.py instead of noop sink")
     args = ap.parse_args()
 
-    names = (args.queries.split(",") if args.queries else list(BENCH_NAMES))
+    names = (args.queries.split(",") if args.queries
+             else list(bench.BENCH_NAMES))
 
     import __spark_entry__ as entry
     from geostatssolvers_jl_spark.session import get_spark
@@ -69,10 +54,7 @@ def main():
     qs = dict(entry.queries())
     # the headline is timed by bench._pipeline, not a queries() entry —
     # expose it here under the same name for noop/subset timing
-    import bench as _bench
-
-    qs["kriging_pipeline"] = (
-        lambda sp, sf: _bench._pipeline(sp, sf))
+    qs["kriging_pipeline"] = bench._pipeline
     timings: dict[str, float] = {}
     for name in names:
         if args.explain:

@@ -119,3 +119,34 @@ def choose_ivf(n_vectors: int, lo: int = 4,
         return lo, 2
     k = min(hi, max(lo, int(round(math.sqrt(n_vectors)))))
     return k, max(2, k // 8)
+
+
+# LSH candidate volume grows ~n²/2^planes: below this the whole plain
+# SQL plan is ~1 s and the gather tier's fixed costs (repartition +
+# broadcasts) dominate — measured 1.9 s vs 3.2 s at 2k vectors
+ANN_FAST_MIN = 10_000
+# below this the brute O(n²) pair window (≤ 1e8 pairs, one broadcast
+# join + one window) finishes in ~2 s — under the tiled ladder's fixed
+# multi-pass cost (~6 actions, measured ~3.7 s at 5k points); above it
+# the ladder's O(n·ring) wins and keeps winning forever (24× at 50k)
+LOO_BRUTE_LIMIT = 10_000
+
+
+def ann_tier(n_vectors: int) -> str:
+    """Scoring tier of the ANN top-k entries over ``n_vectors``:
+    "join" beyond `vecops.GATHER_SCORE_LIMIT` (the gather scorer's
+    broadcast bound: the per-bucket / per-cell SQL join plan), "sql"
+    below ANN_FAST_MIN (the plain SQL plan; the LSH entry takes it, the
+    IVF entry, whose ranked relation is kernel-built, still gathers),
+    else "gather" (the bounded gather scorer)."""
+    from .webtext.vecops import GATHER_SCORE_LIMIT
+
+    if n_vectors > GATHER_SCORE_LIMIT:
+        return "join"
+    return "sql" if n_vectors < ANN_FAST_MIN else "gather"
+
+
+def loo_tier(n_data: int) -> str:
+    """Leave-one-out kNN tier: "brute" (one O(n²) pair window) below
+    LOO_BRUTE_LIMIT points, else "tiled" (the exact tiled kNN ladder)."""
+    return "brute" if n_data < LOO_BRUTE_LIMIT else "tiled"

@@ -55,10 +55,12 @@ def curation_report_sql(dialect: str, docs_rel: str = "documents") -> str:
     """Training-data manifest: per (lang, split) document/token/byte
     totals over the curated corpus (dedup survivors passing the quality
     gate).  Integer counts and BIGINT sums — hash-exact across engines
-    by construction."""
+    by construction; the sums are CAST to BIGINT because DuckDB types an
+    integer sum as HUGEINT."""
     return (
         f"SELECT lang, split, count(*) AS n_docs, "
-        f"sum(n_tokens) AS total_tokens, sum(n_bytes) AS total_bytes "
+        f"CAST(sum(n_tokens) AS BIGINT) AS total_tokens, "
+        f"CAST(sum(n_bytes) AS BIGINT) AS total_bytes "
         f"FROM ({_curated_docs_sql(dialect, docs_rel)}) _c "
         f"WHERE _dup_rk = 1 AND ok = 1 "
         f"GROUP BY lang, split"
@@ -72,15 +74,18 @@ def curation_funnel_sql(dialect: str, docs_rel: str = "documents") -> str:
     keep = "_dup_rk = 1 AND ok = 1"
     return (
         f"SELECT count(*) AS n_raw, "
-        f"sum(CASE WHEN _dup_rk = 1 THEN 1 ELSE 0 END) AS n_unique, "
-        f"sum(CASE WHEN {keep} THEN 1 ELSE 0 END) AS n_curated, "
-        f"sum(CASE WHEN {keep} AND split = 'train' THEN 1 ELSE 0 END) "
-        f"AS n_train, "
-        f"sum(CASE WHEN {keep} AND split = 'val' THEN 1 ELSE 0 END) "
-        f"AS n_val, "
-        f"sum(CASE WHEN {keep} AND split = 'test' THEN 1 ELSE 0 END) "
-        f"AS n_test, "
-        f"sum(CASE WHEN {keep} THEN n_tokens ELSE 0 END) AS curated_tokens "
+        f"CAST(sum(CASE WHEN _dup_rk = 1 THEN 1 ELSE 0 END) AS BIGINT) "
+        f"AS n_unique, "
+        f"CAST(sum(CASE WHEN {keep} THEN 1 ELSE 0 END) AS BIGINT) "
+        f"AS n_curated, "
+        f"CAST(sum(CASE WHEN {keep} AND split = 'train' THEN 1 ELSE 0 END) "
+        f"AS BIGINT) AS n_train, "
+        f"CAST(sum(CASE WHEN {keep} AND split = 'val' THEN 1 ELSE 0 END) "
+        f"AS BIGINT) AS n_val, "
+        f"CAST(sum(CASE WHEN {keep} AND split = 'test' THEN 1 ELSE 0 END) "
+        f"AS BIGINT) AS n_test, "
+        f"CAST(sum(CASE WHEN {keep} THEN n_tokens ELSE 0 END) AS BIGINT) "
+        f"AS curated_tokens "
         f"FROM ({_curated_docs_sql(dialect, docs_rel)}) _c"
     )
 

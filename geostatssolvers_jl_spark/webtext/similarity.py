@@ -679,22 +679,6 @@ def collect_emb_matrix(spark, emb_rel: str = "embeddings",
     return ids[order], E[order]
 
 
-def _dot_chain(a: str, b: str, dim: int = DIM) -> str:
-    """Expanded spelling of `_dot_sql`'s fold: ``0.0 + a[0]*b[0] + ...``
-    — bit-identical (left-associated addition replays the fold's exact
-    accumulation sequence, including the leading ``0.0 + t0`` step,
-    which matters when ``t0`` is −0.0) but REJECTED for execution and
-    kept only as the bit-equality test fixture: an interleaved A/B on
-    20M pairs measured the expanded chain 5.5× SLOWER than the fold
-    (51–70 s vs 9–17 s) — the 64-term tree pushes the generated stage
-    past HotSpot's JIT method limit, so it runs as interpreted bytecode,
-    while the `aggregate(zip_with(...))` fold's fallback loop is
-    comparatively tight.  This re-confirms `_cos_sql`'s r6 rejection
-    from the projection side."""
-    terms = " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim))
-    return f"(CAST(0.0 AS DOUBLE) + {terms})"
-
-
 def _score_distinct_pairs(spark, cand, emb_rel: str, dim: int = DIM,
                           gather: bool = True,
                           known_n: int | None = None):

@@ -9,8 +9,12 @@ import pytest
 from geostatssolvers_jl_spark.distances import Anisotropic, Euclidean
 from geostatssolvers_jl_spark.grid import CartesianGrid
 from geostatssolvers_jl_spark.planner import (
+    ANN_FAST_MIN,
+    LOO_BRUTE_LIMIT,
+    ann_tier,
     choose_strategy,
     kriging_ui,
+    loo_tier,
     searcher_ui,
 )
 from geostatssolvers_jl_spark.simulation.seqsim import SGSParams, solve_sgs
@@ -42,6 +46,21 @@ def test_choose_strategy():
     assert choose_strategy(100, None) == "global"
     assert choose_strategy(100, 5) == "local-broadcast"
     assert choose_strategy(10_000_000, 5) == "local-tiled"
+
+
+def test_tier_cutovers():
+    """Each size cutover of the ANN and LOO entries, on both sides."""
+    from geostatssolvers_jl_spark.webtext.vecops import GATHER_SCORE_LIMIT
+
+    assert ANN_FAST_MIN == 10_000 and GATHER_SCORE_LIMIT == 500_000
+    assert ann_tier(0) == "sql"
+    assert ann_tier(ANN_FAST_MIN - 1) == "sql"
+    assert ann_tier(ANN_FAST_MIN) == "gather"
+    assert ann_tier(GATHER_SCORE_LIMIT) == "gather"
+    assert ann_tier(GATHER_SCORE_LIMIT + 1) == "join"
+    assert LOO_BRUTE_LIMIT == 10_000
+    assert loo_tier(LOO_BRUTE_LIMIT - 1) == "brute"
+    assert loo_tier(LOO_BRUTE_LIMIT) == "tiled"
 
 
 def test_anisotropic_metric():

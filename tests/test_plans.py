@@ -168,7 +168,7 @@ def test_registry_window_all_oracle_anchored():
     one anchor per operator family sits inside it."""
     import __spark_entry__ as entry
 
-    q = list(entry._raw_queries())
+    q = list(entry.queries())
     oracles = set(entry.oracle_sql())
     window = q[:50]
     missing = [n for n in window if n not in oracles]
@@ -212,6 +212,17 @@ def test_registry_window_all_oracle_anchored():
         assert anchor in window, f"{anchor} fell out of the driver window"
 
 
+def test_registry_integrity():
+    """The registry table refuses a duplicate name (a dict literal would
+    keep the last one silently), and every oracle names an entry."""
+    import __spark_entry__ as entry
+
+    spec = entry.queries()["dedup_exact"]
+    with pytest.raises(ValueError, match="dedup_exact"):
+        entry._table(spec, entry.queries()["token_count"], spec)
+    assert set(entry.oracle_sql()) <= set(entry.queries())
+
+
 def test_events_hourly_timezone_invariant(spark):
     """The hourly rollup must not depend on spark.sql.session.timeZone —
     externally created sessions run the host default, and a half-hour-
@@ -223,9 +234,9 @@ def test_events_hourly_timezone_invariant(spark):
     tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        utc = sorted(map(tuple, entry.q_events_hourly(spark, sf).collect()))
+        utc = sorted(map(tuple, entry.queries()["events_hourly"](spark, sf).collect()))
         spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
-        ist = sorted(map(tuple, entry.q_events_hourly(spark, sf).collect()))
+        ist = sorted(map(tuple, entry.queries()["events_hourly"](spark, sf).collect()))
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
     assert utc == ist and len(utc) > 0
@@ -533,10 +544,12 @@ def test_materialized_relations_rebuild_on_sf_switch(spark):
     previous dataset's cache (the SQL now carries a source-dir key)."""
     import __spark_entry__ as entry
 
-    a = entry.q_dedup_minhash_lsh(spark, "/root/testdata/sf0.001").count()
-    b = entry.q_dedup_minhash_lsh(spark, "/root/testdata/sf0.01").count()
-    a2 = entry.q_dedup_minhash_lsh(spark, "/root/testdata/sf0.001").count()
+    qs = entry.queries()
+    lsh, zonal = qs["dedup_minhash_lsh"], qs["zonal_stats"]
+    a = lsh(spark, "/root/testdata/sf0.001").count()
+    b = lsh(spark, "/root/testdata/sf0.01").count()
+    a2 = lsh(spark, "/root/testdata/sf0.001").count()
     assert a == a2 and a != b
-    za = entry.q_zonal_stats(spark, "/root/testdata/sf0.001").collect()
-    zb = entry.q_zonal_stats(spark, "/root/testdata/sf0.01").collect()
+    za = zonal(spark, "/root/testdata/sf0.001").collect()
+    zb = zonal(spark, "/root/testdata/sf0.01").collect()
     assert sorted(map(tuple, za)) != sorted(map(tuple, zb))

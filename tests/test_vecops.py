@@ -194,15 +194,29 @@ def test_bucket_tables_kernel_matches_sql(spark, emb_df):
     assert got == want and len(got) == 4
 
 
+def _dot_chain(a: str, b: str, dim: int) -> str:
+    """Expanded spelling of `_dot_sql`'s fold: ``0.0 + a[0]*b[0] + ...``
+    — bit-identical (left-associated addition replays the fold's exact
+    accumulation sequence, including the leading ``0.0 + t0`` step,
+    which matters when ``t0`` is −0.0) but REJECTED for execution and
+    kept only as the bit-equality test fixture: an interleaved A/B on
+    20M pairs measured the expanded chain 5.5× SLOWER than the fold
+    (51–70 s vs 9–17 s) — the 64-term tree pushes the generated stage
+    past HotSpot's JIT method limit, so it runs as interpreted bytecode,
+    while the `aggregate(zip_with(...))` fold's fallback loop is
+    comparatively tight.  This re-confirms `_cos_sql`'s r6 rejection
+    from the projection side."""
+    terms = " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim))
+    return f"(CAST(0.0 AS DOUBLE) + {terms})"
+
+
 def test_dot_chain_bitwise_equals_fold(spark):
     """The expanded codegen chain must replay the fold's accumulation
     bit-for-bit — including signed zeros, which exercise the leading
     `0.0 +` step."""
     import numpy as np
 
-    from geostatssolvers_jl_spark.webtext.similarity import (
-        _dot_chain, _dot_sql,
-    )
+    from geostatssolvers_jl_spark.webtext.similarity import _dot_sql
 
     rng = np.random.default_rng(3)
     rows = []

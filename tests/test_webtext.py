@@ -1500,6 +1500,38 @@ def test_curation_dedup_drops_exact_copies(spark):
         spark.catalog.dropTempView("cur_dups")
 
 
+def test_curation_sums_are_bigint_on_both_engines(spark):
+    """Every sum in the curation report and funnel is BIGINT on DuckDB as
+    on Spark (DuckDB types an integer sum as HUGEINT unless cast), so the
+    oracle's result types match the entry's, not only its values."""
+    import duckdb
+    from pyspark.sql.types import LongType
+
+    from geostatssolvers_jl_spark.webtext.curation import (
+        curation_funnel_sql, curation_report_sql,
+    )
+
+    path = "/root/testdata/sf0.01/documents.parquet"
+    sums = {curation_report_sql: ("total_tokens", "total_bytes"),
+            curation_funnel_sql: ("n_unique", "n_curated", "n_train",
+                                  "n_val", "n_test", "curated_tokens")}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW cur_types AS SELECT * FROM '{path}'")
+    spark.read.parquet(path).createOrReplaceTempView("cur_types")
+    try:
+        for fn, cols in sums.items():
+            duck = {r[0]: r[1] for r in con.execute(
+                f"DESCRIBE {fn('duck', 'cur_types')}").fetchall()}
+            schema = spark.sql(fn("spark", "cur_types")).schema
+            for c in cols:
+                assert duck[c] == "BIGINT", (fn.__name__, c, duck[c])
+                assert isinstance(schema[c].dataType, LongType), (
+                    fn.__name__, c)
+    finally:
+        con.close()
+        spark.catalog.dropTempView("cur_types")
+
+
 def test_stratified_sample_exact_k_and_stability(spark):
     """Exactly min(k, stratum size) rows per stratum; adding documents
     to ANOTHER stratum never changes a stratum's selection (the
