@@ -23,14 +23,16 @@ analogous to Spark's own broadcast-vs-shuffle join choice:
 
 * **tiled gather** (`knn_join_tiled_exact`, consumed by
   `operators.tiled.tiled_local_apply`): big-big case (10¹²-page story).
-  Both sides get H3-style cell ids; data is replicated into the ring-1
-  halo of its cell; an equi-join on cell id (ordinary shuffle join
-  Catalyst/AQE can optimize, incl. skew splitting) produces candidates; a
-  window top-k per query with a *certification radius* keeps only
-  provably-exact neighbors; unresolved queries (kth neighbor not
-  certified) escalate to a coarser resolution and finally to a bounded
-  terminal pass.  The pairs are joined back to their attributes and
-  collected into per-query arrays that fill the same stacks.
+  Both sides get H3-style cell ids; one side is replicated into the
+  ring-1 halo of its cell by exploding a JVM-side ring array
+  (`tiling.ring_expr`, no Python stage); an equi-join on cell id
+  (ordinary shuffle join Catalyst/AQE can optimize, incl. skew
+  splitting) produces candidates; a window top-k per query with a
+  *certification radius* keeps only provably-exact neighbors;
+  unresolved queries (kth neighbor not certified) escalate to a wider
+  ring and finally to a bounded terminal pass.  The pairs are joined
+  back to their attributes and collected into per-query arrays that
+  fill the same stacks.
 
 Top-k is deterministic: ties broken by data row id ascending — the same
 (dist, data_id) order on both strategies, so the kernel sees the same
@@ -52,18 +54,19 @@ from .distances import Distance, Haversine
 from . import tiling
 
 # join-strategy hint for the tiled candidate joins.  The hint's
-# purpose is to forbid AQE from broadcasting a halo'd 10¹²-row side
-# whose mapInPandas-derived stats it cannot see; "merge" (sort-merge)
-# is the measured choice.  A "shuffle_hash" variant — which also
-# forbids the broadcast and skips sort-merge's sorts, and which DID
-# win 25% for the variography ring join (variography._pair_sql) — was
-# interleaved-A/B'd here at the sf1.0 shape (r7 second session) and
-# REJECTED: wash on knn_join_tiled (2.51 vs 2.44 s min-of-3) and
-# idw_pages_tiled (3.35 vs 3.38), consistently WORSE on the
-# multi-pass loo_idw_cv ladder (7.8–10.1 vs 5.7–6.3 s, every rep) —
-# the escalation/terminal passes lose more to per-partition hash
-# builds than they save in sorts.  Kept as a constant so the
-# experiment is one flip to reproduce.
+# purpose is to forbid AQE from broadcasting a halo'd 10¹²-row side:
+# Spark cannot estimate an explode's output rows, so its size estimate
+# of the ring side is blind to the (2·ring+1)² fan-out; "merge"
+# (sort-merge) is the measured choice.  A "shuffle_hash" variant —
+# which also forbids the broadcast and skips sort-merge's sorts, and
+# which DID win 25% for the variography ring join
+# (variography._pair_sql) — was interleaved-A/B'd here at the sf1.0
+# shape (round 7) and REJECTED: wash on knn_join_tiled
+# (2.51 vs 2.44 s min-of-3) and idw_pages_tiled (3.35 vs 3.38),
+# consistently WORSE on the multi-pass loo_idw_cv ladder (7.8–10.1 vs
+# 5.7–6.3 s, every rep) — the escalation/terminal passes lose more to
+# per-partition hash builds than they save in sorts.  Kept as a
+# constant so the experiment is one flip to reproduce.
 _CAND_JOIN_HINT = "merge"
 
 
@@ -507,9 +510,10 @@ def knn_join_tiled(
     """Big-big exact-certified kNN join via cell-ring expansion.
 
     1. encode both sides at resolution ``res`` (JVM-side arithmetic);
-    2. replicate ONE side into the ring-``ring`` halo (unique cells —
-       ``tiling.ring_table`` masks clipped lat offsets and dedups lon
-       wraps, so no data row can occupy two ranks of one query):
+    2. replicate ONE side into the ring-``ring`` halo by exploding
+       ``tiling.ring_expr`` (unique cells — off-world lat rows dropped,
+       lon wraps deduplicated, so no data row can occupy two ranks of one
+       query):
        ``replicate='data'`` (default, the bulk first pass — ×(2r+1)²
        bounded fanout of the data side) or ``replicate='queries'``
        (escalation passes over a small pending side — replicating the
@@ -543,29 +547,20 @@ def knn_join_tiled(
         F.col(lon).alias("_dlon"), F.col(lat).alias("_dlat"),
     )
 
-    # the candidate join sides derive from mapInPandas (ring_table) whose
-    # output stats Spark cannot estimate — without the merge hint AQE can
-    # decide to BROADCAST a halo'd 10¹²-row side and OOM the driver
     if replicate == "data":
-        halo = tiling.ring_table(
-            queries.sparkSession, d.select(F.col("_dcell").alias("cell")),
-            k=ring,
-        )
-        d_rep = d.join(halo, d["_dcell"] == halo["cell"], "inner").select(
-            F.col("neighbor").alias("_jcell"),
+        d_rep = d.select(
+            F.explode(F.expr(tiling.ring_expr("_dcell", res, ring)))
+            .alias("_jcell"),
             data_id, "_dlon", "_dlat",
         )
         cand = q.hint(_CAND_JOIN_HINT).join(
             d_rep, F.col("_qcell") == F.col("_jcell"), "inner"
         )
     elif replicate == "queries":
-        halo = tiling.ring_table(
-            queries.sparkSession, q.select(F.col("_qcell").alias("cell")),
-            k=ring,
-        )
-        q_rep = q.join(halo, q["_qcell"] == halo["cell"], "inner").select(
+        q_rep = q.select(
             query_id, "_qcell", "_qlon", "_qlat",
-            F.col("neighbor").alias("_jcell"),
+            F.explode(F.expr(tiling.ring_expr("_qcell", res, ring)))
+            .alias("_jcell"),
         )
         cand = q_rep.hint(_CAND_JOIN_HINT).join(
             d, F.col("_jcell") == F.col("_dcell"), "inner"

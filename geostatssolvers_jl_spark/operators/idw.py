@@ -123,7 +123,6 @@ def solve_idw_compositional(
     id_col: str = "cell_id",
     strategy: str = "auto",
     tile_res: int | None = None,
-    broadcast_limit: int = 2_000_000,
     tiled_first_replicate: str = "auto",
 ) -> DataFrame:
     """IDW over composition-valued columns (reference:
@@ -197,8 +196,8 @@ def solve_idw_compositional(
     return solve_local(
         data, grid_df, var, kernel, f"{id_col} long, {var} array<double>",
         data_coord_cols, query_coord_cols, maxneighbors, minneighbors,
-        metric, None, id_col, strategy, tile_res, broadcast_limit,
-        tiled_first_replicate, value_cols=ycols + ccols, expand=expand,
+        metric, None, id_col, strategy, tile_res, tiled_first_replicate,
+        value_cols=ycols + ccols, expand=expand,
     )
 
 
@@ -216,14 +215,14 @@ def solve_idw(
     id_col: str = "cell_id",
     strategy: str = "auto",
     tile_res: int | None = None,
-    broadcast_limit: int = 2_000_000,
     tiled_first_replicate: str = "auto",
 ) -> DataFrame:
     """IDW solve. ``grid_df`` must carry ``id_col`` and the query
     coordinate columns (e.g. cx, cy from `CartesianGrid.spark_df`).
 
     ``strategy`` as in `tiled.solve_local`: 'auto' routes a DataFrame data
-    side above ``broadcast_limit`` through the distributed tiled join."""
+    side above `planner.BROADCAST_LIMIT` rows through the distributed
+    tiled join."""
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
     if minneighbors < 1:
@@ -257,6 +256,5 @@ def solve_idw(
         data, grid_df, var, kernel,
         f"{id_col} long, {var} double, {var}_distance double",
         data_coord_cols, query_coord_cols, maxneighbors, minneighbors,
-        metric, radius, id_col, strategy, tile_res, broadcast_limit,
-        tiled_first_replicate,
+        metric, radius, id_col, strategy, tile_res, tiled_first_replicate,
     )

@@ -298,7 +298,6 @@ def solve_kriging(
     id_col: str = "cell_id",
     strategy: str = "auto",
     tile_res: int | None = None,
-    broadcast_limit: int = 2_000_000,
     tiled_first_replicate: str = "auto",
 ) -> DataFrame:
     """Returns (id_col, var, var_variance) over the grid/query DataFrame.
@@ -307,8 +306,8 @@ def solve_kriging(
     ``radius`` realizes the MetricBall neighborhood (KBallSearch).
 
     ``strategy`` as in `tiled.solve_local` (local strategy only): 'auto'
-    routes a DataFrame data side above ``broadcast_limit`` rows through the
-    fully distributed tiled join instead of a driver collect.
+    routes a DataFrame data side above `planner.BROADCAST_LIMIT` rows
+    through the fully distributed tiled join instead of a driver collect.
     """
     model = model or KrigingModel()
     data_coord_cols = data_coord_cols or ["x", "y"]
@@ -333,8 +332,8 @@ def solve_kriging(
         return solve_local(
             data, grid_df, var, kernel, schema, data_coord_cols,
             query_coord_cols, maxneighbors, minneighbors, metric, radius,
-            id_col, strategy, tile_res, broadcast_limit,
-            tiled_first_replicate, empty_msg=missing,
+            id_col, strategy, tile_res, tiled_first_replicate,
+            empty_msg=missing,
         )
 
     if isinstance(data, DataFrame):

@@ -74,12 +74,11 @@ def solve_lwr(
     id_col: str = "cell_id",
     strategy: str = "auto",
     tile_res: int | None = None,
-    broadcast_limit: int = 2_000_000,
     tiled_first_replicate: str = "auto",
 ) -> DataFrame:
     """``strategy`` as in `tiled.solve_local`: 'auto' routes a DataFrame
-    data side above ``broadcast_limit`` through the distributed tiled
-    join."""
+    data side above `planner.BROADCAST_LIMIT` rows through the distributed
+    tiled join."""
     data_coord_cols = data_coord_cols or ["x", "y"]
     query_coord_cols = query_coord_cols or ["cx", "cy"]
     if minneighbors < 1:
@@ -114,6 +113,5 @@ def solve_lwr(
         data, grid_df, var, kernel,
         f"{id_col} long, {var} double, {var}_variance double",
         data_coord_cols, query_coord_cols, maxneighbors, minneighbors,
-        metric, radius, id_col, strategy, tile_res, broadcast_limit,
-        tiled_first_replicate,
+        metric, radius, id_col, strategy, tile_res, tiled_first_replicate,
     )

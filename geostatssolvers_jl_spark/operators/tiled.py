@@ -13,7 +13,7 @@ stacks:
   broadcast `PointData`.  Valid while the conditioning data fits one
   executor.
 * **tiled** (`tiled_local_apply`), chosen above
-  ``planner.choose_strategy``'s broadcast limit:
+  `planner.BROADCAST_LIMIT` data rows:
 
   1. exact neighbor pairs via the fully-distributed escalating tiled join
      (`neighbors.knn_join_tiled_exact` — no driver collect of either
@@ -87,9 +87,8 @@ def tiled_local_apply(
         # SUPPORTED 3-D strategy: broadcast.  The reference's domains are
         # 1-D/2-D (CartesianGrid(100), (100,100) throughout its tests);
         # the N-D broadcast path covers 3-D data up to its documented
-        # bound of ~2M conditioning rows (planner.choose_strategy's
-        # broadcast_limit ≈ 2e6 × (3 coords + values) × 8 B ≈ 100 MB per
-        # executor, well under executor memory).  A z-slab tiled ladder
+        # bound of planner.BROADCAST_LIMIT conditioning rows (≈ 100 MB
+        # per executor, well under executor memory).  A z-slab tiled ladder
         # (slab over z with halo ≥ search radius, 2-D tiles within each
         # slab) is the designed extension if a >2M-row 3-D corpus ever
         # materializes; it is NOT implemented, and this guard makes that
@@ -256,7 +255,6 @@ def solve_local(
     id_col: str,
     strategy: str,
     tile_res: int | None,
-    broadcast_limit: int,
     first_replicate: str,
     empty_msg: str = "estimation requires data",
     value_cols: list[str] | None = None,
@@ -265,7 +263,7 @@ def solve_local(
     """Run one local estimator's ``kernel`` on its physical path.
 
     ``strategy``: 'auto' consults `planner.choose_strategy` — a DataFrame
-    data side above ``broadcast_limit`` rows routes through the tiled
+    data side above `planner.BROADCAST_LIMIT` rows routes through the tiled
     gather instead of a driver collect; 'local-broadcast' / 'local-tiled'
     force a path.  A `PointData` data side or ``maxneighbors=None`` (all
     data / ball-only search) always runs broadcast.
@@ -285,9 +283,7 @@ def solve_local(
 
             if strategy == "auto":
                 n_data = data.count()
-                strategy = choose_strategy(
-                    n_data, maxneighbors, broadcast_limit
-                )
+                strategy = choose_strategy(n_data, maxneighbors)
                 if tile_res is None:
                     tile_res = choose_tile_res(n_data)
             if strategy == "local-tiled":

@@ -74,14 +74,20 @@ def choose_tile_res(n_data: int, target_per_cell: int = 64) -> int:
     return min(tiling.MAX_RES, max(3, math.ceil(math.log2(nside))))
 
 
-def choose_strategy(n_data: int, maxneighbors: int | None,
-                    broadcast_limit: int = 2_000_000) -> str:
+# largest data side the local estimators collect and broadcast: ~2e6 ×
+# (3 coords + values) × 8 B ≈ 100 MB per executor; above it they take
+# the tiled gather
+BROADCAST_LIMIT = 2_000_000
+
+
+def choose_strategy(n_data: int, maxneighbors: int | None) -> str:
     """Physical strategy: the reference's exact-vs-approx switch
-    (krig.jl:151-157) plus the engine's broadcast-vs-tiled switch.
+    (krig.jl:151-157) plus the engine's broadcast-vs-tiled switch at
+    BROADCAST_LIMIT data rows.
     Returns 'global' | 'local-broadcast' | 'local-tiled'."""
     if maxneighbors is None:
         return "global"
-    if n_data <= broadcast_limit:
+    if n_data <= BROADCAST_LIMIT:
         return "local-broadcast"
     return "local-tiled"
 

@@ -11,9 +11,10 @@ engine and provided here:
   whole-stage codegen (`cell_expr`), in numpy inside pandas UDFs
   (`cell_np`), and verbatim in DuckDB for the correctness oracle.
 * **parent/child** — shift tx,ty by one level (`parent_expr`).
-* **k-ring** — the (2k+1)² neighbor cells of a cell, with lon wraparound;
-  used for cell-ring-expansion kNN candidate generation
-  (SURVEY.md §2.3 J1/J2).
+* **k-ring** — the unique cells of a cell's (2k+1)² disk as one Spark SQL
+  array (`ring_expr`, lon wraps, off-world lat rows dropped); exploded onto
+  one join side for cell-ring-expansion kNN candidate generation
+  (SURVEY.md §2.3 J1/J2) — no Python stage.
 * **cell size bound** — max diagonal of a cell at a latitude, which
   certifies exact-kNN termination of ring expansion.
 
@@ -94,6 +95,27 @@ def parent_expr(cell: str, res: int, parent_res: int) -> str:
     )
 
 
+def ring_expr(cell: str, res: int, k: int) -> str:
+    """Spark SQL array of the UNIQUE cells within Chebyshev distance k of
+    ``cell`` (the (2k+1)² 'disk' at resolution ``res``); lon wraps.
+
+    Lat rows outside [0, n) are DROPPED, never clamped — clamping would
+    emit the same top/bottom-row cell twice, and a duplicated ring cell
+    makes the tiled kNN join count one data row at two ranks, silently
+    dropping the true kth neighbor for polar-row queries.  For the same
+    reason lon-wrap collisions (2k+1 ≥ n) are removed by
+    ``array_distinct``."""
+    n = nside(res)
+    tx = tx_from_cell_expr(cell)
+    ty = ty_from_cell_expr(cell)
+    return (
+        f"array_distinct(flatten(transform("
+        f"sequence(greatest({ty} - {k}, 0), least({ty} + {k}, {n - 1})), "
+        f"_ry -> transform(sequence({tx} - {k}, {tx} + {k}), "
+        f"_rx -> {res * (1 << 58)} + _ry * {1 << 29} + pmod(_rx, {n})))))"
+    )
+
+
 # ---------------------------------------------------------------- numpy side
 
 
@@ -102,69 +124,3 @@ def cell_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     tx = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
     ty = np.clip(np.floor((lat + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
     return (res << 58) + (ty << 29) + tx
-
-
-def unpack_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    res = cell >> 58
-    ty = (cell >> 29) & ((1 << 29) - 1)
-    tx = cell & ((1 << 29) - 1)
-    return res, ty, tx
-
-
-def ring_np(cell: np.ndarray, k: int) -> np.ndarray:
-    """All cells within Chebyshev distance k of each input cell
-    (the (2k+1)^2 'disk'), vectorized; lon wraps, lat offsets falling
-    outside [0, n) are MASKED to -1 (never clamped — clamping would emit
-    the same top/bottom-row cell twice, and a duplicated halo cell makes
-    the tiled kNN join count one data row at two ranks, silently dropping
-    the true kth neighbor for polar-row queries).
-
-    Returns shape ``(len(cell), (2k+1)**2)``; invalid entries are -1.
-    """
-    res, ty, tx = unpack_np(np.asarray(cell, dtype=np.int64))
-    r = int(res[0]) if len(res) else 0
-    n = nside(r)
-    offs = np.arange(-k, k + 1)
-    dx, dy = np.meshgrid(offs, offs)
-    dx, dy = dx.ravel(), dy.ravel()
-    ntx = (tx[:, None] + dx[None, :]) % n
-    nty = ty[:, None] + dy[None, :]
-    valid = (nty >= 0) & (nty <= n - 1)
-    out = (r << 58) + (nty << 29) + ntx
-    return np.where(valid, out, -1)
-
-
-def cell_bounds_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(lon_min, lat_min, lon_max, lat_max) of each cell."""
-    res, ty, tx = unpack_np(np.asarray(cell, dtype=np.int64))
-    n = np.left_shift(1, res).astype(np.float64)
-    lon0 = tx / n * 360.0 - 180.0
-    lat0 = ty / n * 180.0 - 90.0
-    return lon0, lat0, lon0 + 360.0 / n, lat0 + 180.0 / n
-
-
-def ring_table(spark, cells_df, k: int = 1, cell_col: str = "cell"):
-    """DataFrame of UNIQUE (cell, neighbor) pairs for the k-disk of each
-    distinct cell — the candidate-cell side of the ring-expansion kNN join.
-    Runs as a vectorized mapInPandas (Arrow batches, no per-row Python).
-
-    Invalid lat offsets are dropped (not clamped) and lon-wrap collisions
-    (2k+1 ≥ n) are dedup'd, so a data row replicated through this table
-    lands in each candidate cell exactly once — required for the exactness
-    of the window top-k downstream (no rank-occupying duplicates)."""
-    ksz = (2 * k + 1) ** 2
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            c = pdf[cell_col].to_numpy(np.int64)
-            nb = ring_np(c, k)
-            out = pd.DataFrame(
-                {cell_col: np.repeat(c, ksz), "neighbor": nb.ravel()}
-            )
-            out = out[out["neighbor"] >= 0].drop_duplicates()
-            yield out
-
-    distinct = cells_df.select(cell_col).distinct()
-    return distinct.mapInPandas(gen, schema=f"{cell_col} long, neighbor long")

@@ -46,12 +46,6 @@ def feature_exprs(text: str = "text") -> dict[str, str]:
     }
 
 
-def featurize_sql(rel: str = "documents", text: str = "text") -> str:
-    cols = ", ".join(f"{e} AS {n}" for n, e in feature_exprs(text).items())
-    return (f"SELECT doc_id, {cols} FROM {rel} "
-            f"WHERE {text} IS NOT NULL AND length({text}) > 0")
-
-
 @dataclass
 class LogRegModel:
     """`weights`: dict feature → coefficient (standardized space if

@@ -113,11 +113,12 @@ def test_lwr_tiled_bit_identical(spark, geo):
 
 
 def test_auto_strategy_routes_big_data_tiled(spark, geo, monkeypatch):
-    """auto + a data side above broadcast_limit must route tiled (never
-    through collect_points)."""
+    """auto + a data side above planner.BROADCAST_LIMIT must route tiled
+    (never through collect_points)."""
     import geostatssolvers_jl_spark.neighbors as nb
     import geostatssolvers_jl_spark.operators.kriging as krig
     import geostatssolvers_jl_spark.operators.tiled as tiled
+    import geostatssolvers_jl_spark.planner as planner
 
     def boom(*a, **kw):  # pragma: no cover
         raise AssertionError("collect_points called for big data side")
@@ -125,20 +126,23 @@ def test_auto_strategy_routes_big_data_tiled(spark, geo, monkeypatch):
     monkeypatch.setattr(krig, "collect_points", boom)
     monkeypatch.setattr(nb, "collect_points", boom)
     monkeypatch.setattr(tiled, "collect_points", boom)
+    monkeypatch.setattr(planner, "BROADCAST_LIMIT", 100)
     d, q = geo
     out = solve_kriging(
         d, q, var="z",
         model=KrigingModel(variogram=GaussianVariogram(range=2000.0, sill=9.0)),
         data_coord_cols=["lon", "lat"], query_coord_cols=["lon", "lat"],
         maxneighbors=4, metric=Haversine(6371.0),
-        strategy="auto", broadcast_limit=100, tile_res=4,
+        strategy="auto", tile_res=4,
     )
     assert out.count() == 300
 
 
 def test_tiled_plan_is_equijoin(spark, geo):
     """The tiled plan must not contain cartesian products or broadcast
-    nested loops — candidates flow through equi-joins only."""
+    nested loops — candidates flow through equi-joins only — and its one
+    Python stage is the gather kernel: the ladder's ring replication is a
+    JVM-side explode on every pass."""
     d, q = geo
     out = solve_idw(
         d, q, var="z", data_coord_cols=["lon", "lat"],
@@ -148,6 +152,7 @@ def test_tiled_plan_is_equijoin(spark, geo):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert plan.count("MapInPandas") == 1
 
 
 def test_tiled_duplicate_data_ids_no_fanout(spark, geo):

@@ -367,3 +367,53 @@ def test_tiled_pole_edge_conventions(spark, convention, metric_name):
             did, dv = got[(qi, r + 1)]
             assert did == dd.ids[idx[qi, r]], (qi, r, convention, metric_name)
             assert dv == pytest.approx(dist[qi, r], abs=1e-6)
+
+
+def test_ring_expr_is_unique_chebyshev_disk(spark):
+    """`tiling.ring_expr` holds exactly the cells within Chebyshev
+    distance k, each once: lat rows off the world are dropped (polar rows
+    ty = 0 and ty = n-1), lon wraps (tx = 0 and tx = n-1), and wrap
+    collisions (2k+1 >= n) are removed."""
+    from geostatssolvers_jl_spark import tiling
+
+    ks = (1, 2, 4, 16)
+    for res in (1, 2, 3, 6):
+        n = 1 << res
+        edge = sorted({0, n // 2, n - 1})
+        rel = spark.createDataFrame(
+            [(ty, tx, (res << 58) + (ty << 29) + tx)
+             for ty in edge for tx in edge],
+            "ty long, tx long, cell long",
+        )
+        rows = rel.selectExpr(
+            "ty", "tx", *(f"{tiling.ring_expr('cell', res, k)} AS r{k}"
+                          for k in ks),
+        ).collect()
+        assert len(rows) == len(edge) ** 2
+        for row in rows:
+            ty, tx = row["ty"], row["tx"]
+            for k in ks:
+                want = {
+                    (res << 58) + (y << 29) + (x % n)
+                    for y in range(ty - k, ty + k + 1) if 0 <= y < n
+                    for x in range(tx - k, tx + k + 1)
+                }
+                got = row[f"r{k}"]
+                assert len(got) == len(set(got)), (res, k, ty, tx)
+                assert set(got) == want, (res, k, ty, tx)
+
+
+@pytest.mark.parametrize("replicate", ["data", "queries"])
+def test_tiled_pass_plans_no_python(spark, points, replicate):
+    """One ladder pass replicates its side by a JVM-side explode: no
+    Python stage, and the candidate join is the pass's only join."""
+    import re
+
+    d, q = points
+    out = knn_join_tiled(q, d, k=3, res=5, metric=Haversine(6371.0),
+                         ring=4, replicate=replicate)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan
+    joins = re.findall(r"\w*(?:Join|CartesianProduct)\b", plan)
+    assert joins == ["SortMergeJoin"], joins

@@ -90,6 +90,31 @@ def test_loo_better_on_smooth_field(spark):
     assert mae_broken > 3.0 * mae_smooth, (mae_smooth, mae_broken)
 
 
+def test_loo_idw_cv_tiled_tier_equals_brute(spark, monkeypatch):
+    """`loo_idw_cv`'s tiled kNN ladder tier returns the brute tier's rows
+    (sf0.01 sits below LOO_BRUTE_LIMIT, so the gate runs only brute)."""
+    import __spark_entry__ as entry
+    import geostatssolvers_jl_spark.neighbors as nb
+    from geostatssolvers_jl_spark import planner
+    from test_classifier import SF
+
+    run = entry.queries()["loo_idw_cv"]
+    brute = sorted(map(tuple, run(spark, SF).collect()))
+    ladder = nb.knn_join_tiled_exact
+    calls = []
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return ladder(*a, **kw)
+
+    monkeypatch.setattr(nb, "knn_join_tiled_exact", counted)
+    monkeypatch.setattr(planner, "LOO_BRUTE_LIMIT", 0)
+    tiled = sorted(map(tuple, run(spark, SF).collect()))
+    assert calls == [1]
+    assert len(brute) == 500
+    assert tiled == brute
+
+
 def test_kfold_cv_idw(spark):
     """k-fold with the real IDW solver: folds cover every point exactly
     once; errors are finite; a deterministic re-run is identical."""
