@@ -47,8 +47,7 @@ LWR4_PTS = FIX3_PTS + [(3, 75.0, 25.0, 0.0)]
 KRIG5_PTS = FIX3_PTS + [(3, 75.0, 25.0, 0.5), (4, 10.0, 80.0, 0.3)]
 TILE_RES = 6
 # the local estimators' tiled big-big path (`operators/tiled.py`)
-TILED = {"strategy": "local-tiled", "tile_res": 4,
-         "tiled_first_replicate": "data"}
+TILED = {"strategy": "local-tiled", "tile_res": 4}
 DOCS, EMB, EVENTS = ("documents",), ("embeddings",), ("events",)
 
 HAV = Haversine(6371.0).sql(("q.cx", "q.cy"), ("d.lon", "d.lat"))
@@ -299,11 +298,12 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_tiled(name: str, salt: int = 0) -> QuerySpec:
-    """J1 via the BIG-BIG physical path: cell-ring-expansion tiled join
-    with certification + escalation (`neighbors.knn_join_tiled_exact`),
-    optionally with the explicit two-stage skew salt (the north rule's
-    'skewed hot tiles are salted and re-sharded explicitly') — either way
-    the rows must equal the oracle's brute-force window."""
+    """J1 via the BIG-BIG physical path: the one-pass tiled join, each
+    query's cells bounded by a cell-count pyramid
+    (`neighbors.knn_join_tiled_exact`), optionally with the explicit
+    two-stage skew salt (the north rule's 'skewed hot tiles are salted
+    and re-sharded explicitly') — either way the rows must equal the
+    oracle's brute-force window."""
     k = 3
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -722,9 +722,9 @@ def q_loo_idw_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-point (z, zhat, err) rows.
 
     Small inputs run `validation.loo_idw_sql`'s brute-force O(n²) pair
-    relation (`planner.loo_tier`); larger ones the EXACT tiled kNN
-    ladder (`neighbors.knn_join_tiled_exact`, the same machinery the
-    green `knn_join_tiled` gate entry certifies) run at k+1 with the
+    relation (`planner.loo_tier`); larger ones the EXACT one-pass tiled
+    kNN join (`neighbors.knn_join_tiled_exact`, the same plan the green
+    `knn_join_tiled` gate entry checks) run at k+1 with the
     self pair dropped afterwards: removing one element of a totally
     ordered candidate list's top-(k+1) always leaves the top-k of the
     others, whether or not the self pair made the list.  Distance text,
@@ -746,7 +746,7 @@ def q_loo_idw_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         pts.selectExpr("data_id AS target_id", "lon", "lat"),
         pts.select("data_id", "lon", "lat"),
         k=LOO_IDW_K + 1, res=res, query_id="target_id",
-        metric=Haversine(6371.0), first_replicate="data",
+        metric=Haversine(6371.0),
     )
     w = Window.partitionBy("target_id").orderBy(
         F.col("dist").asc(), F.col("data_id").asc())

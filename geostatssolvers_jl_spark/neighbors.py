@@ -23,16 +23,14 @@ analogous to Spark's own broadcast-vs-shuffle join choice:
 
 * **tiled gather** (`knn_join_tiled_exact`, consumed by
   `operators.tiled.tiled_local_apply`): big-big case (10¹²-page story).
-  Both sides get H3-style cell ids; one side is replicated into the
-  ring-1 halo of its cell by exploding a JVM-side ring array
-  (`tiling.ring_expr`, no Python stage); an equi-join on cell id
-  (ordinary shuffle join Catalyst/AQE can optimize, incl. skew
-  splitting) produces candidates; a window top-k per query with a
-  *certification radius* keeps only provably-exact neighbors;
-  unresolved queries (kth neighbor not certified) escalate to a wider
-  ring and finally to a bounded terminal pass.  The pairs are joined
-  back to their attributes and collected into per-query arrays that
-  fill the same stacks.
+  One lazy plan: a cell-count pyramid over the data bounds each query's
+  kth-neighbor distance; each query is exploded over the cells of the
+  rectangle that can hold a point within that bound (a JVM-side array,
+  `tiling.ring_expr`, no Python stage); an equi-join on cell id (an
+  ordinary shuffle join Catalyst/AQE can optimize, incl. skew
+  splitting) produces candidates, and a window top-k per query keeps
+  the exact neighbors.  The pairs are joined back to their attributes
+  and collected into per-query arrays that fill the same stacks.
 
 Top-k is deterministic: ties broken by data row id ascending — the same
 (dist, data_id) order on both strategies, so the kernel sees the same
@@ -53,20 +51,19 @@ from pyspark.sql import functions as F
 from .distances import Distance, Haversine
 from . import tiling
 
-# join-strategy hint for the tiled candidate joins.  The hint's
-# purpose is to forbid AQE from broadcasting a halo'd 10¹²-row side:
-# Spark cannot estimate an explode's output rows, so its size estimate
-# of the ring side is blind to the (2·ring+1)² fan-out; "merge"
-# (sort-merge) is the measured choice.  A "shuffle_hash" variant —
-# which also forbids the broadcast and skips sort-merge's sorts, and
-# which DID win 25% for the variography ring join
-# (variography._pair_sql) — was interleaved-A/B'd here at the sf1.0
-# shape (round 7) and REJECTED: wash on knn_join_tiled
-# (2.51 vs 2.44 s min-of-3) and idw_pages_tiled (3.35 vs 3.38),
-# consistently WORSE on the multi-pass loo_idw_cv ladder (7.8–10.1 vs
-# 5.7–6.3 s, every rep) — the escalation/terminal passes lose more to
-# per-partition hash builds than they save in sorts.  Kept as a
-# constant so the experiment is one flip to reproduce.
+# join-strategy hint for the tiled candidate join.  The hint's purpose
+# is to forbid AQE from broadcasting the exploded query side: Spark
+# cannot estimate an explode's output rows, so its size estimate of that
+# side is blind to the per-query cell fan-out; "merge" (sort-merge) is
+# the measured choice.  A "shuffle_hash" variant — which also forbids
+# the broadcast and skips sort-merge's sorts, and which DID win 25% for
+# the variography ring join (variography._pair_sql) — was
+# interleaved-A/B'd here at the sf1.0 shape (round 7, against the
+# multi-pass ring ladder this join replaced) and REJECTED: wash on
+# knn_join_tiled (2.51 vs 2.44 s min-of-3) and idw_pages_tiled (3.35 vs
+# 3.38), consistently WORSE on loo_idw_cv (7.8–10.1 vs 5.7–6.3 s, every
+# rep) — per-partition hash builds lost more than the sorts they saved.
+# Kept as a constant so the experiment is one flip to reproduce.
 _CAND_JOIN_HINT = "merge"
 
 
@@ -385,101 +382,20 @@ def knn_pairs(
 # ------------------------------------------------------------- tiled path
 
 
-def _block_guard_sql(res: int, ring: int, metric: Distance) -> str:
-    """SQL lower bound on the distance from a query point (``_qlon``,
-    ``_qlat``, cell ``_qcell``) to ANY point outside its (2·ring+1)² cell
-    block — the certification radius of the tiled kNN join.
-
-    Sphere (Haversine): exact wrap/pole-safe bounds on the lon/lat cell
-    block:
-
-    * lat edges — meridian arc ``R·radians(Δφ)``; DROPPED when the block
-      edge sits on the world boundary (±90): no data exists beyond it and
-      any wrapped path to other data crosses a meridian edge first.
-    * lon edges — distance to the FULL meridian great circle
-      ``R·asin(|cos φ_q · sin Δλ|)``: periodic in Δλ (wrap-safe) and the
-      poles lie on every meridian (over-pole-safe).  The two-edge union
-      covers the block's lon complement only while the block spans
-      < 180°; a block spanning the full circle drops the lon edges, and
-      the awkward middle (≥ 180° but not full) certifies nothing (0).
-
-    Planar (Euclidean/Anisotropic): plain coordinate margins; edges on the
-    world boundary are dropped because out-of-range coords CLAMP into the
-    boundary cells (tiling._tx_expr/_ty_expr), i.e. such points are inside
-    the block's candidate set already.
-    """
-    n = tiling.nside(res)
-    ch = 180.0 / n
-    cw = 360.0 / n
-    ty = tiling.ty_from_cell_expr("_qcell")
-    tx = tiling.tx_from_cell_expr("_qcell")
-    bot = f"(({ty} - {ring}) * {ch!r} - 90.0)"
-    top = f"(({ty} + {ring} + 1) * {ch!r} - 90.0)"
-    west = f"(({tx} - {ring}) * {cw!r} - 180.0)"
-    east = f"(({tx} + {ring} + 1) * {cw!r} - 180.0)"
-    big = "CAST(1e308 AS DOUBLE)"
-    hav = isinstance(metric, Haversine)
-    # Anisotropic scales each axis by 1/radii — a raw-coordinate margin m
-    # on axis a bounds the metric distance only as m / radii[a] (with
-    # radii > 1 the raw margin would OVER-estimate and falsely certify)
-    from .distances import Anisotropic
-
-    ax = (1.0, 1.0)
-    if isinstance(metric, Anisotropic):
-        ax = (float(metric.radii[0]), float(metric.radii[1]))
-    terms: list[str] = []
-    if hav:
-        r_ = metric.radius
-        lat_bot = f"({r_!r} * radians(_qlat - {bot}))"
-        lat_top = f"({r_!r} * radians({top} - _qlat))"
-    else:
-        lat_bot = f"((_qlat - {bot}) / {ax[1]!r})"
-        lat_top = f"(({top} - _qlat) / {ax[1]!r})"
-    terms.append(f"CASE WHEN {ty} >= {ring + 1} THEN {lat_bot} ELSE {big} END")
-    terms.append(
-        f"CASE WHEN {ty} <= {n - ring - 2} THEN {lat_top} ELSE {big} END"
-    )
-    span = 2 * ring + 1  # block width in cells
-    if span >= n:
-        pass  # full circle in lon: no lon edge exists
-    elif hav:
-        if span * cw < 180.0:
-            for edge in (west, east):
-                terms.append(
-                    f"({r_!r} * asin(abs(cos(radians(_qlat)) * "
-                    f"sin(radians(_qlon - {edge})))))"
-                )
-        else:
-            # hemisphere-union argument needs span < 180°: certify nothing
-            terms.append("CAST(0.0 AS DOUBLE)")
-    else:
-        terms.append(
-            f"CASE WHEN {tx} >= {ring + 1} THEN ((_qlon - {west}) / {ax[0]!r}) "
-            f"ELSE {big} END"
-        )
-        terms.append(
-            f"CASE WHEN {tx} <= {n - ring - 2} THEN (({east} - _qlon) / {ax[0]!r}) "
-            f"ELSE {big} END"
-        )
-    if len(terms) == 1:
-        return terms[0]
-    return "least(" + ", ".join(terms) + ")"
-
-
 def _wrap_lon(df: DataFrame, lon: str, metric: "Distance") -> DataFrame:
     """Spherical-metric longitude normalization into [-180, 180).
 
     0–360-convention (or otherwise out-of-range) longitudes would be
-    CLAMPED into an edge cell by the tile encode, and the certification
+    CLAMPED into an edge cell by the tile encode, and the exactness
     proof assumes a point's assigned cell contains its true position —
-    a query near the antimeridian could then certify while missing its
+    a query near the antimeridian could then prune the cell of its
     genuine nearest neighbor (haversine distances are periodic, the cell
     grid is not).  Row-CONDITIONAL rewrite: in-range rows keep their
     EXACT original bits ((lon+180)-180 is not an identity in floating
     point — absorption near 0), so existing in-range corpora are
     bit-unchanged; only out-of-range rows wrap.  Planar metrics skip the
     wrap entirely — UTM-magnitude coordinates are legitimate there and
-    certification handles them via the world-boundary edge rules."""
+    the cell bounds handle them via the world-boundary edge rules."""
     if not isinstance(metric, Haversine):
         return df
     w = (f"(((({lon}) + 180.0) - floor((({lon}) + 180.0) / 360.0) "
@@ -493,118 +409,12 @@ def _wrap_lon(df: DataFrame, lon: str, metric: "Distance") -> DataFrame:
     )
 
 
-def knn_join_tiled(
-    queries: DataFrame,
-    data: DataFrame,
-    k: int,
-    res: int,
-    query_id: str = "cell_id",
-    data_id: str = "data_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    metric: Distance | None = None,
-    ring: int = 1,
-    replicate: str = "data",
-    salt: int = 0,
-) -> DataFrame:
-    """Big-big exact-certified kNN join via cell-ring expansion.
-
-    1. encode both sides at resolution ``res`` (JVM-side arithmetic);
-    2. replicate ONE side into the ring-``ring`` halo by exploding
-       ``tiling.ring_expr`` (unique cells — off-world lat rows dropped,
-       lon wraps deduplicated, so no data row can occupy two ranks of one
-       query):
-       ``replicate='data'`` (default, the bulk first pass — ×(2r+1)²
-       bounded fanout of the data side) or ``replicate='queries'``
-       (escalation passes over a small pending side — replicating the
-       small side keeps wide rings cheap);
-    3. equi-join on cell id → candidates; AQE skew-join splits hot cells;
-       ``salt > 1`` additionally pre-reduces per-query candidates through
-       a two-stage top-k — stage 1 partitions by (query, data_id % salt)
-       and keeps k per salt, bounding the final per-query window input to
-       salt·k rows (explicit hot-cell handling per the north rule, on top
-       of AQE);
-    4. window top-k per query with deterministic (dist, data_id) order;
-    5. certification: kth distance ≤ exact lower bound on the distance to
-       anything outside the covered block (``_block_guard_sql`` — wrap-
-       and pole-safe), else the query escalates.
-
-    Returns (query_id, data_id, dist, rank, certified).
-    """
-    from pyspark.sql import Window
-
-    metric = metric or Haversine()
-    queries = _wrap_lon(queries, lon, metric)
-    data = _wrap_lon(data, lon, metric)
-    cexpr = tiling.cell_expr(lon, lat, res)
-
-    q = queries.withColumn("_qcell", F.expr(cexpr)).select(
-        F.col(query_id), F.col("_qcell"),
-        F.col(lon).alias("_qlon"), F.col(lat).alias("_qlat"),
-    )
-    d = data.withColumn("_dcell", F.expr(cexpr)).select(
-        F.col(data_id), F.col("_dcell"),
-        F.col(lon).alias("_dlon"), F.col(lat).alias("_dlat"),
-    )
-
-    if replicate == "data":
-        d_rep = d.select(
-            F.explode(F.expr(tiling.ring_expr("_dcell", res, ring)))
-            .alias("_jcell"),
-            data_id, "_dlon", "_dlat",
-        )
-        cand = q.hint(_CAND_JOIN_HINT).join(
-            d_rep, F.col("_qcell") == F.col("_jcell"), "inner"
-        )
-    elif replicate == "queries":
-        q_rep = q.select(
-            query_id, "_qcell", "_qlon", "_qlat",
-            F.explode(F.expr(tiling.ring_expr("_qcell", res, ring)))
-            .alias("_jcell"),
-        )
-        cand = q_rep.hint(_CAND_JOIN_HINT).join(
-            d, F.col("_jcell") == F.col("_dcell"), "inner"
-        )
-    else:  # pragma: no cover - guarded by callers
-        raise ValueError(f"replicate must be 'data' or 'queries': {replicate}")
-
-    dist_sql = metric.sql(("_qlon", "_qlat"), ("_dlon", "_dlat"))
-    cand = cand.withColumn("dist", F.expr(dist_sql))
-
-    if salt > 1:
-        w1 = Window.partitionBy(query_id, "_salt").orderBy(
-            F.col("dist").asc(), F.col(data_id).asc()
-        )
-        cand = (
-            cand.withColumn("_salt", F.pmod(F.col(data_id), F.lit(salt)))
-            .withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= k)
-            .drop("_salt", "_r1")
-        )
-
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("dist").asc(), F.col(data_id).asc()
-    )
-    topk = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-    guard = _block_guard_sql(res, ring, metric)
-    # (1 − 1e-12) slack: the guard formulas round at ~1 ulp; certification
-    # must never exceed the true bound (same slack as bucket_index.topk)
-    topk = topk.withColumn(
-        "certified", F.expr(f"dist <= ({guard}) * (1.0 - 1e-12)")
-    )
-    return topk.select(query_id, data_id, "dist", "rank", "certified")
-
-
 def _cell_mindist_sql(res: int, metric: Distance,
                       cell: str = "_ccell") -> str:
     """SQL lower bound on the distance from a query (_qlon, _qlat) to ANY
     point inside cell ``cell`` at resolution ``res`` — conservative (may
-    under-estimate, never over-estimates), used to prune whole cells in
-    the bounded terminal pass."""
+    under-estimate, never over-estimates), used to prune the candidate
+    cells of `knn_join_tiled_exact`."""
     n = tiling.nside(res)
     ch = 180.0 / n
     cw = 360.0 / n
@@ -642,8 +452,7 @@ def _cell_mindist_sql(res: int, metric: Distance,
     # tiling._tx_expr/_ty_expr CLAMP such points into the boundary cells,
     # so a boundary cell effectively contains points beyond its raw
     # rectangle — drop (zero) the margin on any cell side that lies on the
-    # world boundary, mirroring _block_guard_sql's edge-drop rule, to keep
-    # the bound conservative for clamped points
+    # world boundary to keep the bound conservative for clamped points
     lat_margin_p = (
         f"CASE WHEN _qlat < {l0} AND {ty} > 0 THEN ({l0} - _qlat) "
         f"WHEN _qlat > {l1} AND {ty} < {n - 1} THEN (_qlat - {l1}) "
@@ -659,68 +468,75 @@ def _cell_mindist_sql(res: int, metric: Distance,
     )
 
 
-def _bounded_terminal(
-    pending: DataFrame,
-    bounds: DataFrame,
-    data: DataFrame,
-    k: int,
-    query_id: str,
-    data_id: str,
-    lon: str,
-    lat: str,
-    metric: Distance,
-    res: int = 4,
-) -> DataFrame:
-    """EXACT terminal pass with cell-level pruning: each pending query
-    carries an upper bound on its true kth distance (the kth candidate
-    it has ALREADY seen in earlier ring passes — a real point, so a valid
-    bound); coarse cells whose minimum possible distance exceeds the
-    bound cannot contain a top-k member and are pruned BEFORE pairing.
-    Queries with no bound (< k candidates anywhere) keep bound = ∞ and
-    degrade to the full pairing — exact either way."""
-    from pyspark.sql import Window
-
-    pending = _wrap_lon(pending, lon, metric)
-    data = _wrap_lon(data, lon, metric)
-    n = tiling.nside(res)
-    q = pending.join(
-        bounds, query_id, "left"
-    ).selectExpr(
-        query_id, f"{lon} AS _qlon", f"{lat} AS _qlat",
-        "coalesce(_bound, CAST(1e308 AS DOUBLE)) AS _b",
-    )
-    # static ×n² coarse-cell fanout as a pure PROJECTION (explode of a
-    # sequence literal — no cross join in the plan), then the per-cell
-    # minimum-distance prune
-    mind = _cell_mindist_sql(res, metric)
-    probes = q.selectExpr(
-        "*", f"explode(sequence(0, {n * n - 1})) AS _ci"
-    ).selectExpr(
-        "*",
-        f"CAST({res} AS BIGINT) * {1 << 58} "
-        f"+ CAST(floor(_ci / {n}) AS BIGINT) * {1 << 29} + (_ci % {n}) "
-        f"AS _ccell",
-    ).where(F.expr(f"({mind}) * (1.0 - 1e-12) <= _b"))
-    d = data.selectExpr(
-        data_id,
-        f"{tiling.cell_expr(lon, lat, res)} AS _dcell",
-        f"{lon} AS _dlon", f"{lat} AS _dlat",
-    )
-    # merge hint: the probe side is explode-derived (no stats) — never
-    # let AQE broadcast the data side here
-    cand = probes.hint(_CAND_JOIN_HINT).join(
-        d, F.col("_ccell") == F.col("_dcell"), "inner"
-    )
-    dist_sql = metric.sql(("_qlon", "_qlat"), ("_dlon", "_dlat"))
-    cand = cand.withColumn("dist", F.expr(dist_sql))
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("dist").asc(), F.col(data_id).asc()
-    )
+def _pyramid_cells(lon: str, lat: str, top: int) -> str:
+    """Spark SQL array of a point's cell ids at every level 0..``top``
+    (the level-``top`` encode shifted right; same packed layout as
+    `tiling.cell_expr`, so the level rides in the id)."""
+    tx, ty = tiling._tx_expr(lon, top), tiling._ty_expr(lat, top)
     return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, data_id, "dist", "rank")
+        f"transform(sequence(0, {top}), _l -> CAST(_l AS BIGINT) * "
+        f"{1 << 58} + shiftright({ty}, {top} - _l) * {1 << 29} "
+        f"+ shiftright({tx}, {top} - _l))"
     )
+
+
+def _bbox_farthest_sql(metric: Distance) -> str:
+    """SQL upper bound on the distance from a query (_qlon, _qlat) to any
+    point of the box lon ∈ [_x0, _x1], lat ∈ [_y0, _y1].
+
+    Planar: `metric.sql` to each corner, the greatest — rounding is
+    monotone in |Δx| and |Δy|, so no point of the box computes farther.
+    Sphere: the length of a meridian-then-parallel path,
+    ``R·radians(max Δφ + min(180, max |Δλ|)·max cos φ over [y0, y1])``;
+    it is at least the great-circle distance, and the caller's (1 + 1e-9)
+    inflation covers the formula's rounding.  No cap at πR is needed:
+    `_widths_sql` caps at the world.  A NULL box (no pyramid cell)
+    gives NULL."""
+    if not isinstance(metric, Haversine):
+        return "greatest(" + ", ".join(
+            metric.sql(("_qlon", "_qlat"), (x, y))
+            for x in ("_x0", "_x1") for y in ("_y0", "_y1")) + ")"
+    r_ = metric.radius
+    cmax = ("CASE WHEN _y0 <= 0.0 AND _y1 >= 0.0 THEN 1.0 "
+            "ELSE cos(radians(least(abs(_y0), abs(_y1)))) END")
+    return (
+        f"({r_!r} * radians(greatest(abs(_qlat - _y0), abs(_qlat - _y1))"
+        f" + least(180.0, greatest(abs(_qlon - _x0), abs(_qlon - _x1)))"
+        f" * {cmax}))"
+    )
+
+
+def _widths_sql(res: int, metric: Distance) -> tuple[str, str]:
+    """SQL (lat rows, lon columns) half-widths of the cell rectangle
+    around the query's cell at ``res`` that holds every point within
+    ``_u`` of the query (_qlon, _qlat).
+
+    Sphere, ρ = _u/R: rows ``⌊deg ρ / cell height⌋ + 1``; columns the
+    full circle once the ρ-cap reaches a pole, else
+    ``⌊asin(sin ρ / cos φ_q) / cell width⌋ + 1`` (the cap's widest
+    longitude offset).  Planar: ``⌊_u·rᵢ / cell size⌋ + 1`` (|Δxᵢ| ≤
+    rᵢ·dist).  The +1 covers the query's offset inside its own cell;
+    widths are capped at the world, so _u = ∞ takes every cell."""
+    n = tiling.nside(res)
+    ch, cw = 180.0 / n, 360.0 / n
+    if isinstance(metric, Haversine):
+        deg = f"degrees(_u / {metric.radius!r})"
+        rows = f"floor(least({float(n)!r}, {deg} / {ch!r})) + 1"
+        lon = (f"degrees(asin(least(1.0, sin(_u / {metric.radius!r}) "
+               f"/ cos(radians(_qlat)))))")
+        cols = (f"CASE WHEN abs(_qlat) + {deg} >= 90.0 THEN {n // 2} "
+                f"ELSE least({n // 2}, floor(least({float(n)!r}, "
+                f"{lon} / {cw!r})) + 1) END")
+        return rows, cols
+    from .distances import Anisotropic
+
+    ax = (1.0, 1.0)
+    if isinstance(metric, Anisotropic):
+        ax = (float(metric.radii[0]), float(metric.radii[1]))
+    rows = f"floor(least({float(n)!r}, _u * {ax[1]!r} / {ch!r})) + 1"
+    cols = (f"least({n // 2}, floor(least({float(n)!r}, "
+            f"_u * {ax[0]!r} / {cw!r})) + 1)")
+    return rows, cols
 
 
 def knn_join_tiled_exact(
@@ -734,112 +550,96 @@ def knn_join_tiled_exact(
     lat: str = "lat",
     metric: Distance | None = None,
     salt: int = 0,
-    first_replicate: str = "data",
 ) -> DataFrame:
-    """EXACT big-big kNN join, fully distributed (NO driver-side collect of
-    either side at any stage):
+    """EXACT big-big kNN join as one lazy plan: no driver collect of
+    either side, no cache and no action.
 
-    ``first_replicate``: which side the bulk ring-1 pass replicates ×9 —
-    pick the side with FEWER ROWS ('data' when conditioning points are
-    sparser than query cells, 'queries' when an estimation grid is smaller
-    than a 10¹²-page data side); candidate sets and results are identical
-    either way.  Escalation passes always replicate the pending-query
-    side (it shrinks toward zero).
+    1. **bound** — a cell-count pyramid over the data (levels 0..top,
+       top = min(res + 4, MAX_RES): rows and data bbox per occupied
+       cell, one ``groupBy``) is joined to each query's OWN cell at every
+       level.  U_q is the least, over levels whose cell holds ≥ k rows,
+       of the farthest distance from the query to that cell's bbox
+       (`_bbox_farthest_sql`), inflated by 1e-9; no such level (fewer
+       than k data rows) gives U_q = ∞.
+    2. **candidates** — the query is exploded over the cells of the
+       rectangle around its cell at ``res`` that can hold a point within
+       U_q (`_widths_sql`, `tiling.ring_expr`), cells whose minimum
+       distance exceeds U_q are dropped (`_cell_mindist_sql`), and one
+       equi-join on cell id pairs the rest with the data;
+    3. **top-k** — ``salt > 1`` pre-reduces per-query candidates through
+       a two-stage top-k (stage 1 keeps k per (query, data_id % salt):
+       explicit hot-cell handling on top of AQE's skew split), then one
+       window ranks by (dist, data_id).
 
-    * pass 1 — ring-1 tiled join at ``res`` with the data side replicated
-      into its halo: resolves the dense bulk;
-    * escalation passes — uncertified queries re-run with geometrically
-      wider rings (4, 16, …, while the block stays < a half-circle), now
-      replicating the PENDING QUERY side into its ring cells, so a wide
-      ring multiplies the small side, never the 10¹²-row data side;
-    * terminal pass — BOUNDED: each remaining query's kth-so-far candidate
-      distance (an actual data point, hence a valid upper bound on its
-      true kth distance) prunes every coarse cell whose minimum possible
-      distance exceeds it before any pairing; only queries with < k
-      candidates anywhere degrade to the full pairing.  Ordinary
-      distributed joins throughout — never a broadcast or driver collect
-      of the data side.
+    Exact by construction: k rows lie within U_q, so the kth distance is
+    ≤ U_q, and every row within U_q sits in a kept cell.
 
-    Returns (query_id, data_id, dist, rank) — provably identical rows to
-    a brute-force kNN (the north rule's 'identical join output rows').
+    Negative result (4-core box): a first cut with levels 0..res only, a
+    ring-1 block per level and no cos φ factor in the sphere bound took
+    19–22 s for the tiled LOO at sf0.1, because at res 3 its U spans 45°
+    cells; this form takes 4.3–4.8 s there (the escalation ladder it
+    replaced: 7.3–9.6 s).
+
+    Returns (query_id, data_id, dist, rank) — identical rows to a
+    brute-force kNN (the north rule's 'identical join output rows').
     """
+    from pyspark.sql import Window
+
     metric = metric or Haversine()
-    sel = [query_id, data_id, "dist", "rank"]
-    n = tiling.nside(res)
-    rings = [1]
-    rk = 4
-    while (2 * rk + 1) * 2 < n:  # block span must stay < half the circle
-        rings.append(rk)
-        rk *= 4
-    # NOTE: no final half-circle ring — a ring r multiplies the pending
-    # side by (2r+1)² probe cells (16k at res 8), which is the memory hot
-    # spot; the BOUNDED terminal below resolves the same tail with a
-    # per-query distance bound instead of a blanket ring
-
-    parts: list[DataFrame] = []
-    caches: list[DataFrame] = []
-    pending = queries
-    last_out = None
-    for i, ring in enumerate(rings):
-        out = knn_join_tiled(
-            pending, data, k, res, query_id, data_id, lon, lat, metric,
-            ring=ring,
-            replicate=(first_replicate if i == 0 else "queries"),
-            salt=salt,
-        ).cache()
-        caches.append(out)
-        last_out = out
-        # a query is resolved iff it has ≥ k candidates and the kth is
-        # certified (rank k certified implies ranks < k certified — same
-        # candidate set and smaller dist)
-        resolved_ids = (
-            out.groupBy(query_id)
-            .agg(
-                F.sum(F.col("certified").cast("int")).alias("_nc"),
-                F.count(F.lit(1)).alias("_n"),
-            )
-            .filter((F.col("_nc") >= F.col("_n")) & (F.col("_n") >= k))
-            .select(query_id)
+    top = min(res + 4, tiling.MAX_RES)
+    q = _wrap_lon(queries, lon, metric).selectExpr(
+        query_id, f"{lon} AS _qlon", f"{lat} AS _qlat")
+    d = _wrap_lon(data, lon, metric).selectExpr(
+        data_id, f"{lon} AS _dlon", f"{lat} AS _dlat")
+    pyramid = (
+        d.selectExpr(f"explode({_pyramid_cells('_dlon', '_dlat', top)})"
+                     " AS _pcell", "_dlon", "_dlat")
+        .groupBy("_pcell")
+        .agg(F.count(F.lit(1)).alias("_n"),
+             F.min("_dlon").alias("_x0"), F.max("_dlon").alias("_x1"),
+             F.min("_dlat").alias("_y0"), F.max("_dlat").alias("_y1"))
+        .filter(F.col("_n") >= k)
+    )
+    bounded = (
+        q.selectExpr("*", f"explode({_pyramid_cells('_qlon', '_qlat', top)})"
+                          " AS _pcell")
+        .join(pyramid, "_pcell", "left")
+        .groupBy(query_id, "_qlon", "_qlat")
+        .agg(F.min(F.expr(_bbox_farthest_sql(metric))).alias("_u"))
+        .selectExpr(query_id, "_qlon", "_qlat",
+                    "coalesce(_u * (1.0 + 1e-9), CAST('Infinity' AS DOUBLE))"
+                    " AS _u")
+    )
+    wy, wx = _widths_sql(res, metric)
+    probes = (
+        bounded.selectExpr(
+            "*", f"{tiling.cell_expr('_qlon', '_qlat', res)} AS _qcell",
+            f"{wy} AS _wy", f"{wx} AS _wx")
+        .selectExpr(query_id, "_qlon", "_qlat", "_u", "explode("
+                    f"{tiling.ring_expr('_qcell', res, '_wy', '_wx')})"
+                    " AS _jcell")
+        .where(f"({_cell_mindist_sql(res, metric, '_jcell')})"
+               " * (1.0 - 1e-12) <= _u")
+    )
+    dcell = d.selectExpr(
+        data_id, f"{tiling.cell_expr('_dlon', '_dlat', res)} AS _dcell",
+        "_dlon", "_dlat")
+    cand = probes.hint(_CAND_JOIN_HINT).join(
+        dcell, F.col("_jcell") == F.col("_dcell"), "inner"
+    ).withColumn(
+        "dist", F.expr(metric.sql(("_qlon", "_qlat"), ("_dlon", "_dlat"))))
+    if salt > 1:
+        w1 = Window.partitionBy(query_id, "_salt").orderBy(
+            F.col("dist").asc(), F.col(data_id).asc())
+        cand = (
+            cand.withColumn("_salt", F.pmod(F.col(data_id), F.lit(salt)))
+            .withColumn("_r1", F.row_number().over(w1))
+            .filter(F.col("_r1") <= k)
         )
-        parts.append(out.join(resolved_ids, query_id, "semi").select(*sel))
-        # cache: each query-replicated pass consumes pending TWICE (ring
-        # cells + probe rows) and the anti-join chain would otherwise
-        # re-execute per consumer; the pending set shrinks toward zero
-        pending = pending.join(resolved_ids, query_id, "anti").cache()
-        caches.append(pending)
-        # eager short-circuit: one cheap limit-1 action per pass prunes
-        # every later (and increasingly wide) escalation stage once all
-        # queries certified — the common dense-data case pays pass 1 only
-        if pending.isEmpty():
-            pending = None
-            break
-
-    if pending is not None:
-        # terminal, bounded: pending queries already hold ≥k real
-        # candidates from the widest ring pass in the common case — their
-        # kth distance upper-bounds the true kth, so whole coarse cells
-        # beyond it are pruned before pairing (the unbounded all-data
-        # pairing only remains for queries with < k candidates anywhere)
-        bounds = (
-            last_out.groupBy(query_id)
-            .agg(F.max("dist").alias("_bound"), F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") >= k)
-            .select(query_id, "_bound")
-        )
-        term = _bounded_terminal(
-            pending, bounds, data, k, query_id, data_id, lon, lat, metric,
-        )
-        parts.append(term.select(*sel))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    # materialize the final pairs ONCE (callers materialize them anyway),
-    # then free every ladder intermediate — repeated tiled solves in one
-    # session previously accumulated pass caches until storage memory
-    # filled.  The returned result stays cached (bounded: ≤ nq × k rows);
-    # callers may .unpersist() it when finished.
-    out = out.cache()
-    out.count()
-    for c in caches:
-        c.unpersist()
-    return out
+    w = Window.partitionBy(query_id).orderBy(
+        F.col("dist").asc(), F.col(data_id).asc())
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id, data_id, "dist", "rank")
+    )

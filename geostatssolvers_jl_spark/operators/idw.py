@@ -123,7 +123,6 @@ def solve_idw_compositional(
     id_col: str = "cell_id",
     strategy: str = "auto",
     tile_res: int | None = None,
-    tiled_first_replicate: str = "auto",
 ) -> DataFrame:
     """IDW over composition-valued columns (reference:
     ``test/estimation/idw.jl:47-65``): spatial neighbor search + weighted
@@ -196,7 +195,7 @@ def solve_idw_compositional(
     return solve_local(
         data, grid_df, var, kernel, f"{id_col} long, {var} array<double>",
         data_coord_cols, query_coord_cols, maxneighbors, minneighbors,
-        metric, None, id_col, strategy, tile_res, tiled_first_replicate,
+        metric, None, id_col, strategy, tile_res,
         value_cols=ycols + ccols, expand=expand,
     )
 
@@ -215,7 +214,6 @@ def solve_idw(
     id_col: str = "cell_id",
     strategy: str = "auto",
     tile_res: int | None = None,
-    tiled_first_replicate: str = "auto",
 ) -> DataFrame:
     """IDW solve. ``grid_df`` must carry ``id_col`` and the query
     coordinate columns (e.g. cx, cy from `CartesianGrid.spark_df`).
@@ -256,5 +254,5 @@ def solve_idw(
         data, grid_df, var, kernel,
         f"{id_col} long, {var} double, {var}_distance double",
         data_coord_cols, query_coord_cols, maxneighbors, minneighbors,
-        metric, radius, id_col, strategy, tile_res, tiled_first_replicate,
+        metric, radius, id_col, strategy, tile_res,
     )

@@ -298,7 +298,6 @@ def solve_kriging(
     id_col: str = "cell_id",
     strategy: str = "auto",
     tile_res: int | None = None,
-    tiled_first_replicate: str = "auto",
 ) -> DataFrame:
     """Returns (id_col, var, var_variance) over the grid/query DataFrame.
 
@@ -332,7 +331,7 @@ def solve_kriging(
         return solve_local(
             data, grid_df, var, kernel, schema, data_coord_cols,
             query_coord_cols, maxneighbors, minneighbors, metric, radius,
-            id_col, strategy, tile_res, tiled_first_replicate,
+            id_col, strategy, tile_res,
             empty_msg=missing,
         )
 

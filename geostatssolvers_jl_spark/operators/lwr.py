@@ -32,31 +32,37 @@ def default_weightfun(h: np.ndarray) -> np.ndarray:
 
 
 def _wls_solve(
-    G: np.ndarray, b: np.ndarray, x0: np.ndarray
+    G: np.ndarray, b: np.ndarray, x0: np.ndarray, nvalid: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Solve the stacked normal systems; singular rows (k < p neighbors,
-    exactly collinear coords) fall back to pinv PER ROW — a batch-wide
-    pinv fallback would make every query's result depend on which OTHER
-    queries share its Arrow batch (batch composition varies with
-    partitioning and between the broadcast and tiled paths, breaking
-    their bit-identical contract; same per-row policy as
-    kriging.solve_systems)."""
-    try:
-        theta = np.linalg.solve(G, b[:, :, None])[:, :, 0]
-        Ginv_x0 = np.linalg.solve(G, x0[:, :, None])[:, :, 0]
-        return theta, Ginv_x0
-    except np.linalg.LinAlgError:
-        pass
+    """Solve the stacked normal systems.  Rows with fewer valid neighbors
+    than unknowns (k < p) always take the per-row pinv (minimum-norm)
+    solution: their G is singular in exact arithmetic, and whether
+    `solve` rejects it or returns a rounding-dominated answer turns on
+    ulp-level distance differences between the broadcast and tiled
+    paths.  Other singular rows (exactly collinear coords) fall back to
+    pinv PER ROW too — a batch-wide fallback would make every query's
+    result depend on which OTHER queries share its Arrow batch (same
+    per-row policy as kriging.solve_systems)."""
     theta = np.empty_like(b)
     Ginv_x0 = np.empty_like(x0)
-    for i in range(G.shape[0]):
-        try:
-            theta[i] = np.linalg.solve(G[i], b[i])
-            Ginv_x0[i] = np.linalg.solve(G[i], x0[i])
-        except np.linalg.LinAlgError:
-            Gi = np.linalg.pinv(G[i])
-            theta[i] = Gi @ b[i]
-            Ginv_x0[i] = Gi @ x0[i]
+    full = nvalid >= G.shape[1]
+    try:
+        theta[full] = np.linalg.solve(G[full], b[full, :, None])[:, :, 0]
+        Ginv_x0[full] = np.linalg.solve(G[full], x0[full, :, None])[:, :, 0]
+        rows = np.nonzero(~full)[0]
+    except np.linalg.LinAlgError:
+        rows = np.arange(G.shape[0])
+    for i in rows:
+        if full[i]:
+            try:
+                theta[i] = np.linalg.solve(G[i], b[i])
+                Ginv_x0[i] = np.linalg.solve(G[i], x0[i])
+                continue
+            except np.linalg.LinAlgError:
+                pass
+        Gi = np.linalg.pinv(G[i])
+        theta[i] = Gi @ b[i]
+        Ginv_x0[i] = Gi @ x0[i]
     return theta, Ginv_x0
 
 
@@ -74,7 +80,6 @@ def solve_lwr(
     id_col: str = "cell_id",
     strategy: str = "auto",
     tile_res: int | None = None,
-    tiled_first_replicate: str = "auto",
 ) -> DataFrame:
     """``strategy`` as in `tiled.solve_local`: 'auto' routes a DataFrame
     data side above `planner.BROADCAST_LIMIT` rows through the distributed
@@ -98,7 +103,7 @@ def solve_lwr(
         G = np.einsum("bkp,bkq->bpq", X, WX)       # XᵀWX (B, p, p)
         b_ = np.einsum("bkp,bk->bp", WX, zn)       # XᵀWz (B, p)
         x0 = np.concatenate([np.ones((B, 1)), qcoords], axis=1)
-        theta, Ginv_x0 = _wls_solve(G, b_, x0)
+        theta, Ginv_x0 = _wls_solve(G, b_, x0, valid.sum(axis=1))
         mu = np.einsum("bp,bp->b", theta, x0)
         r = (WX @ Ginv_x0[:, :, None])[:, :, 0]   # W X (XᵀWX)⁻¹ x₀
         sigma = np.sqrt(np.einsum("bk,bk->b", r, r))
@@ -113,5 +118,5 @@ def solve_lwr(
         data, grid_df, var, kernel,
         f"{id_col} long, {var} double, {var}_variance double",
         data_coord_cols, query_coord_cols, maxneighbors, minneighbors,
-        metric, radius, id_col, strategy, tile_res, tiled_first_replicate,
+        metric, radius, id_col, strategy, tile_res,
     )

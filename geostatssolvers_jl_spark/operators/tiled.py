@@ -15,9 +15,9 @@ stacks:
 * **tiled** (`tiled_local_apply`), chosen above
   `planner.BROADCAST_LIMIT` data rows:
 
-  1. exact neighbor pairs via the fully-distributed escalating tiled join
+  1. exact neighbor pairs via the fully-distributed one-pass tiled join
      (`neighbors.knn_join_tiled_exact` — no driver collect of either
-     side);
+     side, no cache, no action);
   2. neighbor attributes (coords + values) joined back on ``data_id``
      (ordinary shuffle equi-join, AQE-optimizable);
   3. per-query neighbor ARRAYS via ``sort_array(collect_list(struct(...)))``
@@ -33,9 +33,12 @@ numpy trig; 1-ulp libm differences can propagate to ~1e-11 relative on
 ill-conditioned (duplicate-coordinate) kriging systems — far below the
 round-6 correctness gate.
 
-Scale shape of the tiled path: two shuffles (pair join + group-to-arrays)
-over rows proportional to queries×k, never a broadcast or driver
-materialization of the data side.
+Scale shape of the tiled path: one lazy plan.  Its shuffles are the
+bound (the data's cell pyramid aggregate, the query-to-pyramid join, a
+per-query min), the candidate join, the top-k window, the attribute
+join and the group-to-arrays; the replicated side is always the query
+side, over the cells its kth-distance bound can reach.  Never a
+broadcast or driver materialization of the data side.
 """
 
 from __future__ import annotations
@@ -52,10 +55,9 @@ from ..neighbors import (
     stacked_apply,
 )
 
-# one live final-pairs cache per application (see tiled_local_apply);
-# entries are (owning SparkSession, pairs DataFrame, semanticHash) and
-# every get/evict/store runs under _PAIRS_LOCK — the gate executes arms
-# concurrently, so the sequence must be atomic
+# never filled (the tiled join caches nothing; its pairs are scanned
+# once); kept only because `perfbench.workloads.reset_engine_caches`
+# still clears them
 _LAST_PAIRS: dict = {}
 _PAIRS_LOCK = __import__("threading").Lock()
 
@@ -73,22 +75,14 @@ def tiled_local_apply(
     radius: float | None = None,
     res: int = 6,
     id_col: str = "cell_id",
-    first_replicate: str = "auto",
 ) -> DataFrame:
-    """Search + gather + solve for a data side too big to broadcast.
-    ``first_replicate``: which side the bulk tiled pass replicates ×9 —
-    'queries' when the estimation grid is the smaller side (see
-    `knn_join_tiled_exact`).  'auto' (default) compares the two row
-    counts and replicates the smaller side — two column-pruned count
-    scans, trivially amortized against the join they shape (the engine's
-    own headline shape is a small estimation grid vs a 10¹²-page data
-    side, where replicating the data side ×9 is exactly wrong)."""
+    """Search + gather + solve for a data side too big to broadcast."""
     if len(data_coord_cols) != 2 or len(query_coord_cols) != 2:
         # SUPPORTED 3-D strategy: broadcast.  The reference's domains are
         # 1-D/2-D (CartesianGrid(100), (100,100) throughout its tests);
         # the N-D broadcast path covers 3-D data up to its documented
         # bound of planner.BROADCAST_LIMIT conditioning rows (≈ 100 MB
-        # per executor, well under executor memory).  A z-slab tiled ladder
+        # per executor, well under executor memory).  A z-slab tiled join
         # (slab over z with halo ≥ search radius, 2-D tiles within each
         # slab) is the designed extension if a >2M-row 3-D corpus ever
         # materializes; it is NOT implemented, and this guard makes that
@@ -114,55 +108,7 @@ def tiled_local_apply(
         f"{data_coord_cols[0]} AS lon",
         f"{data_coord_cols[1]} AS lat",
     )
-    if first_replicate == "auto":
-        first_replicate = (
-            "queries" if qsel.count() <= dsel.count() else "data"
-        )
-    pairs = knn_join_tiled_exact(
-        qsel, dsel, k, res, metric=metric,
-        first_replicate=first_replicate,
-    )
-    # the ladder returns its final pairs CACHED (callers re-scan them in
-    # the attribute join + gather below); bound the pinned storage to ONE
-    # live pairs relation per session — repeated tiled solves otherwise
-    # accumulate a CacheManager entry each (the handle never reached the
-    # caller, so the documented caller-side unpersist was unreachable).
-    # cache() keeps lineage, so unpersisting the PREVIOUS solve's pairs
-    # stays correct even if its result is still lazily held — it would
-    # recompute, not fail.
-    # the gate runs arms concurrently, so the check/evict/store sequence
-    # must be atomic: interleaved threads could unpersist a pairs
-    # relation another in-flight solve depends on (correct via lineage
-    # but forces a full ladder re-execution) or overwrite an entry
-    # without unpersisting it (stranding a pinned InMemoryRelation —
-    # exactly the growth this cache bounds).  Keyed by the owning
-    # SparkSession too: applicationId is shared across sessions of one
-    # context, and a semanticHash hit must never hand back a DataFrame
-    # built in a different session.
-    sess = qsel.sparkSession
-    app = sess.sparkContext.applicationId
-    try:
-        sem = pairs._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        sem = None
-    with _PAIRS_LOCK:
-        prev = _LAST_PAIRS.get(app)
-        if prev is not None:
-            prev_sess, prev_df, prev_sem = prev
-            if (sem is not None and sem == prev_sem
-                    and prev_sess is sess):
-                # identical solve repeated (bench reps, retried stages):
-                # the CacheManager already holds these exact pairs —
-                # evicting them would force a full ladder re-execution
-                pairs = prev_df
-            else:
-                try:
-                    prev_df.unpersist()
-                except Exception:
-                    pass
-                _LAST_PAIRS[app] = (sess, pairs, sem)
-        else:
-            _LAST_PAIRS[app] = (sess, pairs, sem)
+    pairs = knn_join_tiled_exact(qsel, dsel, k, res, metric=metric)
     if radius is not None:
         # KBallSearch semantics: the ≤k nearest within the ball
         pairs = pairs.filter(F.col("dist") <= radius)
@@ -255,7 +201,6 @@ def solve_local(
     id_col: str,
     strategy: str,
     tile_res: int | None,
-    first_replicate: str,
     empty_msg: str = "estimation requires data",
     value_cols: list[str] | None = None,
     expand: Callable[[DataFrame], DataFrame] | None = None,
@@ -294,7 +239,7 @@ def solve_local(
                     value_cols, maxneighbors, kernel, out_schema,
                     metric=metric, radius=radius,
                     res=(tile_res if tile_res is not None else 6),
-                    id_col=id_col, first_replicate=first_replicate,
+                    id_col=id_col,
                 )
         data = collect_points(
             points, data_coord_cols, value_cols,

@@ -33,7 +33,7 @@ def knn_pairs_sql(
     ``dist_sql`` must reference columns as ``q.<col>`` / ``d.<col>``.
     Deterministic: ties broken by data id.  The declarative form — Catalyst
     broadcasts the small side; the big-big path uses the tiled engine
-    instead (`neighbors.knn_join_tiled`).
+    instead (`neighbors.knn_join_tiled_exact`).
 
     ``where_extra``: additional predicate over ``q.``/``d.`` columns
     (e.g. self-exclusion for LOO CV).  ``broadcast_data``: emit a

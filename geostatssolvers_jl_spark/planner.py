@@ -132,9 +132,10 @@ def choose_ivf(n_vectors: int, lo: int = 4,
 # broadcasts) dominate — measured 1.9 s vs 3.2 s at 2k vectors
 ANN_FAST_MIN = 10_000
 # below this the brute O(n²) pair window (≤ 1e8 pairs, one broadcast
-# join + one window) finishes in ~2 s — under the tiled ladder's fixed
-# multi-pass cost (~6 actions, measured ~3.7 s at 5k points); above it
-# the ladder's O(n·ring) wins and keeps winning forever (24× at 50k)
+# join + one window) is the cheaper tier at small n: on a 4-core box at
+# 500 points brute takes 1.9–2.5 s against 2.0–3.2 s for the one-pass
+# tiled join; at 5k points tiled wins (4.3–4.8 s against 11.0–11.3 s),
+# so the cutover lies between 500 and 5k points
 LOO_BRUTE_LIMIT = 10_000
 
 
@@ -154,5 +155,6 @@ def ann_tier(n_vectors: int) -> str:
 
 def loo_tier(n_data: int) -> str:
     """Leave-one-out kNN tier: "brute" (one O(n²) pair window) below
-    LOO_BRUTE_LIMIT points, else "tiled" (the exact tiled kNN ladder)."""
+    LOO_BRUTE_LIMIT points, else "tiled" (the exact one-pass tiled kNN
+    join)."""
     return "brute" if n_data < LOO_BRUTE_LIMIT else "tiled"

@@ -11,12 +11,12 @@ engine and provided here:
   whole-stage codegen (`cell_expr`), in numpy inside pandas UDFs
   (`cell_np`), and verbatim in DuckDB for the correctness oracle.
 * **parent/child** — shift tx,ty by one level (`parent_expr`).
-* **k-ring** — the unique cells of a cell's (2k+1)² disk as one Spark SQL
-  array (`ring_expr`, lon wraps, off-world lat rows dropped); exploded onto
-  one join side for cell-ring-expansion kNN candidate generation
-  (SURVEY.md §2.3 J1/J2) — no Python stage.
-* **cell size bound** — max diagonal of a cell at a latitude, which
-  certifies exact-kNN termination of ring expansion.
+* **k-ring** — the unique cells of a cell's row × column block as one
+  Spark SQL array (`ring_expr`, lon wraps, off-world lat rows dropped,
+  widths may be per-row SQL expressions); exploded onto the query side
+  for cell-ring-expansion kNN candidate generation (SURVEY.md §2.3
+  J1/J2) — no Python stage.  The distance bounds that size the block
+  live with their join (`neighbors.knn_join_tiled_exact`).
 
 Layout of the id:  ``cell = (r << 58) | (ty << 29) | tx`` with
 ``tx, ty < 2^29``.  All ops stay in signed-64 range.  **Contract:
@@ -95,23 +95,27 @@ def parent_expr(cell: str, res: int, parent_res: int) -> str:
     )
 
 
-def ring_expr(cell: str, res: int, k: int) -> str:
-    """Spark SQL array of the UNIQUE cells within Chebyshev distance k of
-    ``cell`` (the (2k+1)² 'disk' at resolution ``res``); lon wraps.
+def ring_expr(cell: str, res: int, k_lat: int | str,
+              k_lon: int | str) -> str:
+    """Spark SQL array of the UNIQUE cells within ``k_lat`` rows and
+    ``k_lon`` columns of ``cell`` (a (2·k_lat+1) × (2·k_lon+1) block at
+    resolution ``res``; k_lat = k_lon = k is the Chebyshev k-disk); lon
+    wraps.  Widths are ints or SQL expressions (evaluated per row).
 
     Lat rows outside [0, n) are DROPPED, never clamped — clamping would
     emit the same top/bottom-row cell twice, and a duplicated ring cell
     makes the tiled kNN join count one data row at two ranks, silently
     dropping the true kth neighbor for polar-row queries.  For the same
-    reason lon-wrap collisions (2k+1 ≥ n) are removed by
+    reason lon-wrap collisions (2·k_lon+1 ≥ n) are removed by
     ``array_distinct``."""
     n = nside(res)
     tx = tx_from_cell_expr(cell)
     ty = ty_from_cell_expr(cell)
     return (
         f"array_distinct(flatten(transform("
-        f"sequence(greatest({ty} - {k}, 0), least({ty} + {k}, {n - 1})), "
-        f"_ry -> transform(sequence({tx} - {k}, {tx} + {k}), "
+        f"sequence(greatest({ty} - {k_lat}, 0), "
+        f"least({ty} + {k_lat}, {n - 1})), "
+        f"_ry -> transform(sequence({tx} - {k_lon}, {tx} + {k_lon}), "
         f"_rx -> {res * (1 << 58)} + _ry * {1 << 29} + pmod(_rx, {n})))))"
     )
 

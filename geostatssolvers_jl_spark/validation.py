@@ -9,9 +9,10 @@ error-rate surface is SURVEY §2.4 A8).  Two forms, Spark-first:
   pair relation + the existing `idw_agg_sql` aggregation), then the
   per-point error joins back the truth.  Pure shared-dialect SQL
   (the gate oracle runs the identical text on DuckDB).  The cross-join
-  + window form is the small/medium-n path; a big-data LOO would swap
-  the pair relation for `neighbors.knn_join_tiled` with the same
-  self-exclusion predicate — the aggregation is unchanged.
+  + window form is the small/medium-n path; the big-data LOO
+  (`__spark_entry__.q_loo_idw_cv`) swaps the pair relation for
+  `neighbors.knn_join_tiled_exact` at k+1 and drops the self pair — the
+  aggregation is unchanged.
 * **k-fold** (`kfold_cv`) — solver-agnostic: folds assigned by a
   deterministic id hash, each fold estimated by the caller's solver
   trained on the complement.  k solver calls, each fully distributed;

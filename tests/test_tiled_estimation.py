@@ -98,10 +98,16 @@ def test_idw_tiled_radius_bit_identical(spark, geo):
 def test_lwr_tiled_bit_identical(spark, geo):
     d, q = geo
     # a 900 km ball cuts the 8th neighbor of a few queries and leaves each
-    # query >= 3 neighbors; under-determined systems (< 3 neighbors, e.g.
-    # in a 600 km ball) are not path-stable: ulp-level distance
-    # differences move their singular-system fallback
-    for radius in (None, 900.0):
+    # query >= 3 neighbors; a 600 km ball leaves a few queries fewer than
+    # p = 3, whose under-determined systems always take the minimum-norm
+    # (pinv) solution, so both paths agree on them too
+    from geostatssolvers_jl_spark.neighbors import topk_search
+
+    D = d.orderBy("data_id").select("lon", "lat").toPandas().to_numpy()
+    Q = q.select("lon", "lat").toPandas().to_numpy()
+    _, _, nvalid = topk_search(Q, D, 8, Haversine(6371.0), 600.0)
+    assert (nvalid < 3).any()
+    for radius in (None, 900.0, 600.0):
         kw = dict(
             var="z", data_coord_cols=["lon", "lat"],
             query_coord_cols=["lon", "lat"], maxneighbors=8,

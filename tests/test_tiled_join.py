@@ -1,4 +1,4 @@
-"""Big-big tiled kNN join: certified rows must equal the exact kNN."""
+"""Big-big tiled kNN join: its rows must equal the exact kNN."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import pytest
 from geostatssolvers_jl_spark.distances import Euclidean, Haversine
 from geostatssolvers_jl_spark.neighbors import (
     collect_points,
-    knn_join_tiled,
+    knn_join_tiled_exact,
     knn_pairs,
 )
 
@@ -28,34 +28,6 @@ def points(spark):
         "cell_id long, lon double, lat double",
     )
     return d, q
-
-
-def test_tiled_certified_matches_exact(spark, points):
-    d, q = points
-    out = knn_join_tiled(q, d, k=3, res=5, metric=Haversine(6371.0))
-    rows = out.collect()
-    # the join must produce candidates for every query (dense data here)
-    got = {}
-    for r in rows:
-        got.setdefault(r["cell_id"], []).append(r)
-    # exact reference via broadcast path
-    data = collect_points(d, ["lon", "lat"], [], id_col="data_id")
-    exact = knn_pairs(q, data, ["lon", "lat"], k=3, metric=Haversine(6371.0),
-                      id_col="cell_id").collect()
-    want = {}
-    for r in exact:
-        want.setdefault(r["cell_id"], {})[r["rank"]] = (r["data_id"], r["dist"])
-    n_cert = 0
-    for cid, rs in got.items():
-        if all(r["certified"] for r in rs):
-            n_cert += 1
-            for r in rs:
-                wd, wdist = want[cid][r["rank"]]
-                assert r["data_id"] == wd, (cid, r["rank"])
-                assert r["dist"] == pytest.approx(wdist, abs=1e-9)
-    # at res 5 over a dense 60°x40° box, most queries certify at ring 1
-    assert n_cert > len(got) * 0.5
-    assert len(got) == 400
 
 
 def test_tiled_exact_equals_brute(spark, points):
@@ -175,27 +147,11 @@ def test_tiled_exact_never_collects_data_side(spark, points, monkeypatch):
 def test_tiled_salted_topk_identical(spark, points):
     """Explicit hot-cell salting (two-stage top-k) must not change rows."""
     d, q = points
-    base = knn_join_tiled(q, d, k=3, res=5, metric=Haversine(6371.0))
-    salted = knn_join_tiled(q, d, k=3, res=5, metric=Haversine(6371.0),
-                            salt=4)
+    base = knn_join_tiled_exact(q, d, k=3, res=5, metric=Haversine(6371.0))
+    salted = knn_join_tiled_exact(q, d, k=3, res=5,
+                                  metric=Haversine(6371.0), salt=4)
     a = sorted(map(tuple, base.collect()))
     b = sorted(map(tuple, salted.collect()))
-    assert a == b
-
-
-def test_first_replicate_side_equivalence(spark, points):
-    """Replicating the query side in the bulk pass must produce identical
-    rows to data-side replication (the knob exists so callers replicate
-    whichever side is smaller at their scale)."""
-    from geostatssolvers_jl_spark.neighbors import knn_join_tiled_exact
-
-    d, q = points
-    a = sorted(map(tuple, knn_join_tiled_exact(
-        q, d, k=3, res=5, metric=Haversine(6371.0),
-        first_replicate="data").collect()))
-    b = sorted(map(tuple, knn_join_tiled_exact(
-        q, d, k=3, res=5, metric=Haversine(6371.0),
-        first_replicate="queries").collect()))
     assert a == b
 
 
@@ -386,7 +342,7 @@ def test_ring_expr_is_unique_chebyshev_disk(spark):
             "ty long, tx long, cell long",
         )
         rows = rel.selectExpr(
-            "ty", "tx", *(f"{tiling.ring_expr('cell', res, k)} AS r{k}"
+            "ty", "tx", *(f"{tiling.ring_expr('cell', res, k, k)} AS r{k}"
                           for k in ks),
         ).collect()
         assert len(rows) == len(edge) ** 2
@@ -403,17 +359,101 @@ def test_ring_expr_is_unique_chebyshev_disk(spark):
                 assert set(got) == want, (res, k, ty, tx)
 
 
-@pytest.mark.parametrize("replicate", ["data", "queries"])
-def test_tiled_pass_plans_no_python(spark, points, replicate):
-    """One ladder pass replicates its side by a JVM-side explode: no
-    Python stage, and the candidate join is the pass's only join."""
-    import re
-
+def test_tiled_pass_plans_no_python(spark, points):
+    """The tiled join is one lazy plan: its cell pyramid, bound and
+    query replication are JVM-side SQL (no Python stage), nothing in it
+    is cached, and every join is an equi-join."""
     d, q = points
-    out = knn_join_tiled(q, d, k=3, res=5, metric=Haversine(6371.0),
-                         ring=4, replicate=replicate)
+    out = knn_join_tiled_exact(q, d, k=3, res=5, metric=Haversine(6371.0))
     plan = out._jdf.queryExecution().executedPlan().toString()
-    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert node not in plan
-    joins = re.findall(r"\w*(?:Join|CartesianProduct)\b", plan)
-    assert joins == ["SortMergeJoin"], joins
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+                 "InMemory", "CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert node not in plan, node
+    assert "SortMergeJoin" in plan
+
+
+def test_tiled_exact_call_starts_no_job(spark):
+    """Building the join runs no Spark job: no count, no emptiness probe,
+    no cache materialization.  The group is checked to catch jobs by
+    running one action in it afterwards."""
+    rng = np.random.default_rng(23)
+    d = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(
+            zip(rng.uniform(-10, 10, 2000), rng.uniform(-10, 10, 2000)))],
+        "data_id long, lon double, lat double",
+    )
+    q = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(
+            zip(rng.uniform(-10, 10, 400), rng.uniform(-10, 10, 400)))],
+        "cell_id long, lon double, lat double",
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "knn-join-tiled-exact-lazy"
+    sc.setJobGroup(group, "lazy plan check")
+    try:
+        out = knn_join_tiled_exact(q, d, k=3, res=5,
+                                   metric=Haversine(6371.0))
+        lazy = list(tracker.getJobIdsForGroup(group))
+        assert out.count() == 1200
+        ran = list(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert lazy == []
+    assert ran
+
+
+def _brute_rows(d, q, k, met):
+    data = collect_points(d, ["lon", "lat"], [], id_col="data_id")
+    exact = knn_pairs(q, data, ["lon", "lat"], k=k, metric=met,
+                      id_col="cell_id").collect()
+    return sorted((r["cell_id"], r["rank"], r["data_id"]) for r in exact)
+
+
+@pytest.mark.parametrize("metric_name", ["haversine", "euclidean"])
+def test_tiled_exact_fewer_rows_than_k(spark, metric_name):
+    """With fewer data rows than k no pyramid cell holds k rows: the
+    bound is infinite, every query covers the whole world and gets every
+    row, as brute force does."""
+    met = Haversine(6371.0) if metric_name == "haversine" else Euclidean()
+    d = spark.createDataFrame(
+        [(0, 10.0, 20.0), (1, -150.0, -70.0)],
+        "data_id long, lon double, lat double",
+    )
+    rng = np.random.default_rng(29)
+    q = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(
+            zip(rng.uniform(-180, 180, 30), rng.uniform(-90, 90, 30)))],
+        "cell_id long, lon double, lat double",
+    )
+    out = knn_join_tiled_exact(q, d, k=3, res=5, metric=met)
+    got = sorted((r["cell_id"], r["rank"], r["data_id"])
+                 for r in out.collect())
+    assert len(got) == 60
+    assert got == _brute_rows(d, q, 3, met)
+
+
+def test_tiled_exact_clustered_data_far_queries(spark):
+    """Data in one 10° box, queries all over the sphere (poles
+    included): far queries get wide bounds, so their rectangles span many
+    columns or the full circle; rows must still equal brute force."""
+    rng = np.random.default_rng(31)
+    d = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(
+            zip(rng.uniform(20, 30, 300), rng.uniform(40, 50, 300)))],
+        "data_id long, lon double, lat double",
+    )
+    lat = np.degrees(np.arcsin(rng.uniform(-1, 1, 54)))
+    lat = np.concatenate([lat, [89.9, 87.0, 86.0, -86.0, -88.5, -89.99]])
+    lon = rng.uniform(-180, 180, 60)
+    q = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(
+            zip(lon, lat))],
+        "cell_id long, lon double, lat double",
+    )
+    assert (np.abs(lat) > 85).sum() >= 6
+    met = Haversine(6371.0)
+    out = knn_join_tiled_exact(q, d, k=4, res=5, metric=met)
+    got = sorted((r["cell_id"], r["rank"], r["data_id"])
+                 for r in out.collect())
+    assert got == _brute_rows(d, q, 4, met)

@@ -1,7 +1,9 @@
-"""Tiled ESTIMATION stress — the grid-heavy shape (the big-big join stress
-covers data-heavy): a 1M-cell estimation grid kriged against 200k synthetic
-pages through `strategy='local-tiled'` (`first_replicate` auto-chosen by
-the solver path), with a broadcast-path spot-check on a sampled sub-grid.
+"""Tiled ESTIMATION stress — the grid-heavy (query-heavy) shape: a 1M-cell
+estimation grid kriged against 200k synthetic pages through
+`strategy='local-tiled'`, whose tiled join replicates the query side over
+the cells each query's kth-distance bound reaches (the grid's polar rows
+lie beyond the data's ±80° band, so their bounds are wide), with a
+broadcast-path spot-check on a sampled sub-grid.
 
 Usage: python tools/estimation_stress.py [n_cells_side] [n_data]
 Prints one JSON line.
