@@ -359,11 +359,16 @@ def test_ring_expr_is_unique_chebyshev_disk(spark):
                 assert set(got) == want, (res, k, ty, tx)
 
 
-def test_tiled_pass_plans_no_python(spark, points):
+@pytest.mark.parametrize("larger", ["data", "queries"])
+def test_tiled_pass_plans_no_python(spark, points, larger):
     """The tiled join is one lazy plan: its cell pyramid, bound and
     query replication are JVM-side SQL (no Python stage), nothing in it
-    is cached, and every join is an equi-join."""
+    is cached, and every join is an equi-join -- whichever side holds
+    more rows, since the query side is always the one replicated."""
     d, q = points
+    if larger == "queries":
+        d, q = (q.withColumnRenamed("cell_id", "data_id"),
+                d.withColumnRenamed("data_id", "cell_id"))
     out = knn_join_tiled_exact(q, d, k=3, res=5, metric=Haversine(6371.0))
     plan = out._jdf.queryExecution().executedPlan().toString()
     for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
