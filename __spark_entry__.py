@@ -730,7 +730,15 @@ def q_loo_idw_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     others, whether or not the self pair made the list.  Distance text,
     (dist, data_id) tie-break and the `idw_agg_sql` aggregation are the
     SAME builders as the brute form, so the rows are identical — the
-    DuckDB oracle keeps `loo_idw_sql`."""
+    DuckDB oracle keeps `loo_idw_sql`.
+
+    The tiled tier joins ``z`` back by data_id instead of letting the
+    join pass it through.  Negative result (4-core box, warm reps):
+    passing ``z`` through cost the data side its shared broadcast
+    exchange with the query side, and the final SELECT reads
+    `_pages_xyz` for ``t.z`` anyway; jobs went 16 → 17, sf0.1 took
+    3.35–5.24 s against 3.21–4.84 s and sf0.01 1.58–2.58 s against
+    1.54–1.87 s."""
     from pyspark.sql import Window
 
     from geostatssolvers_jl_spark.neighbors import knn_join_tiled_exact

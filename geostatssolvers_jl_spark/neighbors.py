@@ -29,8 +29,9 @@ analogous to Spark's own broadcast-vs-shuffle join choice:
   `tiling.ring_expr`, no Python stage); an equi-join on cell id (an
   ordinary shuffle join Catalyst/AQE can optimize, incl. skew
   splitting) produces candidates, and a window top-k per query keeps
-  the exact neighbors.  The pairs are joined back to their attributes
-  and collected into per-query arrays that fill the same stacks.
+  the exact neighbors.  Each pair carries its neighbor's columns
+  through the join, and the pairs are collected into per-query arrays
+  that fill the same stacks.
 
 Top-k is deterministic: ties broken by data row id ascending — the same
 (dist, data_id) order on both strategies, so the kernel sees the same
@@ -580,17 +581,26 @@ def knn_join_tiled_exact(
     cells; this form takes 4.3–4.8 s there (the escalation ladder it
     replaced: 7.3–9.6 s).
 
-    Returns (query_id, data_id, dist, rank) — identical rows to a
-    brute-force kNN (the north rule's 'identical join output rows').
+    Returns (query_id, data_id, dist, rank, *the data side's other
+    columns): the neighbor records, each with the columns of the row its
+    distance was computed on, so a gather reads the data side no second
+    time (unselected columns are pruned at the scan).  The pairs are
+    identical to a brute-force kNN (the north rule's 'identical join
+    output rows').
     """
     from pyspark.sql import Window
 
     metric = metric or Haversine()
     top = min(res + 4, tiling.MAX_RES)
+    carry = [c for c in data.columns if c not in (data_id, lon, lat)]
+    clash = set(carry) & {query_id, "dist", "rank", "_salt", "_r1"}
+    if clash:
+        raise ValueError(f"data columns {sorted(clash)} collide with the "
+                         "kNN join's own columns")
     q = _wrap_lon(queries, lon, metric).selectExpr(
         query_id, f"{lon} AS _qlon", f"{lat} AS _qlat")
     d = _wrap_lon(data, lon, metric).selectExpr(
-        data_id, f"{lon} AS _dlon", f"{lat} AS _dlat")
+        data_id, f"{lon} AS _dlon", f"{lat} AS _dlat", *carry)
     pyramid = (
         d.selectExpr(f"explode({_pyramid_cells('_dlon', '_dlat', top)})"
                      " AS _pcell", "_dlon", "_dlat")
@@ -622,8 +632,7 @@ def knn_join_tiled_exact(
                " * (1.0 - 1e-12) <= _u")
     )
     dcell = d.selectExpr(
-        data_id, f"{tiling.cell_expr('_dlon', '_dlat', res)} AS _dcell",
-        "_dlon", "_dlat")
+        "*", f"{tiling.cell_expr('_dlon', '_dlat', res)} AS _dcell")
     cand = probes.hint(_CAND_JOIN_HINT).join(
         dcell, F.col("_jcell") == F.col("_dcell"), "inner"
     ).withColumn(
@@ -641,5 +650,5 @@ def knn_join_tiled_exact(
     return (
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id, data_id, "dist", "rank")
+        .select(query_id, data_id, "dist", "rank", *carry)
     )

@@ -18,8 +18,9 @@ stacks:
   1. exact neighbor pairs via the fully-distributed one-pass tiled join
      (`neighbors.knn_join_tiled_exact` — no driver collect of either
      side, no cache, no action);
-  2. neighbor attributes (coords + values) joined back on ``data_id``
-     (ordinary shuffle equi-join, AQE-optimizable);
+  2. each pair arrives with its neighbor's coords + values, passed
+     through the join from the row it ranked (no second read of the
+     data side, no lookup by ``data_id``);
   3. per-query neighbor ARRAYS via ``sort_array(collect_list(struct(...)))``
      — rank-sorted, so the gathered stacks are in the identical
      (dist, data_id) order the broadcast gather produces;
@@ -35,8 +36,8 @@ round-6 correctness gate.
 
 Scale shape of the tiled path: one lazy plan.  Its shuffles are the
 bound (the data's cell pyramid aggregate, the query-to-pyramid join, a
-per-query min), the candidate join, the top-k window, the attribute
-join and the group-to-arrays; the replicated side is always the query
+per-query min), the candidate join, the top-k window and the
+group-to-arrays; the replicated side is always the query
 side, over the cells its kth-distance bound can reach.  Never a
 broadcast or driver materialization of the data side.
 """
@@ -103,43 +104,27 @@ def tiled_local_apply(
         f"{query_coord_cols[0]} AS lon",
         f"{query_coord_cols[1]} AS lat",
     )
+    # the join passes _nx/_ny/_v_* through from each ranked row, so the
+    # stacks need no second read of the data side; _nx/_ny keep the
+    # ORIGINAL coordinates (the join may wrap its copy of an out-of-range
+    # lon, and the kernel must see what the broadcast gather sees)
     dsel = data_df.selectExpr(
         "data_id",
         f"{data_coord_cols[0]} AS lon",
         f"{data_coord_cols[1]} AS lat",
+        f"{data_coord_cols[0]} AS _nx",
+        f"{data_coord_cols[1]} AS _ny",
+        *[f"{v} AS _v_{v}" for v in value_cols],
     )
     pairs = knn_join_tiled_exact(qsel, dsel, k, res, metric=metric)
     if radius is not None:
         # KBallSearch semantics: the ≤k nearest within the ball
         pairs = pairs.filter(F.col("dist") <= radius)
-
-    # one attribute row per data_id — a plain join would FAN OUT every
-    # pair row per duplicate and collect_list would gather >k structs,
-    # truncating real neighbors.  data_id must identify ONE point:
-    # content-derived ids (sources/delimited) collide only for
-    # byte-identical rows (identical payloads, so any survivor is exact);
-    # should a caller-supplied id ever collide across DIFFERENT payloads,
-    # min(struct) keeps a DETERMINISTIC survivor (dropDuplicates keeps a
-    # partitioning-dependent one — the nondeterminism this engine
-    # eliminates everywhere else with min-based survivors)
-    acols = ["_nx", "_ny"] + [f"_v_{v}" for v in value_cols]
-    dvals = (
-        data_df.selectExpr(
-            "data_id",
-            f"{data_coord_cols[0]} AS _nx",
-            f"{data_coord_cols[1]} AS _ny",
-            *[f"{v} AS _v_{v}" for v in value_cols],
-        )
-        .groupBy("data_id")
-        .agg(F.min(F.struct(*acols)).alias("_srv"))
-        .select("data_id", *[F.col(f"_srv.{c}").alias(c) for c in acols])
-    )
-    enriched = pairs.join(dvals, "data_id")
     struct_cols = [
         F.col("rank"), F.col("dist"), F.col("_nx"), F.col("_ny"),
         *[F.col(f"_v_{v}") for v in value_cols],
     ]
-    nb = enriched.groupBy(id_col).agg(
+    nb = pairs.groupBy(id_col).agg(
         F.sort_array(F.collect_list(F.struct(*struct_cols))).alias("_nb")
     )
     # split the rank-sorted struct array into TYPED arrays JVM-side: Arrow

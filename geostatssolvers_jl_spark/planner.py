@@ -61,10 +61,11 @@ def kriging_ui(
 
 
 def choose_tile_res(n_data: int, target_per_cell: int = 64) -> int:
-    """Tile resolution sized to the data density: ~``target_per_cell``
-    rows per occupied cell keeps the ring-1 candidate volume (≈ 9·target
-    per query) flat as the data side grows — the oversampling knob of the
-    tiled kNN join."""
+    """Tile resolution sized to the data density: a world grid of about
+    n_data / ``target_per_cell`` cells (res ≥ 3), so a cell of evenly
+    spread data holds ~target rows and the exact tiled kNN join's
+    candidate volume per query (the rows of the few cells its
+    kth-distance bound reaches) stays flat as the data side grows."""
     import math
 
     n_cells = max(1, n_data // target_per_cell)
@@ -131,12 +132,17 @@ def choose_ivf(n_vectors: int, lo: int = 4,
 # SQL plan is ~1 s and the gather tier's fixed costs (repartition +
 # broadcasts) dominate — measured 1.9 s vs 3.2 s at 2k vectors
 ANN_FAST_MIN = 10_000
-# below this the brute O(n²) pair window (≤ 1e8 pairs, one broadcast
-# join + one window) is the cheaper tier at small n: on a 4-core box at
-# 500 points brute takes 1.9–2.5 s against 2.0–3.2 s for the one-pass
-# tiled join; at 5k points tiled wins (4.3–4.8 s against 11.0–11.3 s),
-# so the cutover lies between 500 and 5k points
-LOO_BRUTE_LIMIT = 10_000
+# below this the brute O(n²) pair window (one broadcast join + one
+# window) is the cheaper LOO tier.  Measured on a 4-core box (local[4],
+# one warm process, 4 interleaved reps, make_sf pages; rows equal at
+# every size), brute vs the one-pass tiled join:
+#     points   brute          tiled
+#        500   0.89–1.12 s    1.39–1.61 s
+#      1,000   1.71–2.51 s    1.96–2.87 s
+#      2,000   2.18–2.59 s    1.62–2.13 s
+#      3,000   3.73–4.21 s    2.07–2.75 s
+#      5,000   9.17–10.37 s   2.96–3.19 s
+LOO_BRUTE_LIMIT = 1_500
 
 
 def ann_tier(n_vectors: int) -> str:

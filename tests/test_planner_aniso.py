@@ -58,7 +58,7 @@ def test_tier_cutovers():
     assert ann_tier(ANN_FAST_MIN) == "gather"
     assert ann_tier(GATHER_SCORE_LIMIT) == "gather"
     assert ann_tier(GATHER_SCORE_LIMIT + 1) == "join"
-    assert LOO_BRUTE_LIMIT == 10_000
+    assert LOO_BRUTE_LIMIT == 1_500
     assert loo_tier(LOO_BRUTE_LIMIT - 1) == "brute"
     assert loo_tier(LOO_BRUTE_LIMIT) == "tiled"
 

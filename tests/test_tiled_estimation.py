@@ -4,6 +4,8 @@ equi-join pipeline (no cartesian products, no driver collect of data)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -147,8 +149,8 @@ def test_auto_strategy_routes_big_data_tiled(spark, geo, monkeypatch):
 def test_tiled_plan_is_equijoin(spark, geo):
     """The tiled plan must not contain cartesian products or broadcast
     nested loops — candidates flow through equi-joins only — and its one
-    Python stage is the gather kernel: the ladder's ring replication is a
-    JVM-side explode on every pass."""
+    Python stage is the gather kernel: the join's cell replication is a
+    JVM-side explode."""
     d, q = geo
     out = solve_idw(
         d, q, var="z", data_coord_cols=["lon", "lat"],
@@ -159,22 +161,45 @@ def test_tiled_plan_is_equijoin(spark, geo):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert plan.count("MapInPandas") == 1
+    # the join hands over each neighbor's columns: the data side is not
+    # aggregated or joined again by data_id to fetch them
+    assert not re.search(r"Aggregate\(key=\[data_id", plan), plan
+    assert not re.search(r"Join \[data_id", plan), plan
 
 
-def test_tiled_duplicate_data_ids_no_fanout(spark, geo):
-    """Content-derived data_ids collide for byte-identical rows; the
-    attribute join must not fan out (a plain join would gather >k structs
-    per cell and truncate REAL neighbors — r2 ADVICE finding).  Duplicated
-    rows through the tiled path must match the broadcast path on the same
-    duplicated input."""
+@pytest.mark.parametrize("dups", ["identical", "colliding"])
+def test_tiled_duplicate_data_ids_no_fanout(spark, geo, dups):
+    """Shared data_ids through the tiled path must match the broadcast
+    path on the same input.  Content-derived ids collide for
+    byte-identical rows ("identical"); a caller's ids may also collide
+    across rows with different places and values ("colliding").  The
+    exact join returns each neighbor's own coordinates and values, so a
+    shared id neither fans a query out to more than k structs nor pairs
+    one row's distance with another row's payload."""
     d, q = geo
-    dup = d.limit(40)
-    ddup = d.union(dup)  # 40 byte-identical duplicate rows, same data_id
+    if dups == "identical":
+        extra = d.limit(40)
+    else:
+        rng = np.random.default_rng(23)
+        extra = spark.createDataFrame(
+            [(i, float(x), float(y), float(v)) for i, (x, y, v) in enumerate(
+                zip(rng.uniform(-60, 60, 40), rng.uniform(-50, 50, 40),
+                    rng.normal(30, 3, 40)))],
+            d.schema,
+        )
+    ddup = d.union(extra)
     kw = dict(
         var="z", data_coord_cols=["lon", "lat"],
-        query_coord_cols=["lon", "lat"], maxneighbors=5,
-        metric=Haversine(6371.0),
+        query_coord_cols=["lon", "lat"], metric=Haversine(6371.0),
     )
-    a = _rows(solve_idw(ddup, q, strategy="local-broadcast", **kw))
-    b = _rows(solve_idw(ddup, q, strategy="local-tiled", tile_res=4, **kw))
+    a = _rows(solve_idw(ddup, q, strategy="local-broadcast",
+                        maxneighbors=5, **kw))
+    b = _rows(solve_idw(ddup, q, strategy="local-tiled", tile_res=4,
+                        maxneighbors=5, **kw))
+    assert a == b
+    model = KrigingModel(variogram=GaussianVariogram(range=2000.0, sill=9.0))
+    a = _rows(solve_kriging(ddup, q, model=model, strategy="local-broadcast",
+                            maxneighbors=6, **kw))
+    b = _rows(solve_kriging(ddup, q, model=model, strategy="local-tiled",
+                            tile_res=4, maxneighbors=6, **kw))
     assert a == b

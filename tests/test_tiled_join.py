@@ -44,6 +44,9 @@ def test_tiled_exact_equals_brute(spark, points):
     want = {(r["cell_id"], r["rank"]): (r["data_id"], round(r["dist"], 9))
             for r in exact}
     assert got == want
+    # data columns pass through; one named like an output column is refused
+    with pytest.raises(ValueError, match="collide"):
+        knn_join_tiled_exact(q, d.selectExpr("*", "1 AS rank"), k=3, res=5)
 
 
 def test_tiled_exact_sparse_escalation(spark):

@@ -91,8 +91,9 @@ def test_loo_better_on_smooth_field(spark):
 
 
 def test_loo_idw_cv_tiled_tier_equals_brute(spark, monkeypatch):
-    """`loo_idw_cv`'s tiled kNN ladder tier returns the brute tier's rows
-    (sf0.01 sits below LOO_BRUTE_LIMIT, so the gate runs only brute)."""
+    """`loo_idw_cv`'s tier over the exact one-pass tiled kNN join returns
+    the brute tier's rows (sf0.01 sits below LOO_BRUTE_LIMIT, so the gate
+    runs only brute there)."""
     import __spark_entry__ as entry
     import geostatssolvers_jl_spark.neighbors as nb
     from geostatssolvers_jl_spark import planner
@@ -100,12 +101,12 @@ def test_loo_idw_cv_tiled_tier_equals_brute(spark, monkeypatch):
 
     run = entry.queries()["loo_idw_cv"]
     brute = sorted(map(tuple, run(spark, SF).collect()))
-    ladder = nb.knn_join_tiled_exact
+    join = nb.knn_join_tiled_exact
     calls = []
 
     def counted(*a, **kw):
         calls.append(1)
-        return ladder(*a, **kw)
+        return join(*a, **kw)
 
     monkeypatch.setattr(nb, "knn_join_tiled_exact", counted)
     monkeypatch.setattr(planner, "LOO_BRUTE_LIMIT", 0)
