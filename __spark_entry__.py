@@ -12,7 +12,6 @@ reads, its Spark builder and its oracle once.
 
 from __future__ import annotations
 
-import itertools
 import threading
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -712,7 +711,6 @@ FROM (
 # ----------------------------------------------------------- validation
 
 LOO_IDW_K = 5
-_VIEW_SEQ = itertools.count()
 
 
 def q_loo_idw_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -730,7 +728,8 @@ def q_loo_idw_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     others, whether or not the self pair made the list.  Distance text,
     (dist, data_id) tie-break and the `idw_agg_sql` aggregation are the
     SAME builders as the brute form, so the rows are identical — the
-    DuckDB oracle keeps `loo_idw_sql`.
+    DuckDB oracle keeps `loo_idw_sql`.  The tiled pairs enter
+    `idw_agg_sql` as the final query's ``knn`` DataFrame argument.
 
     The tiled tier joins ``z`` back by data_id instead of letting the
     join pass it through.  Negative result (4-core box, warm reps):
@@ -766,9 +765,7 @@ def q_loo_idw_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
               "data_id")
         .select("target_id", "data_id", "dist", "z")
     )
-    rel = f"_loo_pairs_{next(_VIEW_SEQ)}"
-    knn.createOrReplaceTempView(rel)
-    est = idw_agg_sql(rel, var="z", exponent=1.0, qid="target_id")
+    est = idw_agg_sql("{knn}", var="z", exponent=1.0, qid="target_id")
     # final SELECT: the verbatim tail of `validation.loo_idw_sql`
     return spark.sql(f"""
 SELECT t.data_id, CAST(t.z AS DOUBLE) AS z,
@@ -777,7 +774,7 @@ SELECT t.data_id, CAST(t.z AS DOUBLE) AS z,
          + 0.0 AS err
 FROM {_pages_xyz()} t
 JOIN (SELECT target_id, z AS zhat FROM ({est}) _e) e
-  ON e.target_id = t.data_id""")
+  ON e.target_id = t.data_id""", knn=knn)
 
 
 KFOLD_K = 4
@@ -824,25 +821,27 @@ def q_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a REPARTITION hint (the single-file embeddings scan otherwise
     ran the whole pair fold on one task)."""
     nparts = spark.sparkContext.defaultParallelism
-    spark.sql(
+    emb_d = spark.sql(
         "SELECT vec_id, e, sqrt(aggregate(zip_with(e, e, (a, b) -> a * b),"
         " 0.0D, (acc, x) -> acc + x)) AS nrm FROM "
         "(SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS e "
         "FROM embeddings) _e"
-    ).createOrReplaceTempView("emb_d")
+    )
     dot = "aggregate(zip_with(q.e, d.e, (a, b) -> a * b), 0.0D, (acc, x) -> acc + x)"
     inner = (
         f"SELECT /*+ BROADCAST(q) */ q.vec_id AS qid, d.vec_id AS nid, "
         f"round(({dot}) / (q.nrm * d.nrm), 6) + 0.0 AS cos_sim "
-        f"FROM emb_d q CROSS JOIN "
-        f"(SELECT /*+ REPARTITION({nparts}) */ * FROM emb_d) d "
+        f"FROM {{emb_d}} q CROSS JOIN "
+        f"(SELECT /*+ REPARTITION({nparts}) */ * FROM {{emb_d}}) d "
         f"WHERE q.vec_id < 20 AND q.vec_id <> d.vec_id"
     )
     ranked = (
         f"SELECT *, row_number() OVER (PARTITION BY qid "
         f"ORDER BY cos_sim DESC, nid) AS rank FROM ({inner}) _i"
     )
-    return spark.sql(f"SELECT qid, nid, cos_sim, rank FROM ({ranked}) _r WHERE rank <= 3")
+    return spark.sql(
+        f"SELECT qid, nid, cos_sim, rank FROM ({ranked}) _r WHERE rank <= 3",
+        emb_d=emb_d)
 
 
 def _ann_cosine_oracle() -> str:
@@ -1035,8 +1034,8 @@ def _change_support_sql(vert_rel: str, nvx: int = 21) -> str:
 
 
 def q_change_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.range(21 * 21).selectExpr("id AS vid").createOrReplaceTempView("_verts")
-    return spark.sql(_change_support_sql("_verts"))
+    return spark.sql(_change_support_sql("{verts}"),
+                     verts=spark.range(21 * 21).selectExpr("id AS vid"))
 
 
 # ------------------------------------------------------------ webtext ops
@@ -1237,12 +1236,10 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pg = load_pages(spark, sf_dir)
     feats = image_features(pg, binary_col="html", id_col="url")
-    feats.selectExpr("url", "feature AS embedding") \
-        .createOrReplaceTempView("mm_feats")
     bexpr = _bucket_expr("spark", n_planes=8, dim=22)
     return spark.sql(
-        f"SELECT url, {bexpr} AS bucket FROM mm_feats"
-    )
+        f"SELECT url, {bexpr} AS bucket FROM {{feats}}",
+        feats=feats.selectExpr("url", "feature AS embedding"))
 
 
 def q_multimodal_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1256,7 +1253,6 @@ def q_multimodal_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pg = load_pages(spark, sf_dir)
     feats = image_features(pg, binary_col="html", id_col="url")
-    feats.createOrReplaceTempView("mm_inv")
     return spark.sql(
         "SELECT count(*) AS n, "
         "CAST(min(size(feature)) = 22 AND max(size(feature)) = 22 AS INT) "
@@ -1264,7 +1260,7 @@ def q_multimodal_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(sum(CASE WHEN exists(feature, "
         "  x -> isnan(x) OR abs(x) > 1e12) THEN 1 ELSE 0 END) = 0 AS INT) "
         "  AS all_finite "
-        "FROM mm_inv"
+        "FROM {feats}", feats=feats
     )
 
 

@@ -128,10 +128,18 @@ def choose_ivf(n_vectors: int, lo: int = 4,
     return k, max(2, k // 8)
 
 
-# LSH candidate volume grows ~n²/2^planes: below this the whole plain
-# SQL plan is ~1 s and the gather tier's fixed costs (repartition +
-# broadcasts) dominate — measured 1.9 s vs 3.2 s at 2k vectors
-ANN_FAST_MIN = 10_000
+# LSH candidate volume grows ~n²/2^planes: below this the plain SQL
+# plan is cheaper than the gather tier's fixed costs (repartition +
+# broadcasts + corpus collect).  Measured on a 4-core box (local[4], one
+# process per input, bt_mat built once, noop-write sink, 4 interleaved
+# reps; rows identical between the tiers), `ann_topk_lsh` medians:
+#     vectors                     SQL tier   gather tier   faster in
+#       500 (sf0.01)              2.35 s     3.86 s        SQL, 4/4
+#     1,000 (make_sf 0.5, seed 5) 2.34 s     2.95 s        SQL, 4/4
+#     1,500 (make_sf 0.75)        4.24 s     3.94 s        gather, 3/4
+#     2,000 (sf0.1)               8.23 s     5.46 s        gather, 4/4
+#     2,000 (make_sf 1, seed 5)   7.84 s     5.48 s        gather, 4/4
+ANN_FAST_MIN = 1_500
 # below this the brute O(n²) pair window (one broadcast join + one
 # window) is the cheaper LOO tier.  Measured on a 4-core box (local[4],
 # one warm process, 4 interleaved reps, make_sf pages; rows equal at

@@ -27,7 +27,6 @@ a requirement).
 
 from __future__ import annotations
 
-import itertools
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -435,9 +434,6 @@ def solve_sgs(
     )
 
 
-_SEAM_VIEW_SEQ = itertools.count()
-
-
 def seam_semivariance(sol: DataFrame, side: int, step: int,
                       var: str = "z") -> dict:
     """Boundary-error diagnostic for the tiled approximation: lag-1
@@ -453,7 +449,8 @@ def seam_semivariance(sol: DataFrame, side: int, step: int,
     'ratio': γ_seam/γ_interior, 'n_seam': ..., 'n_interior': ...}.
 
     Two self-joins on cell arithmetic — scales as the simulation output
-    (equi-join on (real_id, cell_id±1), AQE-splittable), no collect."""
+    (equi-join on (real_id, cell_id±1), AQE-splittable), no collect.
+    A persisted ``sol`` is uncached by the call (Spark's view drop)."""
     spark = sol.sparkSession
     bvals = list(range(step - 1, side - 1, step))
     if not bvals:
@@ -461,11 +458,7 @@ def seam_semivariance(sol: DataFrame, side: int, step: int,
             f"step={step} >= side={side} leaves no tile boundaries — "
             "seam semivariance is undefined for a single-tile layout"
         )
-    # per-call unique suffix: a (side, step)-derived name let two
-    # concurrent diagnostics with the same params clobber each other's
-    # temp view (and the finally-drop could remove the other call's view)
-    name = f"_seam_sol_{next(_SEAM_VIEW_SEQ)}"
-    sol.createOrReplaceTempView(name)
+    name = "{sol}"  # spark.sql's DataFrame argument, bound below
     bcols = ", ".join(str(c) for c in bvals)
     q = f"""
     WITH px AS (
@@ -486,10 +479,7 @@ def seam_semivariance(sol: DataFrame, side: int, step: int,
            count(*) AS n
     FROM allp GROUP BY seam
     """
-    try:
-        rows = {int(r["seam"]): r for r in spark.sql(q).collect()}
-    finally:
-        spark.catalog.dropTempView(name)
+    rows = {int(r["seam"]): r for r in spark.sql(q, sol=sol).collect()}
     if 0 not in rows or 1 not in rows:
         raise ValueError(
             "no adjacent-pair data for seam or interior — is the "

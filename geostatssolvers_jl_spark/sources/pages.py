@@ -81,8 +81,7 @@ def load_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-side pages table with full input_hint schema (timestamp +
     binary html) from the driver's documents parquet."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.createOrReplaceTempView("__documents_src")
-    df = spark.sql(pages_sql("__documents_src"))
+    df = spark.sql(pages_sql("{docs}"), docs=docs)
     return df.selectExpr(
         "url",
         "CAST(warc_epoch AS TIMESTAMP) AS warc_ts",

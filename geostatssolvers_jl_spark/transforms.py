@@ -27,13 +27,9 @@ table-lookup form.
 
 from __future__ import annotations
 
-import itertools
-
 import numpy as np
 
 from .tiling import cell_expr
-
-_VIEW_SEQ = itertools.count()
 
 # Acklam (2003) inverse-normal-CDF coefficients (public domain)
 _A = (-3.969683028665376e+01, 2.209460984245205e+02,
@@ -180,14 +176,10 @@ FROM _u"""
 
 def nscore(spark, points_df, *, val_col: str = "z",
            id_col: str = "data_id", bucket_width: float | None = None):
-    """Library wrapper: forward normal-score transform as a DataFrame."""
-    seq = next(_VIEW_SEQ)
-    rel = f"_nscore_pts_{seq}"
-    points_df.createOrReplaceTempView(rel)
-    out = spark.sql(nscore_sql(rel, val_col=val_col, id_col=id_col,
-                               bucket_width=bucket_width))
-    spark.catalog.dropTempView(rel)
-    return out
+    """Library wrapper: forward normal-score transform as a DataFrame.
+    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
+    return spark.sql(nscore_sql("{pts}", val_col=val_col, id_col=id_col,
+                                bucket_width=bucket_width), pts=points_df)
 
 
 def nscore_back_np(y_new: np.ndarray, z_anchor: np.ndarray,
@@ -253,10 +245,6 @@ FROM ({w}) _w"""
 
 
 def decluster_weights(spark, points_df, res: int, **kw):
-    """Library wrapper: per-point declustering weights as a DataFrame."""
-    seq = next(_VIEW_SEQ)
-    rel = f"_declus_pts_{seq}"
-    points_df.createOrReplaceTempView(rel)
-    out = spark.sql(decluster_weights_sql(rel, res, **kw))
-    spark.catalog.dropTempView(rel)
-    return out
+    """Library wrapper: per-point declustering weights as a DataFrame.
+    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
+    return spark.sql(decluster_weights_sql("{pts}", res, **kw), pts=points_df)

@@ -36,8 +36,6 @@ sill) plugs straight into `solve_kriging` / the simulation solvers.
 
 from __future__ import annotations
 
-import itertools
-
 import numpy as np
 
 from .variogram import (
@@ -46,8 +44,6 @@ from .variogram import (
     SphericalVariogram,
     Variogram,
 )
-
-_VIEW_SEQ = itertools.count()
 
 # tile subdivision of the pair join (r7): tiles are maxlag/SUBDIV wide
 # and the left side replicates into the ±SUBDIV ring.  SUBDIV=1 is the
@@ -168,15 +164,11 @@ def empirical_variogram(spark, points_df, maxlag: float, nlags: int = 10,
                         val_col: str = "z", id_col: str = "data_id",
                         tiled: bool = True):
     """Library wrapper: empirical variogram of ``points_df``
-    (id, x, y, value) as a DataFrame of non-empty lag bins."""
-    seq = next(_VIEW_SEQ)
-    rel = f"_vgram_pts_{seq}"
-    points_df.createOrReplaceTempView(rel)
-    out = spark.sql(empirical_variogram_sql(
-        rel, maxlag, nlags, coord_cols=coord_cols, val_col=val_col,
-        id_col=id_col, tiled=tiled))
-    spark.catalog.dropTempView(rel)
-    return out
+    (id, x, y, value) as a DataFrame of non-empty lag bins.
+    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
+    return spark.sql(empirical_variogram_sql(
+        "{pts}", maxlag, nlags, coord_cols=coord_cols, val_col=val_col,
+        id_col=id_col, tiled=tiled), pts=points_df)
 
 
 def indicator_variogram_sql(points_rel: str, threshold: float,
@@ -253,14 +245,10 @@ FROM _binned GROUP BY bin"""
 
 def robust_variogram(spark, points_df, maxlag: float, nlags: int = 10,
                      *, estimator: str = "cressie", **kw):
-    """Library wrapper for `robust_variogram_sql`."""
-    seq = next(_VIEW_SEQ)
-    rel = f"_rvgram_pts_{seq}"
-    points_df.createOrReplaceTempView(rel)
-    out = spark.sql(robust_variogram_sql(
-        rel, maxlag, nlags, estimator=estimator, **kw))
-    spark.catalog.dropTempView(rel)
-    return out
+    """Library wrapper for `robust_variogram_sql`.
+    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
+    return spark.sql(robust_variogram_sql(
+        "{pts}", maxlag, nlags, estimator=estimator, **kw), pts=points_df)
 
 
 def cross_variogram_sql(points_rel: str, maxlag: float, nlags: int = 10,
@@ -308,15 +296,11 @@ def cross_variogram(spark, points_df, maxlag: float, nlags: int = 10,
                     val_col: str = "z", val2_col: str = "z2",
                     id_col: str = "data_id", tiled: bool = True):
     """Library wrapper: empirical cross-variogram of ``points_df``
-    (id, x, y, value1, value2) as a DataFrame of non-empty lag bins."""
-    seq = next(_VIEW_SEQ)
-    rel = f"_xvgram_pts_{seq}"
-    points_df.createOrReplaceTempView(rel)
-    out = spark.sql(cross_variogram_sql(
-        rel, maxlag, nlags, coord_cols=coord_cols, val_col=val_col,
-        val2_col=val2_col, id_col=id_col, tiled=tiled))
-    spark.catalog.dropTempView(rel)
-    return out
+    (id, x, y, value1, value2) as a DataFrame of non-empty lag bins.
+    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
+    return spark.sql(cross_variogram_sql(
+        "{pts}", maxlag, nlags, coord_cols=coord_cols, val_col=val_col,
+        val2_col=val2_col, id_col=id_col, tiled=tiled), pts=points_df)
 
 
 # tan(22.5°) / tan(67.5°): azimuth-sector boundaries spelled as pure
@@ -382,13 +366,10 @@ FROM _binned GROUP BY sector, bin"""
 
 def directional_variogram(spark, points_df, maxlag: float, nlags: int = 10,
                           **kw):
-    """Library wrapper for `directional_variogram_sql`."""
-    seq = next(_VIEW_SEQ)
-    rel = f"_vgram_pts_{seq}"
-    points_df.createOrReplaceTempView(rel)
-    out = spark.sql(directional_variogram_sql(rel, maxlag, nlags, **kw))
-    spark.catalog.dropTempView(rel)
-    return out
+    """Library wrapper for `directional_variogram_sql`.
+    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
+    return spark.sql(directional_variogram_sql("{pts}", maxlag, nlags, **kw),
+                     pts=points_df)
 
 
 # --------------------------------------------------------------- fitting

@@ -34,12 +34,9 @@ sample-on-driver tier.
 
 from __future__ import annotations
 
-import itertools
 from dataclasses import dataclass
 
 from .similarity import DIM, _emb_double, _sqdist_sql
-
-_SEQ = itertools.count()
 
 
 def _elem(dialect: str, arr: str, pos: str) -> str:
@@ -209,18 +206,15 @@ def kmeans_fit_spark(spark, emb_df, n_centroids: int | None = None,
     bounded hash-mod sample as ``ann_topk_ivf`` and seeds from it the
     way ``kmeans_centroids_np`` does, so the two tiers start identically
     on the same corpus.  Early-stops when the max per-coordinate
-    centroid shift is ≤ ``tol``."""
+    centroid shift is ≤ ``tol``.  A persisted ``emb_df`` is uncached by
+    the call (Spark's view drop)."""
     import numpy as np
 
     from ..planner import choose_ivf
 
-    seq = next(_SEQ)
-    erel = f"_km_emb_{seq}"
-    emb_df.createOrReplaceTempView(erel)
     embd = spark.sql(
-        f"SELECT vec_id, e FROM "
-        f"{_emb_double('spark', erel, 'e')} _t")
-    embd = embd.persist()
+        f"SELECT vec_id, e FROM {_emb_double('spark', '{emb}', 'e')} _t",
+        emb=emb_df).persist()
     try:
         n = embd.count()
         if n == 0:
@@ -281,7 +275,6 @@ def kmeans_fit_spark(spark, emb_df, n_centroids: int | None = None,
                 break
     finally:
         embd.unpersist()
-        spark.catalog.dropTempView(erel)
     return KMeansResult(centroids=cent, sizes=sizes, inertia=inertia,
                         n_iter=it)
 

@@ -25,10 +25,6 @@ form the gate twins against DuckDB.
 
 from __future__ import annotations
 
-import itertools
-
-_VIEW_SEQ = itertools.count()
-
 # damping 0.85 as an exact integer ratio
 _D_NUM, _D_DEN = 17, 20
 # PER-NODE micro-unit scale: a rank of 1_000_000 is the corpus average,

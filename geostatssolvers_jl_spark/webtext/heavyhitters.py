@@ -28,10 +28,6 @@ shuffles only sketch partials and candidate counts.
 
 from __future__ import annotations
 
-import itertools
-
-_VIEW_SEQ = itertools.count()
-
 
 def _mg_reduce(counts, m: int):
     """Reduce a weight Series to a size-m Misra–Gries summary: subtract
@@ -79,7 +75,8 @@ def heavy_hitters(spark, docs_df, phi: float = 0.001,
     """Exact frequent tokens via the sketch-prune + recount plan:
     (token, cnt) for every token whose occurrence count ≥ φ·N, N the
     total token count.  Guaranteed equal to the brute GROUP BY
-    answer (module docstring)."""
+    answer (module docstring).  A persisted ``docs_df`` is uncached by
+    the call (Spark's view drop)."""
     from pyspark.sql import functions as F
 
     from .ranking import word_select
@@ -87,12 +84,10 @@ def heavy_hitters(spark, docs_df, phi: float = 0.001,
     if not (0.0 < phi <= 1.0):
         raise ValueError("heavy_hitters: phi must be in (0, 1]")
     m = max(2, int(-(-2.0 // phi)))  # ceil(2/phi) — m > 1/phi
-    seq = next(_VIEW_SEQ)
-    rel = f"_hh_docs_{seq}"
-    docs_df.createOrReplaceTempView(rel)
+    words = word_select("spark", "{docs}", "doc_id", text_col)
     toks = spark.sql(
-        f"SELECT w FROM ({word_select('spark', rel, 'doc_id', text_col)})"
-        f" _w WHERE length(w) >= {int(min_len)}").persist()
+        f"SELECT w FROM ({words}) _w WHERE length(w) >= {int(min_len)}",
+        docs=docs_df).persist()
     try:
         n_total = toks.count()
         if n_total == 0:
@@ -117,7 +112,6 @@ def heavy_hitters(spark, docs_df, phi: float = 0.001,
         return spark.createDataFrame(rows, "token string, cnt long")
     finally:
         toks.unpersist()
-        spark.catalog.dropTempView(rel)
 
 
 def heavy_hitters_oracle_sql(dialect: str, rel: str = "documents",

@@ -52,11 +52,7 @@ of the full train + score pipeline.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame
-
-_VIEW_SEQ = itertools.count()
 
 
 def trigram_select(dialect: str, rel: str, cols: str,
@@ -236,12 +232,11 @@ def langid_model_sql(dialect: str, train_rel: str = "documents",
     table is the model's natural materialization point — BOUNDED at
     |langs| × vocab_topk rows however large the corpus — and everything
     upstream derives from it, so the `langid_model` wrapper computes it
-    in ONE explode scan and re-registers it as a LOCAL relation
-    (persisted temp views are a trap here: Spark re-inlines CTEs, and
-    ``dropTempView`` UNCACHES dependent plans, so a view-backed persist
-    silently evicted the moment the wrapper cleaned up its views —
-    measured as the full explode re-running five times inside one
-    scoring query).  Values are identical either way; the DuckDB oracle
+    in ONE explode scan and lands it as a LOCAL relation (a persist is
+    a trap here: Spark re-inlines CTEs, and dropping the view that
+    binds a persisted frame to the scoring query uncaches it — measured
+    as the full explode re-running five times inside one scoring
+    query).  Values are identical either way; the DuckDB oracle
     keeps the inline CTEs (with the identical top-K window), which
     DuckDB evaluates once."""
     score_rel = score_rel or train_rel
@@ -309,9 +304,10 @@ def langid_model(spark, train_df: DataFrame,
     DISTRIBUTEDLY to the ``vocab_topk`` most frequent trigrams per
     language (Cavnar–Trenkle; the enforced bound that keeps the collect
     ≤ |langs| × K rows on any corpus size), lands it as a LOCAL relation
-    (the model's natural materialization point — no persist, no
-    view-dependency, nothing for dropTempView to uncache), then runs the
-    scoring query against it."""
+    (the model's natural materialization point — no persist, so nothing
+    for the query's view drop to uncache), then runs the scoring query
+    against it.  A persisted ``train_df`` or ``score_df`` is uncached by
+    the call (Spark's view drop)."""
     return _run_with_local_model(
         spark, train_df, score_df, vocab_topk,
         lambda trel, srel, crel, mrel: langid_model_sql(
@@ -327,7 +323,9 @@ def lm_quality(spark, train_df: DataFrame,
                model: DataFrame | None = None) -> DataFrame:
     """Library wrapper for `lm_quality_sql` — same local-model
     materialization as `langid_model` (one explode scan trains both;
-    ``model=`` from `train_trigram_model` skips it entirely)."""
+    ``model=`` from `train_trigram_model` skips it entirely).  A
+    persisted ``train_df`` or ``score_df`` is uncached by the call
+    (Spark's view drop)."""
     return _run_with_local_model(
         spark, train_df, score_df, vocab_topk,
         lambda trel, srel, crel, mrel: lm_quality_sql(
@@ -361,12 +359,10 @@ def train_trigram_model(spark, train_df: DataFrame,
     ``vocab_topk`` story applies to every scorer reusing the model).
     Priors and the Laplace floor are NOT part of this artifact — they
     derive from cheap column aggregates of the train corpus inside the
-    scoring query."""
-    seq = next(_VIEW_SEQ)
-    trel = f"_lm_fit_{seq}"
-    _spread(train_df).createOrReplaceTempView(trel)
-    rows = spark.sql(pruned_count_sql("spark", trel, vocab_topk)).collect()
-    spark.catalog.dropTempView(trel)
+    scoring query.  A persisted ``train_df`` is uncached by the call
+    (Spark's view drop)."""
+    rows = spark.sql(pruned_count_sql("spark", "{train}", vocab_topk),
+                     train=_spread(train_df)).collect()
     if not rows:
         # an empty model would make the scoring cross-join emit ZERO
         # rows — silently violating the one-row-per-scored-document
@@ -510,27 +506,18 @@ def _run_with_local_model(spark, train_df: DataFrame,
                           score_df: DataFrame | None,
                           vocab_topk: int | None, build_sql,
                           model: DataFrame | None = None) -> DataFrame:
-    seq = next(_VIEW_SEQ)
-    trel, srel = f"_lm_train_{seq}", f"_lm_score_{seq}"
-    crel, mrel = f"_lm_cnt_{seq}", f"_lm_match_{seq}"
-    _spread(train_df).createOrReplaceTempView(trel)
-    scored_df = (_spread(score_df) if score_df is not None
-                 else spark.table(trel))
-    scored_df.createOrReplaceTempView(srel)
+    train = _spread(train_df)
+    scored = _spread(score_df) if score_df is not None else train
     local = (model if model is not None
              else train_trigram_model(spark, train_df, vocab_topk))
-    local.createOrReplaceTempView(crel)
     # kernel tier: the model is local by construction here (≤ |langs| ×
     # vocab_topk rows), so collect its engine-evaluated dlp table and
     # score the corpus with `match_scores_kernel`; the plain-SQL chain
     # remains the oracle and the no-local-model form of the builders
-    madj = spark.sql(_madj_collect_sql(crel)).collect()
+    madj = spark.sql(_madj_collect_sql("{cnt}"), cnt=local).collect()
     langs = sorted({r.lang for r in madj})
-    match_scores_kernel(spark, scored_df, madj, langs) \
-        .createOrReplaceTempView(mrel)
-    out = spark.sql(build_sql(trel, srel, crel, mrel))
-    # spark.sql resolves views eagerly at analysis, so dropping them now
-    # is safe (nothing is persisted, so nothing gets uncached)
-    for v in (trel, srel, crel, mrel):
-        spark.catalog.dropTempView(v)
-    return out
+    match = match_scores_kernel(spark, scored, madj, langs)
+    # spark.sql analyses the query before it drops the argument views,
+    # and nothing here is persisted, so the drops uncache nothing
+    return spark.sql(build_sql("{train}", "{score}", "{cnt}", "{match}"),
+                     train=train, score=scored, cnt=local, match=match)

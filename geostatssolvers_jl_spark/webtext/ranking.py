@@ -36,12 +36,8 @@ with vocabulary size, and the only corpus-sized relations are scans
 
 from __future__ import annotations
 
-import itertools
-
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
-
-_VIEW_SEQ = itertools.count()
 
 
 def word_select(dialect: str, rel: str, cols: str,
@@ -115,13 +111,12 @@ FROM _top"""
 def bm25_rank(spark, docs_df, terms: tuple[str, ...],
               k1: float = DEFAULT_K1, b: float = DEFAULT_B,
               topk: int = 10):
-    """Library wrapper: rank ``docs_df`` (doc_id, text) for ``terms``."""
-    seq = next(_VIEW_SEQ)
-    rel = f"_bm25_docs_{seq}"
-    docs_df.createOrReplaceTempView(rel)
-    out = spark.sql(bm25_rank_sql("spark", terms, rel, k1, b, topk))
-    spark.catalog.dropTempView(rel)
-    return out
+    """Library wrapper: rank ``docs_df`` (doc_id, text) for ``terms``.
+    A persisted ``docs_df`` is uncached by the call (Spark's view drop)."""
+    # the text goes through str.format: a brace in a term is doubled
+    esc = tuple(t.replace("{", "{{").replace("}", "}}") for t in terms)
+    return spark.sql(bm25_rank_sql("spark", esc, "{docs}", k1, b, topk),
+                     docs=docs_df)
 
 
 def tfidf_topterms_sql(dialect: str, rel: str = "documents",
@@ -168,10 +163,7 @@ FROM _rk WHERE rank <= {int(topk)}"""
 
 
 def tfidf_topterms(spark, docs_df, topk: int = 5, min_len: int = 2):
-    """Library wrapper: per-document top-``topk`` tf-idf keywords."""
-    seq = next(_VIEW_SEQ)
-    rel = f"_tfidf_docs_{seq}"
-    docs_df.createOrReplaceTempView(rel)
-    out = spark.sql(tfidf_topterms_sql("spark", rel, topk, min_len))
-    spark.catalog.dropTempView(rel)
-    return out
+    """Library wrapper: per-document top-``topk`` tf-idf keywords.
+    A persisted ``docs_df`` is uncached by the call (Spark's view drop)."""
+    return spark.sql(tfidf_topterms_sql("spark", "{docs}", topk, min_len),
+                     docs=docs_df)

@@ -13,8 +13,6 @@ key is the shuffle key; bucket skew is bounded by the number of planes.
 
 from __future__ import annotations
 
-import itertools
-
 N_PLANES = 8
 DIM = 64
 
@@ -287,125 +285,59 @@ def _auto_planes(emb_df, n_planes: int | None) -> int:
     return choose_planes(emb_df.count())
 
 
-_AUTO_VIEW_SEQ = itertools.count()
-
-# one live auto-wrapper bucket persist per application: repeated
-# ann_topk/dedup_embedding calls otherwise accumulate a pinned
-# InMemoryRelation each (the handle never reached the caller), degrading
-# other caches under storage pressure.  Entries are (owning
-# SparkSession, persisted bucket DataFrame); atomic under the lock
-# because the gate runs arms concurrently.
-_LAST_BUCKETS: dict = {}
-_BUCKETS_LOCK = __import__("threading").Lock()
-
-
 def _prepare_auto(spark, emb_df, n_planes, n_tables, dim):
-    """Shared wrapper plumbing: per-call UNIQUE view names (a fixed shared
-    name is mutable state — concurrent callers would interleave
-    createOrReplaceTempView and spark.sql analysis and silently resolve
-    the wrong corpus), and a PERSISTED (vec_id, tbl, bucket) relation
-    passed as ``bt_rel`` so the n_tables×n_planes×dim bucket arithmetic
-    runs once, not once per probe arm and join side (Spark inlines CTEs —
-    the same trap the gate entries dodge via their materialized view).
+    """Shared wrapper plumbing: the auto-tuned plane count and a
+    CHECKPOINTED (vec_id, tbl, bucket) relation, passed as ``bt_rel`` so
+    the n_tables×n_planes×dim bucket arithmetic runs once, not once per
+    probe arm and join side (Spark inlines CTEs — the same trap the gate
+    entries dodge via their materialized view).
 
-    Returns (emb_rel, bt_rel, n_planes, cleanup).  ``cleanup()`` drops
-    ONLY the source view (``emb_rel``) — safe right after ``spark.sql``
-    because analysis resolves views eagerly, and dropping a view a
-    persisted frame was built FROM leaves the cache alone.  The
-    ``bt_rel`` view is NOT dropped there: ``dropTempView`` UNCACHES a
-    view registered over a persisted DataFrame (measured — the bucket
-    persist silently evaporated before execution), so the bucket view
-    lives until the NEXT wrapper call evicts the persist and drops it
-    together.  The bucket persist itself is evictable storage (tiny:
-    n_vectors × n_tables rows); long-lived services wanting explicit
-    lifetime control should build `bucket_tables_sql` themselves and
-    call the *_sql builders."""
+    A checkpoint, not a persist: the query binds the table as a view
+    argument, and dropping a view over a persisted frame uncaches it.
+    The checkpoint is a leaf that survives the drop; Spark's
+    ``ContextCleaner`` frees its blocks once no result reads it.
+
+    Built by `vecops.bucket_tables_kernel` (same rows as
+    `bucket_tables_sql`, pytest-pinned; one vectorized pass instead of
+    n_tables × n_planes interpreted folds per vector).  The input is
+    repartitioned first — a single-file corpus scans as 1–2 tasks, which
+    would serialize the kernel AND pin every downstream no-shuffle
+    stage to that width (the `_mat_buckets` lesson).
+
+    Returns (bucket DataFrame, n_planes)."""
+    from .vecops import bucket_tables_kernel
+
     p = _auto_planes(emb_df, n_planes)
-    seq = next(_AUTO_VIEW_SEQ)
-    emb_rel = f"_emb_auto_{seq}"
-    bt_rel = f"_bt_auto_{seq}"
-    emb_df.createOrReplaceTempView(emb_rel)
-    # evict the PREVIOUS call's persisted bucket table BEFORE persisting
-    # the new one: a repeated call over the same corpus yields the
-    # identical analyzed plan, CacheManager dedupes persist() by plan,
-    # and an unpersist-after would evict the shared entry and leave the
-    # new relation silently uncached.  (unpersist keeps lineage, so a
-    # caller still lazily holding the prior result recomputes, not
-    # fails.)  Bounds the wrapper to one live persist per application.
-    # the WHOLE evict → persist → store sequence runs under the lock
-    # (like the tiled pairs cache): releasing it between pop and store
-    # lets two concurrent arms both pop, both persist, and the second
-    # store strand the first persist — the exact leak this cache bounds.
-    # Cross-SESSION note: entries are keyed by applicationId (the cache
-    # manager is context-wide), so an eviction from a different session
-    # of the same context unpersists the data but cannot drop the other
-    # session's view — that leak is bounded by the number of sessions.
-    app = spark.sparkContext.applicationId
-    with _BUCKETS_LOCK:
-        prev = _LAST_BUCKETS.pop(app, None)
-        if prev is not None:
-            prev_spark, prev_bt, prev_view = prev
-            try:
-                prev_bt.unpersist()
-            except Exception:
-                pass
-            try:
-                if prev_spark is spark:
-                    spark.catalog.dropTempView(prev_view)
-            except Exception:
-                pass
-        # kernel build (r7 second session): same rows as
-        # `bucket_tables_sql` (pytest-pinned), one vectorized pass
-        # instead of n_tables × n_planes interpreted folds per vector.
-        # Repartition first — a single-file corpus scans as 1–2 tasks,
-        # which would serialize the kernel AND pin every downstream
-        # no-shuffle stage of the persisted relation to that width
-        # (the `_mat_buckets` lesson)
-        from .vecops import bucket_tables_kernel
-
-        bt = bucket_tables_kernel(
-            spark,
-            emb_df.repartition(spark.sparkContext.defaultParallelism),
-            p, n_tables, dim)
-        bt.persist().createOrReplaceTempView(bt_rel)
-        _LAST_BUCKETS[app] = (spark, bt, bt_rel)
-
-    def cleanup():
-        spark.catalog.dropTempView(emb_rel)
-
-    return emb_rel, bt_rel, p, cleanup
+    bt = bucket_tables_kernel(
+        spark, emb_df.repartition(spark.sparkContext.defaultParallelism),
+        p, n_tables, dim).localCheckpoint()
+    return bt, p
 
 
 def ann_topk(spark, emb_df, k: int = 3, n_planes: int | None = None,
              n_tables: int = 6, dim: int = DIM):
     """Composed multi-table bucketed ANN top-k over an embeddings
     DataFrame (vec_id, embedding array<float>).  ``n_planes=None`` →
-    auto-tuned from the corpus count."""
-    emb_rel, bt_rel, p, cleanup = _prepare_auto(
-        spark, emb_df, n_planes, n_tables, dim
-    )
-    out = spark.sql(
-        ann_topk_lsh_sql("spark", emb_rel, k=k, n_planes=p,
-                         n_tables=n_tables, dim=dim, bt_rel=bt_rel)
-    )
-    cleanup()
-    return out
+    auto-tuned from the corpus count.  A persisted ``emb_df`` is
+    uncached by the call (Spark's view drop)."""
+    bt, p = _prepare_auto(spark, emb_df, n_planes, n_tables, dim)
+    return spark.sql(
+        ann_topk_lsh_sql("spark", "{emb}", k=k, n_planes=p,
+                         n_tables=n_tables, dim=dim, bt_rel="{bt}"),
+        emb=emb_df, bt=bt)
 
 
 def dedup_embedding(spark, emb_df, threshold: float = 0.35,
                     n_planes: int | None = None, n_tables: int = 6,
                     dim: int = DIM):
-    """Embedding near-dup pairs through auto-tuned LSH buckets."""
-    emb_rel, bt_rel, p, cleanup = _prepare_auto(
-        spark, emb_df, n_planes, n_tables, dim
-    )
-    out = spark.sql(
-        dedup_embedding_lsh_sql("spark", emb_rel, threshold=threshold,
+    """Embedding near-dup pairs through auto-tuned LSH buckets.  A
+    persisted ``emb_df`` is uncached by the call (Spark's view drop)."""
+    bt, p = _prepare_auto(spark, emb_df, n_planes, n_tables, dim)
+    return spark.sql(
+        dedup_embedding_lsh_sql("spark", "{emb}", threshold=threshold,
                                 n_planes=p, n_tables=n_tables, dim=dim,
-                                bt_rel=bt_rel)
-    )
-    cleanup()
-    return out
+                                bt_rel="{bt}"),
+        emb=emb_df, bt=bt)
 
 
 # ---- IVF (inverted-file) ANN — the second scale path ---------------------
@@ -596,7 +528,8 @@ def ann_topk_ivf(spark, emb_df, k: int = 3,
     FULL corpus (one mapInPandas scan + one model-sized shuffle per
     iteration, seeded from the same sample) — the scale tier when the
     corpus no longer resembles any 4096-row sample.  Both land the same
-    k×d relation; the SQL downstream is identical."""
+    k×d relation; the SQL downstream is identical.  A persisted
+    ``emb_df`` is uncached by the call (Spark's view drop)."""
     from ..planner import choose_ivf
 
     if trainer not in ("sample", "spark"):
@@ -611,9 +544,6 @@ def ann_topk_ivf(spark, emb_df, k: int = 3,
         # silent brute force (review finding r6)
         nprobe = max(2, n_centroids // 8)
     nprobe = min(nprobe, n_centroids)
-    seq = next(_AUTO_VIEW_SEQ)
-    erel, crel = f"_ivf_emb_{seq}", f"_ivf_cent_{seq}"
-    emb_df.createOrReplaceTempView(erel)
     # hash-mod sampling: a raw `vec_id % step` filter only bounds the
     # collect for DENSE 0..n-1 ids — sharded/aligned id spaces (all ids
     # multiples of step) would collect everything (review finding r6).
@@ -622,8 +552,8 @@ def ann_topk_ivf(spark, emb_df, k: int = 3,
     step = max(1, -(-n // sample_cap))
     sample = spark.sql(
         f"SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) "
-        f"AS e FROM {erel} WHERE pmod(hash(vec_id), {step}) = 0 "
-        f"ORDER BY vec_id LIMIT {int(sample_cap)}"
+        f"AS e FROM {{emb}} WHERE pmod(hash(vec_id), {step}) = 0 "
+        f"ORDER BY vec_id LIMIT {int(sample_cap)}", emb=emb_df
     ).collect()
     cent = kmeans_centroids_np(
         [r["e"] for r in sample], n_centroids, seed=seed)
@@ -640,12 +570,9 @@ def ann_topk_ivf(spark, emb_df, k: int = 3,
         [(i, [float(x) for x in c]) for i, c in enumerate(cent)],
         "cid long, c array<double>",
     )
-    local.createOrReplaceTempView(crel)
-    out = spark.sql(ann_topk_ivf_sql(
-        "spark", erel, k=k, nprobe=nprobe, dim=dim, cent_rel=crel))
-    for v in (erel, crel):
-        spark.catalog.dropTempView(v)
-    return out
+    return spark.sql(ann_topk_ivf_sql(
+        "spark", "{emb}", k=k, nprobe=nprobe, dim=dim, cent_rel="{cent}"),
+        emb=emb_df, cent=local)
 
 
 # ------------------------------------------------------------- r7 fast tier
@@ -684,8 +611,8 @@ def _score_distinct_pairs(spark, cand, emb_rel: str, dim: int = DIM,
                           known_n: int | None = None):
     """DISTINCT (qid, nid) candidate pairs → (qid, nid, cos_sim).
 
-    Scoring tier (r7, interleaved min-of-3 on the 86M-unordered-pair
-    sf1.0 shape): the bounded GATHER KERNEL
+    Scoring tier (r7, 32 cores, interleaved min-of-3 on the
+    86M-unordered-pair sf1.0 shape): the bounded GATHER KERNEL
     (`vecops.gather_score_pairs` — mapInPandas over only the pair ids,
     with the ≤`GATHER_SCORE_LIMIT`-row corpus matrix riding the task
     closure; at 20k×64 doubles the matrix is 10 MB, cache-resident)
@@ -699,10 +626,13 @@ def _score_distinct_pairs(spark, cand, emb_rel: str, dim: int = DIM,
 
     ``gather=False`` skips the kernel outright: at the IVF tail's much
     smaller pair volume the kernel's fixed costs (corpus count +
-    toPandas + the Arrow pair round-trip) outweigh the fold — two
-    interleaved entry-level A/Bs at sf1.0 measured fold 3.2–3.5 s vs
-    gather 4.1–5.0 s min-of-N, so `_fast_rank_tail` keeps the fold
-    while the LSH path (86M pairs) uses the kernel.
+    toPandas + the Arrow pair round-trip) outweigh the fold on small
+    corpora.  `ann_topk_ivf_spark` on a 4-core box (local[4], one
+    process per input, noop-write sink, 4 interleaved reps), fold vs
+    gather medians: 500 vectors 1.41 vs 2.87 s, 2,000 vectors 3.40 vs
+    3.92 s, 10,000 vectors 8.12 vs 6.52 s (gather faster 4/4).  So
+    `_fast_rank_tail` keeps the fold, while the LSH path (86M pairs at
+    sf1.0) uses the kernel; the 10,000-vector reversal is an open lead.
 
     Either way the dedupe/score stage stays exchange-free: ``cand`` is
     hash-partitioned by qid upstream, so the DISTINCT runs per task
@@ -737,6 +667,18 @@ def _score_distinct_pairs(spark, cand, emb_rel: str, dim: int = DIM,
     )
 
 
+def _rank_tail_sql(k: int) -> str:
+    """Per-query top-``k`` window over the ``{scored}`` argument
+    (qid, nid, cos_sim) — the shared tail of the fast tiers."""
+    return f"""
+SELECT qid, nid, cos_sim, rank FROM (
+  SELECT qid, nid, cos_sim,
+         row_number() OVER (PARTITION BY qid
+                            ORDER BY cos_sim DESC, nid) AS rank
+  FROM {{scored}} _i
+) _r WHERE rank <= {int(k)}"""
+
+
 def _fast_rank_tail(spark, cand, emb_rel: str, k: int, dim: int = DIM):
     """DISTINCT → exact cosine → window top-k over a candidate-pair
     DataFrame that is ALREADY hash-partitioned by ``qid``.
@@ -748,16 +690,7 @@ def _fast_rank_tail(spark, cand, emb_rel: str, k: int, dim: int = DIM):
     crosses an Exchange before the small post-prune rank exchange."""
     scored = _score_distinct_pairs(spark, cand, emb_rel, dim,
                                    gather=False)
-    seq = next(_AUTO_VIEW_SEQ)
-    rel = f"_ann_scored_{seq}"
-    scored.createOrReplaceTempView(rel)
-    return spark.sql(f"""
-SELECT qid, nid, cos_sim, rank FROM (
-  SELECT qid, nid, cos_sim,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos_sim DESC, nid) AS rank
-  FROM {rel} _i
-) _r WHERE rank <= {int(k)}""")
+    return spark.sql(_rank_tail_sql(k), scored=scored)
 
 
 def ann_topk_lsh_spark(spark, k: int = 3, n_planes: int = 5,
@@ -808,16 +741,7 @@ def ann_topk_lsh_spark(spark, k: int = 3, n_planes: int = 5,
         "explode(array(named_struct('q', qid, 'n', nid), "
         "named_struct('q', nid, 'n', qid))) AS _s", "cos_sim"
     ).selectExpr("_s.q AS qid", "_s.n AS nid", "cos_sim")
-    seq = next(_AUTO_VIEW_SEQ)
-    rel = f"_ann_scored_{seq}"
-    both.createOrReplaceTempView(rel)
-    return spark.sql(f"""
-SELECT qid, nid, cos_sim, rank FROM (
-  SELECT qid, nid, cos_sim,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos_sim DESC, nid) AS rank
-  FROM {rel} _i
-) _r WHERE rank <= {int(k)}""")
+    return spark.sql(_rank_tail_sql(k), scored=both)
 
 
 def ann_topk_ivf_spark(spark, k: int = 3, nprobe: int = 4,

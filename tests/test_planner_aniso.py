@@ -52,7 +52,7 @@ def test_tier_cutovers():
     """Each size cutover of the ANN and LOO entries, on both sides."""
     from geostatssolvers_jl_spark.webtext.vecops import GATHER_SCORE_LIMIT
 
-    assert ANN_FAST_MIN == 10_000 and GATHER_SCORE_LIMIT == 500_000
+    assert ANN_FAST_MIN == 1_500 and GATHER_SCORE_LIMIT == 500_000
     assert ann_tier(0) == "sql"
     assert ann_tier(ANN_FAST_MIN - 1) == "sql"
     assert ann_tier(ANN_FAST_MIN) == "gather"
