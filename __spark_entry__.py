@@ -2221,7 +2221,7 @@ def _kriging_global_oracle() -> str:
     H2 = ((pts[:, None, :] - pts[None, :, :]) ** 2).sum(-1)
     C = np.exp(-3.0 * H2 / r2)  # sill 1, nugget 0 ⇒ C(h)=exp(−3h²/r²)
     A = np.zeros((4, 4))
-    A[:3, :3] = C + 1e-10 * np.eye(3)  # engine's reg (kriging.py:_fit_global)
+    A[:3, :3] = C + 1e-10 * np.eye(3)  # engine's reg (kriging.py:_ridge)
     A[:3, 3] = 1.0
     A[3, :3] = 1.0
     Ainv = np.linalg.inv(A)

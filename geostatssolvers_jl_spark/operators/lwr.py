@@ -42,7 +42,7 @@ def _wls_solve(
     paths.  Other singular rows (exactly collinear coords) fall back to
     pinv PER ROW too — a batch-wide fallback would make every query's
     result depend on which OTHER queries share its Arrow batch (same
-    per-row policy as kriging.solve_systems)."""
+    per-row policy as kriging._solve_bordered)."""
     theta = np.empty_like(b)
     Ginv_x0 = np.empty_like(x0)
     full = nvalid >= G.shape[1]

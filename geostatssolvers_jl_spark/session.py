@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # default shuffle parallelism = the session's core count, DERIVED from
 # the master string (r7): the old literal 32 merely coincided with the
@@ -90,3 +91,16 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def sql_arg(df: DataFrame) -> DataFrame:
+    """``df`` as a ``spark.sql`` DataFrame argument that keeps a caller's
+    cache.  Spark binds the argument as a temporary view and drops it
+    after analysis, and dropping a view uncaches the cached plan equal to
+    the view's own (`CacheManager.uncacheQuery`), so a persisted input
+    bound as is would come back uncached and go unread by the query.  An
+    always-true filter gives the view a plan that no cache entry equals,
+    while the query still reads the cached input (`InMemoryTableScan`);
+    `PruneFilters` removes the filter, so an uncached input plans as
+    before."""
+    return df.filter(F.lit(True))

@@ -219,93 +219,32 @@ def solve_fftgs(
     # The residual-kriging correction runs INSIDE the realization task:
     # each task already holds its full-grid zᵤ, the (small, broadcast)
     # conditioning data gives resid = zdat − zᵤ[data cells] locally, and
-    # the neighbor geometry (search indices / global factorization) is
-    # REAL-INDEPENDENT so it is computed once per task and reused across
-    # the task's realizations.  One Spark job total — no per-realization
+    # `_residual_kriging` reuses the real-independent inverse or search
+    # geometry across the task's realizations.  One job, no per-realization
     # driver loop, no nreals-way union tree, no (real, cell) re-join.
-    from pyspark.sql import functions as Fn
-
-    from ..operators.kriging import KrigingModel
-
-    data_coord_cols = data_coord_cols or ["x", "y"]
-    snap = grid.snap_cell_expr(tuple(data_coord_cols), "cell_id")
-    dcells = (
-        data.filter(f"{var} IS NOT NULL")
-        .selectExpr(f"{snap} AS cell_id", f"{var} AS zdat")
-        # unique cell survivor (fft.jl:133) picked DETERMINISTICALLY (min
-        # value) — dropDuplicates varies with partitioning
-        .groupBy("cell_id").agg(Fn.min("zdat").alias("zdat"))
-    )
-    # size bound: ≤ one row per grid cell holding data (the snapped
-    # conditioning set) — driver-sized like the reference's data view
-    dpdf = dcells.toPandas().sort_values("cell_id").reset_index(drop=True)
-    dcell_ids = dpdf["cell_id"].to_numpy(np.int64)
-    if len(dcell_ids) == 0:
-        raise ValueError(
-            "conditional FFTGS requested but the conditioning data has "
-            "no usable rows (all values NULL after the non-missing "
-            "filter); pass data=None for an unconditional simulation"
-        )
-    zdat = dpdf["zdat"].to_numpy(np.float64)
-    dcoords = grid.centroids_np(dcell_ids)
-    model = KrigingModel(variogram=variogram, mean=0.0)  # SK on residuals
-    met_cond = metric if metric is not None else Euclidean()
-    bc_cond = spark.sparkContext.broadcast(
-        (dcell_ids, zdat, dcoords, model, maxneighbors, krig_radius,
-         met_cond)
-    )
+    _, cond = _conditioning(grid, data, var, data_coord_cols, variogram,
+                            maxneighbors, krig_radius, metric)
+    bc_cond = spark.sparkContext.broadcast(cond)
     chunk = 262_144
+    # cache the per-chunk search geometry while it stays bounded
+    cache_ok = ncells * min(maxneighbors or 0, len(cond[0])) <= 16_000_000
 
     def gen_cond(batches):
-        from ..neighbors import PointData, search
-        from ..operators.kriging import (
-            _fit_global, _predict_global, solve_systems,
-        )
-
         Fb, g, mu0, dd, sd = bc.value
-        ids_d, zd, Xd, mdl, kmax, rad, met = bc_cond.value
-        nd = len(ids_d)
-        pd_data = PointData(coords=Xd, values={}, ids=ids_d)
-        Ainv = None          # global path: factorization, once per task
-        geom_cache: dict = {}  # local path: (idx, dist) per chunk start
-        cache_ok = ncells * min(kmax or 0, nd) <= 16_000_000
+        ids_d, zd = bc_cond.value[:2]
+        correction = _residual_kriging(bc_cond.value)
         for pdf in batches:
             for real_id in pdf["id"].tolist():
                 Z = _one_realization(Fb, g, mu0, dd, sd, real_id)
                 zu = Z.ravel(order="F")
                 resid = zd - zu[ids_d]
-                corr = np.empty(ncells)
-                if kmax is None:
-                    if Ainv is None:
-                        fit0 = _fit_global(
-                            mdl, PointData(Xd, {"z": resid}, ids_d), "z", met
-                        )
-                        Ainv = fit0
-                    fit = dict(Ainv, z=resid)
-                    for s in range(0, ncells, chunk):
-                        e = min(ncells, s + chunk)
-                        q = grid.centroids_np(np.arange(s, e))
-                        corr[s:e] = _predict_global(mdl, fit, q, met)[0]
-                else:
-                    kk = min(kmax, nd)
-                    for s in range(0, ncells, chunk):
-                        e = min(ncells, s + chunk)
-                        if s in geom_cache:
-                            idx, dist = geom_cache[s]
-                        else:
-                            q = grid.centroids_np(np.arange(s, e))
-                            idx, dist, _ = search(pd_data, q, kk, met, rad)
-                            if cache_ok:
-                                geom_cache[s] = (idx, dist)
-                        valid = idx >= 0
-                        zn = resid[np.maximum(idx, 0)] * valid
-                        m_, _ = solve_systems(
-                            mdl, grid.centroids_np(np.arange(s, e)),
-                            Xd[np.maximum(idx, 0)], zn, valid, dist,
-                            met, 1,
-                        )
-                        corr[s:e] = m_
-                z = zu + np.where(np.isfinite(corr), corr, 0.0)
+                z = zu + np.concatenate([
+                    correction(
+                        resid, grid.centroids_np(
+                            np.arange(s, min(ncells, s + chunk))),
+                        s if cache_ok else None)
+                    for s in range(0, ncells, chunk)
+                ])
                 z[ids_d] = zd  # hard data bit-exact at data cells
                 yield pd.DataFrame({
                     "real_id": np.full(ncells, real_id, dtype=np.int64),
@@ -319,6 +258,87 @@ def solve_fftgs(
             gen_cond, schema=f"real_id long, cell_id long, {var} double"
         )
     )
+
+
+def _conditioning(
+    grid: CartesianGrid, data: DataFrame, var: str,
+    data_coord_cols: list[str] | None, variogram: Variogram,
+    maxneighbors: int | None, krig_radius: float | None,
+    metric: Distance | None,
+) -> tuple[DataFrame, tuple]:
+    """The conditioning set: data snapped to grid cells, one survivor per
+    cell (fft.jl:133) picked DETERMINISTICALLY (min value —
+    dropDuplicates varies with partitioning).  Returns the (cell_id,
+    zdat) relation and the collected residual-kriging inputs for
+    `_residual_kriging` (sorted cell ids, values, centroids, the SK
+    model on residuals, k, radius, metric).  Size bound: ≤ one row per
+    grid cell holding data, like the reference's in-memory data view.
+    Fails loud on an empty set: the tiled path's inner join would
+    otherwise silently return ZERO rows."""
+    from pyspark.sql import functions as Fn
+
+    from ..operators.kriging import KrigingModel
+
+    snap = grid.snap_cell_expr(tuple(data_coord_cols or ["x", "y"]),
+                               "cell_id")
+    dcells = (
+        data.filter(f"{var} IS NOT NULL")
+        .selectExpr(f"{snap} AS cell_id", f"{var} AS zdat")
+        .groupBy("cell_id").agg(Fn.min("zdat").alias("zdat"))
+    )
+    dpdf = dcells.toPandas().sort_values("cell_id")
+    if len(dpdf) == 0:
+        raise ValueError(
+            "conditional FFTGS requested but the conditioning data has "
+            "no usable rows (all values NULL after the non-missing "
+            "filter); pass data=None for an unconditional simulation"
+        )
+    ids = dpdf["cell_id"].to_numpy(np.int64)
+    return dcells, (
+        ids, dpdf["zdat"].to_numpy(np.float64), grid.centroids_np(ids),
+        KrigingModel(variogram=variogram, mean=0.0), maxneighbors,
+        krig_radius, metric if metric is not None else Euclidean(),
+    )
+
+
+def _residual_kriging(cond: tuple):
+    """One task's residual correction ``(resid, q, key) -> corr``: simple
+    kriging (mean 0) of a realization's residuals at the cells ``q``,
+    0 where it is undefined.  The global inverse and the local search
+    geometry do not depend on the realization, so the task computes the
+    inverse once and caches the geometry under ``key`` (None: no cache).
+    One `PointData` per task: its bucket index is built lazily per object."""
+    from ..neighbors import PointData, search
+    from ..operators.kriging import (
+        _fit_global, _predict_global, solve_systems,
+    )
+
+    ids_d, _, Xd, model, kmax, rad, met = cond
+    data = PointData(coords=Xd, values={}, ids=ids_d)
+    fit: dict = {}
+    geom: dict = {}
+
+    def correction(resid, q, key):
+        if kmax is None:
+            if not fit:
+                fit.update(_fit_global(
+                    model, PointData(Xd, {"z": resid}, ids_d), "z", met))
+            corr = _predict_global(model, dict(fit, z=resid), q, met)[0]
+        else:
+            if key in geom:
+                idx, dist = geom[key]
+            else:
+                idx, dist, _ = search(data, q, min(kmax, len(ids_d)), met,
+                                      rad)
+                if key is not None:
+                    geom[key] = (idx, dist)
+            valid = idx >= 0
+            safe = np.maximum(idx, 0)
+            corr = solve_systems(model, q, Xd[safe], resid[safe] * valid,
+                                 valid, dist, met, 1)[0]
+        return np.where(np.isfinite(corr), corr, 0.0)
+
+    return correction
 
 
 def _solve_fftgs_tiled(
@@ -375,30 +395,10 @@ def _solve_fftgs_tiled(
     # ---- conditional: pass A — zᵤ at data cells ------------------------
     from pyspark.sql import functions as Fn
 
-    from ..operators.kriging import KrigingModel
-
-    data_coord_cols = data_coord_cols or ["x", "y"]
-    snap = grid.snap_cell_expr(tuple(data_coord_cols), "cell_id")
-    dcells = (
-        data.filter(f"{var} IS NOT NULL")
-        .selectExpr(f"{snap} AS cell_id", f"{var} AS zdat")
-        .groupBy("cell_id").agg(Fn.min("zdat").alias("zdat"))
-    )
-    # size bound: ≤ one row per grid cell holding data (the snapped
-    # conditioning set) — driver-sized like the reference's data view
-    dpdf = dcells.toPandas().sort_values("cell_id").reset_index(drop=True)
-    dcell_ids = dpdf["cell_id"].to_numpy(np.int64)
-    if len(dcell_ids) == 0:
-        # fail loud: the inner-join of units to per_real would otherwise
-        # silently return ZERO rows for a conditional solve whose data
-        # was entirely NULL — the opposite of the engine's contract
-        raise ValueError(
-            "conditional FFTGS requested but the conditioning data has "
-            "no usable rows (all values NULL after the non-missing "
-            "filter); pass data=None for an unconditional simulation"
-        )
-    zdat = dpdf["zdat"].to_numpy(np.float64)
-    dcoords = grid.centroids_np(dcell_ids)
+    dcells, cond = _conditioning(grid, data, var, data_coord_cols,
+                                 variogram, maxneighbors, krig_radius,
+                                 metric)
+    dcell_ids = cond[0]
     nx = grid.dims[0]
     di, dj = dcell_ids % nx, dcell_ids // nx
     data_tiles = sorted({
@@ -406,11 +406,11 @@ def _solve_fftgs_tiled(
         if ((di >= tl["ix0"]) & (di < tl["ix1"])
             & (dj >= tl["iy0"]) & (dj < tl["iy1"])).any()
     })
-    bc_d = spark.sparkContext.broadcast((dcell_ids, data_tiles))
+    bc_cond = spark.sparkContext.broadcast(cond)
 
     def gen_at_data(batches):
         g_, tl_, vg_, mu_, sd_, met_ = bc.value
-        ids_d, dts = bc_d.value
+        ids_d, dts = bc_cond.value[0], data_tiles
         cache: dict = {}
         for pdf in batches:
             for unit in pdf["id"].tolist():
@@ -473,30 +473,17 @@ def _solve_fftgs_tiled(
         # per-tile FFT work keeps its parallelism
         .repartition(min(nunits, 64), "real_id", "ti")
     )
-    model = KrigingModel(variogram=variogram, mean=0.0)
-    met_cond = metric if metric is not None else Euclidean()
-    bc_cond = spark.sparkContext.broadcast(
-        (dcell_ids, zdat, dcoords, model, maxneighbors, krig_radius,
-         met_cond)
-    )
 
     def gen_cond(batches):
-        from ..neighbors import PointData, search
-        from ..operators.kriging import (
-            _fit_global, _predict_global, solve_systems,
-        )
-
-        g_, tl_, vg_, mu_, sd_, _met_unused = bc.value
-        ids_d, zd, Xd, mdl, kmax, rad, met = bc_cond.value
-        nd = len(ids_d)
-        pd_data = PointData(coords=Xd, values={}, ids=ids_d)
-        fit0 = None
+        g_, tl_, vg_, mu_, sd_, met_ = bc.value
+        ids_d, zd = bc_cond.value[:2]
+        correction = _residual_kriging(bc_cond.value)
         cache: dict = {}
         for pdf in batches:
             for row in pdf.itertuples(index=False):
                 real_id, ti = int(row.real_id), int(row.ti)
                 z, ids = _tile_field(
-                    g_, tl_[ti], vg_, mu_, sd_, real_id, cache, met
+                    g_, tl_[ti], vg_, mu_, sd_, real_id, cache, met_
                 )
                 cells = np.asarray(row.rs_cells, dtype=np.int64)
                 resid = np.asarray(row.rs_resid, dtype=np.float64)
@@ -509,25 +496,7 @@ def _solve_fftgs_tiled(
                         "per-real residual vector does not match the "
                         "conditioning cell set"
                     )
-                q = g_.centroids_np(ids)
-                if kmax is None:
-                    if fit0 is None:
-                        fit0 = _fit_global(
-                            mdl, PointData(Xd, {"z": resid}, ids_d), "z", met
-                        )
-                    corr = _predict_global(
-                        mdl, dict(fit0, z=resid), q, met
-                    )[0]
-                else:
-                    kk = min(kmax, nd)
-                    idx, dist, _ = search(pd_data, q, kk, met, rad)
-                    valid = idx >= 0
-                    zn = resid[np.maximum(idx, 0)] * valid
-                    corr, _ = solve_systems(
-                        mdl, q, Xd[np.maximum(idx, 0)], zn, valid, dist,
-                        met, 1,
-                    )
-                z = z + np.where(np.isfinite(corr), corr, 0.0)
+                z = z + correction(resid, g_.centroids_np(ids), None)
                 m_ = np.isin(ids, ids_d)
                 if m_.any():
                     z[m_] = zd[np.searchsorted(ids_d, ids[m_])]

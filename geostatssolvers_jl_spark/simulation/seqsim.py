@@ -38,6 +38,7 @@ from ..distances import (
     Anisotropic, Distance, Euclidean, validate_planar_metric,
 )
 from ..grid import CartesianGrid
+from ..session import sql_arg
 from ..variogram import GaussianVariogram, Variogram, require_stationary
 from .lugs import _centroids
 
@@ -449,8 +450,7 @@ def seam_semivariance(sol: DataFrame, side: int, step: int,
     'ratio': γ_seam/γ_interior, 'n_seam': ..., 'n_interior': ...}.
 
     Two self-joins on cell arithmetic — scales as the simulation output
-    (equi-join on (real_id, cell_id±1), AQE-splittable), no collect.
-    A persisted ``sol`` is uncached by the call (Spark's view drop)."""
+    (equi-join on (real_id, cell_id±1), AQE-splittable), no collect."""
     spark = sol.sparkSession
     bvals = list(range(step - 1, side - 1, step))
     if not bvals:
@@ -479,7 +479,8 @@ def seam_semivariance(sol: DataFrame, side: int, step: int,
            count(*) AS n
     FROM allp GROUP BY seam
     """
-    rows = {int(r["seam"]): r for r in spark.sql(q, sol=sol).collect()}
+    rows = {int(r["seam"]): r
+            for r in spark.sql(q, sol=sql_arg(sol)).collect()}
     if 0 not in rows or 1 not in rows:
         raise ValueError(
             "no adjacent-pair data for seam or interior — is the "

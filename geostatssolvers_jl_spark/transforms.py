@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .session import sql_arg
 from .tiling import cell_expr
 
 # Acklam (2003) inverse-normal-CDF coefficients (public domain)
@@ -176,10 +177,10 @@ FROM _u"""
 
 def nscore(spark, points_df, *, val_col: str = "z",
            id_col: str = "data_id", bucket_width: float | None = None):
-    """Library wrapper: forward normal-score transform as a DataFrame.
-    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
+    """Library wrapper: forward normal-score transform as a DataFrame."""
     return spark.sql(nscore_sql("{pts}", val_col=val_col, id_col=id_col,
-                                bucket_width=bucket_width), pts=points_df)
+                                bucket_width=bucket_width),
+                     pts=sql_arg(points_df))
 
 
 def nscore_back_np(y_new: np.ndarray, z_anchor: np.ndarray,
@@ -245,6 +246,6 @@ FROM ({w}) _w"""
 
 
 def decluster_weights(spark, points_df, res: int, **kw):
-    """Library wrapper: per-point declustering weights as a DataFrame.
-    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
-    return spark.sql(decluster_weights_sql("{pts}", res, **kw), pts=points_df)
+    """Library wrapper: per-point declustering weights as a DataFrame."""
+    return spark.sql(decluster_weights_sql("{pts}", res, **kw),
+                     pts=sql_arg(points_df))

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .session import sql_arg
 from .variogram import (
     ExponentialVariogram,
     GaussianVariogram,
@@ -164,11 +165,10 @@ def empirical_variogram(spark, points_df, maxlag: float, nlags: int = 10,
                         val_col: str = "z", id_col: str = "data_id",
                         tiled: bool = True):
     """Library wrapper: empirical variogram of ``points_df``
-    (id, x, y, value) as a DataFrame of non-empty lag bins.
-    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
+    (id, x, y, value) as a DataFrame of non-empty lag bins."""
     return spark.sql(empirical_variogram_sql(
         "{pts}", maxlag, nlags, coord_cols=coord_cols, val_col=val_col,
-        id_col=id_col, tiled=tiled), pts=points_df)
+        id_col=id_col, tiled=tiled), pts=sql_arg(points_df))
 
 
 def indicator_variogram_sql(points_rel: str, threshold: float,
@@ -245,10 +245,10 @@ FROM _binned GROUP BY bin"""
 
 def robust_variogram(spark, points_df, maxlag: float, nlags: int = 10,
                      *, estimator: str = "cressie", **kw):
-    """Library wrapper for `robust_variogram_sql`.
-    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
+    """Library wrapper for `robust_variogram_sql`."""
     return spark.sql(robust_variogram_sql(
-        "{pts}", maxlag, nlags, estimator=estimator, **kw), pts=points_df)
+        "{pts}", maxlag, nlags, estimator=estimator, **kw),
+        pts=sql_arg(points_df))
 
 
 def cross_variogram_sql(points_rel: str, maxlag: float, nlags: int = 10,
@@ -296,11 +296,10 @@ def cross_variogram(spark, points_df, maxlag: float, nlags: int = 10,
                     val_col: str = "z", val2_col: str = "z2",
                     id_col: str = "data_id", tiled: bool = True):
     """Library wrapper: empirical cross-variogram of ``points_df``
-    (id, x, y, value1, value2) as a DataFrame of non-empty lag bins.
-    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
+    (id, x, y, value1, value2) as a DataFrame of non-empty lag bins."""
     return spark.sql(cross_variogram_sql(
         "{pts}", maxlag, nlags, coord_cols=coord_cols, val_col=val_col,
-        val2_col=val2_col, id_col=id_col, tiled=tiled), pts=points_df)
+        val2_col=val2_col, id_col=id_col, tiled=tiled), pts=sql_arg(points_df))
 
 
 # tan(22.5°) / tan(67.5°): azimuth-sector boundaries spelled as pure
@@ -366,10 +365,9 @@ FROM _binned GROUP BY sector, bin"""
 
 def directional_variogram(spark, points_df, maxlag: float, nlags: int = 10,
                           **kw):
-    """Library wrapper for `directional_variogram_sql`.
-    A persisted ``points_df`` is uncached by the call (Spark's view drop)."""
+    """Library wrapper for `directional_variogram_sql`."""
     return spark.sql(directional_variogram_sql("{pts}", maxlag, nlags, **kw),
-                     pts=points_df)
+                     pts=sql_arg(points_df))
 
 
 # --------------------------------------------------------------- fitting

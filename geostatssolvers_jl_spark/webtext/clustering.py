@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from ..session import sql_arg
 from .similarity import DIM, _emb_double, _sqdist_sql
 
 
@@ -206,15 +207,14 @@ def kmeans_fit_spark(spark, emb_df, n_centroids: int | None = None,
     bounded hash-mod sample as ``ann_topk_ivf`` and seeds from it the
     way ``kmeans_centroids_np`` does, so the two tiers start identically
     on the same corpus.  Early-stops when the max per-coordinate
-    centroid shift is ≤ ``tol``.  A persisted ``emb_df`` is uncached by
-    the call (Spark's view drop)."""
+    centroid shift is ≤ ``tol``."""
     import numpy as np
 
     from ..planner import choose_ivf
 
     embd = spark.sql(
         f"SELECT vec_id, e FROM {_emb_double('spark', '{emb}', 'e')} _t",
-        emb=emb_df).persist()
+        emb=sql_arg(emb_df)).persist()
     try:
         n = embd.count()
         if n == 0:

@@ -28,6 +28,8 @@ shuffles only sketch partials and candidate counts.
 
 from __future__ import annotations
 
+from ..session import sql_arg
+
 
 def _mg_reduce(counts, m: int):
     """Reduce a weight Series to a size-m Misra–Gries summary: subtract
@@ -75,8 +77,7 @@ def heavy_hitters(spark, docs_df, phi: float = 0.001,
     """Exact frequent tokens via the sketch-prune + recount plan:
     (token, cnt) for every token whose occurrence count ≥ φ·N, N the
     total token count.  Guaranteed equal to the brute GROUP BY
-    answer (module docstring).  A persisted ``docs_df`` is uncached by
-    the call (Spark's view drop)."""
+    answer (module docstring)."""
     from pyspark.sql import functions as F
 
     from .ranking import word_select
@@ -87,7 +88,7 @@ def heavy_hitters(spark, docs_df, phi: float = 0.001,
     words = word_select("spark", "{docs}", "doc_id", text_col)
     toks = spark.sql(
         f"SELECT w FROM ({words}) _w WHERE length(w) >= {int(min_len)}",
-        docs=docs_df).persist()
+        docs=sql_arg(docs_df)).persist()
     try:
         n_total = toks.count()
         if n_total == 0:

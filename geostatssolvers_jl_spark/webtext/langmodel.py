@@ -54,6 +54,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..session import sql_arg
+
 
 def trigram_select(dialect: str, rel: str, cols: str,
                    text: str = "text") -> str:
@@ -306,8 +308,7 @@ def langid_model(spark, train_df: DataFrame,
     ≤ |langs| × K rows on any corpus size), lands it as a LOCAL relation
     (the model's natural materialization point — no persist, so nothing
     for the query's view drop to uncache), then runs the scoring query
-    against it.  A persisted ``train_df`` or ``score_df`` is uncached by
-    the call (Spark's view drop)."""
+    against it."""
     return _run_with_local_model(
         spark, train_df, score_df, vocab_topk,
         lambda trel, srel, crel, mrel: langid_model_sql(
@@ -323,9 +324,7 @@ def lm_quality(spark, train_df: DataFrame,
                model: DataFrame | None = None) -> DataFrame:
     """Library wrapper for `lm_quality_sql` — same local-model
     materialization as `langid_model` (one explode scan trains both;
-    ``model=`` from `train_trigram_model` skips it entirely).  A
-    persisted ``train_df`` or ``score_df`` is uncached by the call
-    (Spark's view drop)."""
+    ``model=`` from `train_trigram_model` skips it entirely)."""
     return _run_with_local_model(
         spark, train_df, score_df, vocab_topk,
         lambda trel, srel, crel, mrel: lm_quality_sql(
@@ -359,10 +358,9 @@ def train_trigram_model(spark, train_df: DataFrame,
     ``vocab_topk`` story applies to every scorer reusing the model).
     Priors and the Laplace floor are NOT part of this artifact — they
     derive from cheap column aggregates of the train corpus inside the
-    scoring query.  A persisted ``train_df`` is uncached by the call
-    (Spark's view drop)."""
+    scoring query."""
     rows = spark.sql(pruned_count_sql("spark", "{train}", vocab_topk),
-                     train=_spread(train_df)).collect()
+                     train=sql_arg(_spread(train_df))).collect()
     if not rows:
         # an empty model would make the scoring cross-join emit ZERO
         # rows — silently violating the one-row-per-scored-document
@@ -514,10 +512,12 @@ def _run_with_local_model(spark, train_df: DataFrame,
     # vocab_topk rows), so collect its engine-evaluated dlp table and
     # score the corpus with `match_scores_kernel`; the plain-SQL chain
     # remains the oracle and the no-local-model form of the builders
-    madj = spark.sql(_madj_collect_sql("{cnt}"), cnt=local).collect()
+    madj = spark.sql(_madj_collect_sql("{cnt}"),
+                     cnt=sql_arg(local)).collect()
     langs = sorted({r.lang for r in madj})
     match = match_scores_kernel(spark, scored, madj, langs)
-    # spark.sql analyses the query before it drops the argument views,
-    # and nothing here is persisted, so the drops uncache nothing
+    # spark.sql analyses the query before it drops the argument views;
+    # `sql_arg` keeps a caller's persisted corpus or model cached
     return spark.sql(build_sql("{train}", "{score}", "{cnt}", "{match}"),
-                     train=train, score=scored, cnt=local, match=match)
+                     train=sql_arg(train), score=sql_arg(scored),
+                     cnt=sql_arg(local), match=match)

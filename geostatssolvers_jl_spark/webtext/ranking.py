@@ -36,6 +36,8 @@ with vocabulary size, and the only corpus-sized relations are scans
 
 from __future__ import annotations
 
+from ..session import sql_arg
+
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
 
@@ -111,12 +113,11 @@ FROM _top"""
 def bm25_rank(spark, docs_df, terms: tuple[str, ...],
               k1: float = DEFAULT_K1, b: float = DEFAULT_B,
               topk: int = 10):
-    """Library wrapper: rank ``docs_df`` (doc_id, text) for ``terms``.
-    A persisted ``docs_df`` is uncached by the call (Spark's view drop)."""
+    """Library wrapper: rank ``docs_df`` (doc_id, text) for ``terms``."""
     # the text goes through str.format: a brace in a term is doubled
     esc = tuple(t.replace("{", "{{").replace("}", "}}") for t in terms)
     return spark.sql(bm25_rank_sql("spark", esc, "{docs}", k1, b, topk),
-                     docs=docs_df)
+                     docs=sql_arg(docs_df))
 
 
 def tfidf_topterms_sql(dialect: str, rel: str = "documents",
@@ -163,7 +164,6 @@ FROM _rk WHERE rank <= {int(topk)}"""
 
 
 def tfidf_topterms(spark, docs_df, topk: int = 5, min_len: int = 2):
-    """Library wrapper: per-document top-``topk`` tf-idf keywords.
-    A persisted ``docs_df`` is uncached by the call (Spark's view drop)."""
+    """Library wrapper: per-document top-``topk`` tf-idf keywords."""
     return spark.sql(tfidf_topterms_sql("spark", "{docs}", topk, min_len),
-                     docs=docs_df)
+                     docs=sql_arg(docs_df))

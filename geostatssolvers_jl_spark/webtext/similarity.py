@@ -13,6 +13,8 @@ key is the shuffle key; bucket skew is bounded by the number of planes.
 
 from __future__ import annotations
 
+from ..session import sql_arg
+
 N_PLANES = 8
 DIM = 64
 
@@ -318,26 +320,24 @@ def ann_topk(spark, emb_df, k: int = 3, n_planes: int | None = None,
              n_tables: int = 6, dim: int = DIM):
     """Composed multi-table bucketed ANN top-k over an embeddings
     DataFrame (vec_id, embedding array<float>).  ``n_planes=None`` →
-    auto-tuned from the corpus count.  A persisted ``emb_df`` is
-    uncached by the call (Spark's view drop)."""
+    auto-tuned from the corpus count."""
     bt, p = _prepare_auto(spark, emb_df, n_planes, n_tables, dim)
     return spark.sql(
         ann_topk_lsh_sql("spark", "{emb}", k=k, n_planes=p,
                          n_tables=n_tables, dim=dim, bt_rel="{bt}"),
-        emb=emb_df, bt=bt)
+        emb=sql_arg(emb_df), bt=bt)
 
 
 def dedup_embedding(spark, emb_df, threshold: float = 0.35,
                     n_planes: int | None = None, n_tables: int = 6,
                     dim: int = DIM):
-    """Embedding near-dup pairs through auto-tuned LSH buckets.  A
-    persisted ``emb_df`` is uncached by the call (Spark's view drop)."""
+    """Embedding near-dup pairs through auto-tuned LSH buckets."""
     bt, p = _prepare_auto(spark, emb_df, n_planes, n_tables, dim)
     return spark.sql(
         dedup_embedding_lsh_sql("spark", "{emb}", threshold=threshold,
                                 n_planes=p, n_tables=n_tables, dim=dim,
                                 bt_rel="{bt}"),
-        emb=emb_df, bt=bt)
+        emb=sql_arg(emb_df), bt=bt)
 
 
 # ---- IVF (inverted-file) ANN — the second scale path ---------------------
@@ -528,8 +528,7 @@ def ann_topk_ivf(spark, emb_df, k: int = 3,
     FULL corpus (one mapInPandas scan + one model-sized shuffle per
     iteration, seeded from the same sample) — the scale tier when the
     corpus no longer resembles any 4096-row sample.  Both land the same
-    k×d relation; the SQL downstream is identical.  A persisted
-    ``emb_df`` is uncached by the call (Spark's view drop)."""
+    k×d relation; the SQL downstream is identical."""
     from ..planner import choose_ivf
 
     if trainer not in ("sample", "spark"):
@@ -553,7 +552,7 @@ def ann_topk_ivf(spark, emb_df, k: int = 3,
     sample = spark.sql(
         f"SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) "
         f"AS e FROM {{emb}} WHERE pmod(hash(vec_id), {step}) = 0 "
-        f"ORDER BY vec_id LIMIT {int(sample_cap)}", emb=emb_df
+        f"ORDER BY vec_id LIMIT {int(sample_cap)}", emb=sql_arg(emb_df)
     ).collect()
     cent = kmeans_centroids_np(
         [r["e"] for r in sample], n_centroids, seed=seed)
@@ -572,7 +571,7 @@ def ann_topk_ivf(spark, emb_df, k: int = 3,
     )
     return spark.sql(ann_topk_ivf_sql(
         "spark", "{emb}", k=k, nprobe=nprobe, dim=dim, cent_rel="{cent}"),
-        emb=emb_df, cent=local)
+        emb=sql_arg(emb_df), cent=local)
 
 
 # ------------------------------------------------------------- r7 fast tier

@@ -36,7 +36,7 @@ import numpy as np
 import pandas as pd
 
 # gather-scorer bound: rows × (64 dims + norm) × 8 B ≈ 260 MB of
-# closure state per task at the limit — comfortably inside local
+# broadcast state per executor at the limit — comfortably inside local
 # executor memory and far below the 8 GB broadcast cap.  Above this the
 # callers keep the per-bucket join plan.
 GATHER_SCORE_LIMIT = 500_000
@@ -174,18 +174,20 @@ def gather_score_pairs(spark, pairs_df, ids: np.ndarray, E: np.ndarray,
     BEFORE its `round(..., 6)` (rounding stays in SQL).
 
     ``ids``/``E``: sorted id vector + embedding matrix (from
-    `_emb_matrix`).  Bounded tier: gated on GATHER_SCORE_LIMIT — above
-    it callers keep the per-bucket join plan (the matrix rides the task
-    closure)."""
+    `_emb_matrix`).  The matrix and its norms ship once per executor as
+    a broadcast, not in every task's closure.  Bounded tier: gated on
+    GATHER_SCORE_LIMIT — above it callers keep the per-bucket join
+    plan."""
     if len(ids) > GATHER_SCORE_LIMIT:
         raise ValueError(
             f"gather_score_pairs: {len(ids)} vectors exceeds the "
             f"gather-scorer bound {GATHER_SCORE_LIMIT}; use the "
             f"per-bucket join plan")
-    nrm = seq_norm_rows(E)
+    bc = spark.sparkContext.broadcast((ids, E, seq_norm_rows(E)))
     schema = f"{qcol} long, {ncol} long, {out_col} double"
 
     def fn(batches):
+        ids, E, nrm = bc.value
         for b in batches:
             qv = b[qcol].to_numpy(dtype=np.int64)
             nv = b[ncol].to_numpy(dtype=np.int64)

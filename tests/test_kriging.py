@@ -196,21 +196,67 @@ def test_ball_search_solve_memory_bounded():
     assert peak < 16 * K._SOLVE_BLOCK * 8, peak
 
 
-def test_solve_chunking_keeps_rows_bit_identical(monkeypatch):
-    """Chunks sized from k + m give the same rows, bit for bit, as one
-    2048-system chunk — with a ball that cuts neighbors (padded slots)."""
+def test_collocated_solve_memory_bounded():
+    """Collocated co-kriging chunks its stacked (k+1)×(k+1) systems by the
+    same rule as `solve_systems`: at k = 100 one 2048-row batch stacked
+    as one chunk peaks near 824 MB; sized chunks keep it near 87 MB."""
+    import tracemalloc
+
     import numpy as np
 
     from geostatssolvers_jl_spark.distances import Euclidean
     from geostatssolvers_jl_spark.operators import kriging as K
+    from geostatssolvers_jl_spark.operators.cokriging import (
+        CollocatedModel, _solve_collocated_batch,
+    )
+
+    q, NC, zn, valid, dist = _ball_systems(100, 2048, radius=1e9)
+    model = CollocatedModel(
+        variogram=GaussianVariogram(range=35.0, sill=1.0, nugget=0.1),
+        rho=0.6, sec_variance=2.0, mean=0.0, sec_mean=0.0)
+    y2 = np.random.default_rng(2).normal(size=len(q))
+    tracemalloc.start()
+    try:
+        mu, var = _solve_collocated_batch(model, q, NC, zn, valid, dist, y2,
+                                          Euclidean(), 1)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert np.isfinite(mu).all() and np.isfinite(var).all()
+    assert peak < 16 * K._SOLVE_BLOCK * 8, peak
+
+
+@pytest.mark.parametrize("kernel", ["kriging", "collocated"])
+def test_solve_chunking_keeps_rows_bit_identical(monkeypatch, kernel):
+    """Chunks sized from the system size give the same rows, bit for bit,
+    as one 2048-system chunk — with a ball that cuts neighbors (padded
+    slots) — for ordinary kriging (k + 1 drift row) and collocated
+    co-kriging (k + 1 MM1 row) alike."""
+    import numpy as np
+
+    from geostatssolvers_jl_spark.distances import Euclidean
+    from geostatssolvers_jl_spark.operators import kriging as K
+    from geostatssolvers_jl_spark.operators.cokriging import (
+        CollocatedModel, _solve_collocated_batch,
+    )
 
     q, NC, zn, valid, dist = _ball_systems(90, 1500, radius=30.0, seed=1)
     assert (~valid).any() and valid.sum(axis=1).min() >= 1
-    model = KrigingModel(variogram=GaussianVariogram(range=35.0, sill=1.0,
-                                                     nugget=0.1))
+    vg = GaussianVariogram(range=35.0, sill=1.0, nugget=0.1)
+    y2 = np.random.default_rng(2).normal(size=len(q))
+
+    def solve():
+        if kernel == "kriging":
+            return K.solve_systems(KrigingModel(variogram=vg), q, NC, zn,
+                                   valid, dist, Euclidean(), 1)
+        model = CollocatedModel(variogram=vg, rho=0.6, sec_variance=2.0,
+                                mean=0.0, sec_mean=0.0)
+        return _solve_collocated_batch(model, q, NC, zn, valid, dist, y2,
+                                       Euclidean(), 1)
+
     assert K._SOLVE_BLOCK // (90 + 1) ** 2 < 1500  # several chunks
-    got = K.solve_systems(model, q, NC, zn, valid, dist, Euclidean(), 1)
+    got = solve()
     monkeypatch.setattr(K, "_SOLVE_BLOCK", 2048 * 91 * 91)
-    want = K.solve_systems(model, q, NC, zn, valid, dist, Euclidean(), 1)
+    want = solve()
     for a, b in zip(got, want):
         assert np.array_equal(a, b)

@@ -149,6 +149,35 @@ def test_call_leaves_no_view(spark, monkeypatch, case):
     assert _views(spark) == before
 
 
+# wrappers whose query binds the caller's DataFrame directly:
+# (module, function, input, further arguments)
+KEEP_CACHE = {
+    "empirical_variogram": ("variography", "empirical_variogram", _points,
+                            30.0, 6),
+    "nscore": ("transforms", "nscore", _points),
+    "bm25_rank": ("webtext.ranking", "bm25_rank", _docs, ("the", "a")),
+    "tfidf_topterms": ("webtext.ranking", "tfidf_topterms", _docs),
+    "ann_topk": ("webtext.similarity", "ann_topk", _emb),
+}
+
+
+@pytest.mark.parametrize("case", sorted(KEEP_CACHE))
+def test_wrapper_keeps_caller_cache(spark, monkeypatch, case):
+    """A caller's persisted input stays cached through the call, and the
+    wrapper's query reads that cache instead of recomputing the input."""
+    module, fn, inputs, *args = KEEP_CACHE[case]
+    df = inputs(spark).persist()
+    df.count()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    try:
+        out = _wrapper(module, fn, lambda _: df, *args)(spark, monkeypatch)
+        assert cache.lookupCachedData(df._jdf).isDefined()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+    finally:
+        df.unpersist()
+
+
 def test_bm25_rank_term_with_braces(spark):
     """Braces in a query term reach the SQL literal unchanged (the text
     goes through ``str.format`` to bind the DataFrame argument)."""
