@@ -719,62 +719,17 @@ def q_loo_idw_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator: every page estimated from its 5 nearest OTHER pages,
     per-point (z, zhat, err) rows.
 
-    Small inputs run `validation.loo_idw_sql`'s brute-force O(n²) pair
-    relation (`planner.loo_tier`); larger ones the EXACT one-pass tiled
-    kNN join (`neighbors.knn_join_tiled_exact`, the same plan the green
-    `knn_join_tiled` gate entry checks) run at k+1 with the
-    self pair dropped afterwards: removing one element of a totally
-    ordered candidate list's top-(k+1) always leaves the top-k of the
-    others, whether or not the self pair made the list.  Distance text,
-    (dist, data_id) tie-break and the `idw_agg_sql` aggregation are the
-    SAME builders as the brute form, so the rows are identical — the
-    DuckDB oracle keeps `loo_idw_sql`.  The tiled pairs enter
-    `idw_agg_sql` as the final query's ``knn`` DataFrame argument.
+    `validation.loo_idw` runs it as a local-estimator kernel on the
+    gather `tiled.solve_local` picks (the broadcast gather below
+    `planner.BROADCAST_LIMIT` pages); the DuckDB oracle is the
+    shared-dialect text `validation.loo_idw_sql`."""
+    from geostatssolvers_jl_spark.validation import loo_idw
 
-    The tiled tier joins ``z`` back by data_id instead of letting the
-    join pass it through.  Negative result (4-core box, warm reps):
-    passing ``z`` through cost the data side its shared broadcast
-    exchange with the query side, and the final SELECT reads
-    `_pages_xyz` for ``t.z`` anyway; jobs went 16 → 17, sf0.1 took
-    3.35–5.24 s against 3.21–4.84 s and sf0.01 1.58–2.58 s against
-    1.54–1.87 s."""
-    from pyspark.sql import Window
-
-    from geostatssolvers_jl_spark.neighbors import knn_join_tiled_exact
-    from geostatssolvers_jl_spark.planner import choose_tile_res, loo_tier
-    from geostatssolvers_jl_spark.validation import loo_idw_sql
-
-    pts = spark.sql(f"SELECT * FROM {_pages_xyz()} _p")
-    n = pts.count()
-    if loo_tier(n) == "brute":
-        return spark.sql(loo_idw_sql(_pages_xyz(), HAV_DD, k=LOO_IDW_K))
-    res = choose_tile_res(n)
-    pairs = knn_join_tiled_exact(
-        pts.selectExpr("data_id AS target_id", "lon", "lat"),
-        pts.select("data_id", "lon", "lat"),
-        k=LOO_IDW_K + 1, res=res, query_id="target_id",
-        metric=Haversine(6371.0),
+    return loo_idw(
+        spark.sql(f"SELECT data_id, lon AS x, lat AS y, z "
+                  f"FROM {_pages_xyz()} _p"),
+        k=LOO_IDW_K, metric=Haversine(6371.0), exponent=1.0,
     )
-    w = Window.partitionBy("target_id").orderBy(
-        F.col("dist").asc(), F.col("data_id").asc())
-    knn = (
-        pairs.filter(F.col("target_id") != F.col("data_id"))
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= LOO_IDW_K)
-        .join(spark.sql(f"SELECT data_id, z FROM {_pages_xyz()} _z"),
-              "data_id")
-        .select("target_id", "data_id", "dist", "z")
-    )
-    est = idw_agg_sql("{knn}", var="z", exponent=1.0, qid="target_id")
-    # final SELECT: the verbatim tail of `validation.loo_idw_sql`
-    return spark.sql(f"""
-SELECT t.data_id, CAST(t.z AS DOUBLE) AS z,
-       round(e.zhat, 6) + 0.0 AS zhat,
-       round(e.zhat - CAST(t.z AS DOUBLE), 6)
-         + 0.0 AS err
-FROM {_pages_xyz()} t
-JOIN (SELECT target_id, z AS zhat FROM ({est}) _e) e
-  ON e.target_id = t.data_id""", knn=knn)
 
 
 KFOLD_K = 4
@@ -1134,7 +1089,8 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     The Spark side runs the vectorized kernel tier — the ranked
     quantizer relation from `similarity.ivf_ranked_spark` (sequential-
     fold numpy, bit-identical to `ivf_ranked_sql`, materialized once)
-    and the pair cosines from the bounded gather scorer with the
+    and the pair cosines from the interpreted ``aggregate(zip_with())``
+    fold (`similarity._fast_rank_tail` passes ``gather=False``) with the
     identical SQL round/rank tail (`similarity.ann_topk_ivf_spark`).
     Corpora in `planner.ann_tier`'s "join" tier keep the per-cell SQL
     join plan.  The k-means-quantizer wrapper is the production form,

@@ -124,9 +124,9 @@ def read_manifest(spark: SparkSession, base: str, stage: str) -> DataFrame:
 def _pending(
     units: DataFrame, spark: SparkSession, base: str, stage: str,
     unit_col: str,
-) -> tuple[DataFrame, bool]:
-    """(this stage's unfinished rows of ``units``, whether any unit is
-    unfinished).  The input's units minus the manifest's, a set difference
+) -> tuple[DataFrame, list[int]]:
+    """(this stage's unfinished rows of ``units``, the unfinished unit
+    ids).  The input's units minus the manifest's, a set difference
     on the driver (both are one row per unit); a row whose unit is NULL or
     does not cast to long matches no manifest row, so it stays pending."""
     m = _manifest(spark, base, stage)
@@ -134,7 +134,7 @@ def _pending(
     unit = F.col(unit_col).cast("long")
     have = {r[0] for r in units.select(unit).collect()}
     todo = sorted(have - done - {None})
-    return units.filter(unit.isin(todo) | unit.isNull()), bool(todo)
+    return units.filter(unit.isin(todo) | unit.isNull()), todo
 
 
 def pending_units(
@@ -151,7 +151,7 @@ def commit_units(
     base: str,
     stage: str,
     unit_col: str = "unit",
-    units: DataFrame | None = None,
+    units: list[int] | None = None,
 ) -> DataFrame:
     """Write one batch of finished units + their manifest rows.
 
@@ -159,7 +159,7 @@ def commit_units(
     re-run of the same unit overwrites in place (idempotent).  Returns the
     manifest rows written (the per-partition lineage record).
 
-    ``units``: the FULL set of work units this batch covers — a unit whose
+    ``units``: the ids of ALL work units this batch covers — a unit whose
     compute legitimately produced zero rows still gets a manifest row
     (rows = 0); without it such units would stay pending forever and every
     'resume' would re-run the whole stage.
@@ -198,9 +198,7 @@ def commit_units(
     finally:
         df.unpersist()
     if units is not None:
-        # deduplicated here, not by a distinct(): no shuffle job
-        covered = units.select(F.col(unit_col).cast("long")).collect()
-        counts = {r[0]: counts.get(r[0], 0) for r in covered}
+        counts = {u: counts.get(u, 0) for u in units}
     if not counts:
         return _empty(spark, MANIFEST_SCHEMA)
     # a non-empty pandas frame plans as a LocalTableScan: the append runs
@@ -222,9 +220,9 @@ def run_stage_resumable(
 ) -> DataFrame:
     """Compute only unfinished units, commit data + lineage, return the
     stage's full output (previous + new)."""
-    todo, any_todo = _pending(units, spark, base, stage, unit_col)
-    if any_todo:
-        commit_units(compute(todo), base, stage, unit_col, units=todo)
+    todo, todo_ids = _pending(units, spark, base, stage, unit_col)
+    if todo_ids:
+        commit_units(compute(todo), base, stage, unit_col, units=todo_ids)
     from pyspark.errors import AnalysisException
 
     try:

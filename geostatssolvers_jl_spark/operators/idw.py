@@ -66,6 +66,30 @@ def idw_agg_sql(pairs: str, var: str = "z", exponent: float = 1.0,
     )
 
 
+def idw_stack(zn: np.ndarray, dist: np.ndarray, valid: np.ndarray,
+              exponent: float) -> tuple[np.ndarray, np.ndarray]:
+    """IDW over (B, k) neighbor stacks sorted by (dist, data_id), over the
+    slots ``valid`` marks: per row the weighted mean ``mu`` and the
+    minimum distance ``sigma``.  A row whose first valid slot is a zero
+    distance returns that datum exactly with σ = 0 (idw.jl:129-132); its
+    zero-distance slots get weight 0, so no product or quotient below
+    meets an infinity."""
+    with np.errstate(divide="ignore"):
+        w = np.where(valid & (dist > 0.0), 1.0 / np.power(dist, exponent),
+                     0.0)
+    sw = w.sum(axis=1)
+    mu = np.where(
+        sw > 0, (w * np.where(valid, zn, 0.0)).sum(axis=1), np.nan
+    )
+    mu = mu / np.where(sw > 0, sw, 1.0)
+    first = valid.argmax(axis=1)[:, None]
+    zero = (np.take_along_axis(dist, first, axis=1)[:, 0] == 0.0) \
+        & valid.any(axis=1)
+    zfirst = np.take_along_axis(zn, first, axis=1)[:, 0]
+    dmin = np.where(valid, dist, np.inf).min(axis=1)
+    return np.where(zero, zfirst, mu), np.where(zero, 0.0, dmin)
+
+
 # ----------------------------------------------------- compositional data
 
 
@@ -229,20 +253,7 @@ def solve_idw(
         raise ValueError("exponent must be positive")  # idw.jl:94
 
     def kernel(pdf, qcoords, NC, vals, dist, valid):
-        zn = vals[var]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            w = np.where(valid, 1.0 / np.power(dist, exponent), 0.0)
-        sw = w.sum(axis=1)
-        mu = np.where(
-            sw > 0, (w * np.where(valid, zn, 0.0)).sum(axis=1), np.nan
-        )
-        mu = mu / np.where(sw > 0, sw, 1.0)
-        dmin = dist.min(axis=1)  # invalid slots are +inf ⇒ min is the true one
-        # zero-distance exactness: first (lowest (dist, id)) slot has d=0
-        # (idw.jl:129-132); a d>0 slot always has a finite weight
-        zero = (dist[:, 0] == 0.0) & valid[:, 0]
-        mu = np.where(zero, zn[:, 0], mu)
-        sigma = np.where(zero, 0.0, dmin)
+        mu, sigma = idw_stack(vals[var], dist, valid, exponent)
         few = valid.sum(axis=1) < minneighbors
         return pd.DataFrame({
             id_col: pdf[id_col].to_numpy(np.int64),

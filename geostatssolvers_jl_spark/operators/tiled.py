@@ -116,7 +116,8 @@ def tiled_local_apply(
         f"{data_coord_cols[1]} AS _ny",
         *[f"{v} AS _v_{v}" for v in value_cols],
     )
-    pairs = knn_join_tiled_exact(qsel, dsel, k, res, metric=metric)
+    pairs = knn_join_tiled_exact(qsel, dsel, k, res, query_id=id_col,
+                                 metric=metric)
     if radius is not None:
         # KBallSearch semantics: the ≤k nearest within the ball
         pairs = pairs.filter(F.col("dist") <= radius)
@@ -139,9 +140,9 @@ def tiled_local_apply(
             for f in field_cols
         ],
     )
-    joined = grid_df.select(id_col, *query_coord_cols).join(
-        nb, id_col, "left"
-    )
+    # the whole query row, as the broadcast gather hands the kernel its
+    # whole query batch
+    joined = grid_df.join(nb, id_col, "left")
     vnames = list(value_cols)
 
     def run(batches):

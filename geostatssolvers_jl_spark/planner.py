@@ -140,35 +140,20 @@ def choose_ivf(n_vectors: int, lo: int = 4,
 #     2,000 (sf0.1)               8.23 s     5.46 s        gather, 4/4
 #     2,000 (make_sf 1, seed 5)   7.84 s     5.48 s        gather, 4/4
 ANN_FAST_MIN = 1_500
-# below this the brute O(n²) pair window (one broadcast join + one
-# window) is the cheaper LOO tier.  Measured on a 4-core box (local[4],
-# one warm process, 4 interleaved reps, make_sf pages; rows equal at
-# every size), brute vs the one-pass tiled join:
-#     points   brute          tiled
-#        500   0.89–1.12 s    1.39–1.61 s
-#      1,000   1.71–2.51 s    1.96–2.87 s
-#      2,000   2.18–2.59 s    1.62–2.13 s
-#      3,000   3.73–4.21 s    2.07–2.75 s
-#      5,000   9.17–10.37 s   2.96–3.19 s
-LOO_BRUTE_LIMIT = 1_500
 
 
 def ann_tier(n_vectors: int) -> str:
     """Scoring tier of the ANN top-k entries over ``n_vectors``:
     "join" beyond `vecops.GATHER_SCORE_LIMIT` (the gather scorer's
     broadcast bound: the per-bucket / per-cell SQL join plan), "sql"
-    below ANN_FAST_MIN (the plain SQL plan; the LSH entry takes it, the
-    IVF entry, whose ranked relation is kernel-built, still gathers),
-    else "gather" (the bounded gather scorer)."""
+    below ANN_FAST_MIN (the plain SQL plan), else "gather" (the bounded
+    gather scorer).  The LSH entry follows all three tiers; the IVF entry
+    splits only "join" from the rest, and below it scores its pairs with
+    the interpreted fold (`similarity._fast_rank_tail`, ``gather=False``),
+    not the gather scorer."""
     from .webtext.vecops import GATHER_SCORE_LIMIT
 
     if n_vectors > GATHER_SCORE_LIMIT:
         return "join"
     return "sql" if n_vectors < ANN_FAST_MIN else "gather"
 
-
-def loo_tier(n_data: int) -> str:
-    """Leave-one-out kNN tier: "brute" (one O(n²) pair window) below
-    LOO_BRUTE_LIMIT points, else "tiled" (the exact one-pass tiled kNN
-    join)."""
-    return "brute" if n_data < LOO_BRUTE_LIMIT else "tiled"

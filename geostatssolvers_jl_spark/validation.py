@@ -4,15 +4,13 @@ The reference ecosystem validates solvers with leave-one-out /
 k-fold cross-validation (GeoStatsValidation.jl; the reference's own
 error-rate surface is SURVEY §2.4 A8).  Two forms, Spark-first:
 
-* **Leave-one-out IDW** — fully declarative: each data point is
-  estimated from its k nearest OTHER points (one self-excluding kNN
-  pair relation + the existing `idw_agg_sql` aggregation), then the
-  per-point error joins back the truth.  Pure shared-dialect SQL
-  (the gate oracle runs the identical text on DuckDB).  The cross-join
-  + window form is the small/medium-n path; the big-data LOO
-  (`__spark_entry__.q_loo_idw_cv`) swaps the pair relation for
-  `neighbors.knn_join_tiled_exact` at k+1 and drops the self pair — the
-  aggregation is unchanged.
+* **Leave-one-out IDW** (`loo_idw`) — one more local-estimator kernel:
+  each point is estimated from its k nearest OTHER points by the IDW
+  kernel `solve_idw` runs (`idw.idw_stack`), on the gather
+  `tiled.solve_local` picks (broadcast up to `planner.BROADCAST_LIMIT`
+  data rows, the tiled kNN join above).  `loo_idw_sql` is the same
+  operator as one shared-dialect text (a self-excluding kNN pair
+  relation + `idw_agg_sql`): the DuckDB oracle.
 * **k-fold** (`kfold_cv`) — solver-agnostic: folds assigned by a
   deterministic id hash, each fold estimated by the caller's solver
   trained on the complement.  k solver calls, each fully distributed;
@@ -21,28 +19,59 @@ error-rate surface is SURVEY §2.4 A8).  Two forms, Spark-first:
 
 from __future__ import annotations
 
-from .operators.idw import idw_agg_sql
+import numpy as np
+import pandas as pd
+
+from .distances import Distance
+from .operators.idw import idw_agg_sql, idw_stack
+from .operators.tiled import solve_local
 from .oracle import knn_pairs_sql
 
 
+def loo_idw(points, k: int, metric: Distance, exponent: float):
+    """Leave-one-out IDW cross-validation of ``points (data_id, x, y, z)``
+    (rows with a NULL ``z`` are neither estimated nor used): per point
+    ``(data_id, z, zhat, err)``, the rows of `loo_idw_sql` — zhat the IDW
+    estimate from the k nearest other points in (dist, data_id) order,
+    err = zhat − z, both rounded half-up to 6 places in Spark.  A point
+    with no other point gets no row.
+
+    The gather fetches each point's k + 1 nearest, its own ``data_id``
+    riding along as a value; the kernel drops the point's own slot (which
+    is missing when k + 1 co-located points have lower ids) and hands
+    `idw_stack` the first k other valid slots."""
+    pts = points.filter("z IS NOT NULL").selectExpr(
+        "data_id", "x", "y", "CAST(z AS DOUBLE) AS z", "data_id AS _nid")
+    queries = pts.selectExpr("data_id AS target_id", "x", "y", "z")
+
+    def kernel(pdf, qcoords, NC, vals, dist, valid):
+        ids = pdf["target_id"].to_numpy(np.int64)
+        keep = valid & (vals["_nid"] != ids[:, None])
+        keep &= np.cumsum(keep, axis=1) <= k
+        zhat, _ = idw_stack(vals["z"], dist, keep, exponent)
+        out = pd.DataFrame({"data_id": ids, "z": pdf["z"].to_numpy(),
+                            "zhat": zhat})
+        return out[keep.any(axis=1)]
+
+    est = solve_local(
+        pts, queries, "z", kernel, "data_id long, z double, zhat double",
+        ["x", "y"], ["x", "y"], k + 1, 1, metric, None, "target_id",
+        "auto", None, value_cols=["z", "_nid"],
+    )
+    return est.selectExpr(
+        "data_id", "z", "round(zhat, 6) + 0.0 AS zhat",
+        "round(zhat - z, 6) + 0.0 AS err")
+
+
 def loo_knn_pairs_sql(points_rel: str, dist_sql: str, k: int,
-                      val_col: str = "z", spread: int = 64) -> str:
+                      val_col: str = "z") -> str:
     """Self-excluding kNN pair relation
     ``(target_id, data_id, dist, z, rank)``: for every point, its k
     nearest neighbors among the OTHER points — `oracle.knn_pairs_sql`
     with queries = data, a ``target_id`` alias on the query side, and
     the self-exclusion predicate (ONE ranking/tie-break source of
-    truth for every kNN consumer).
-
-    Plan hints (comments to DuckDB — the text stays two-dialect):
-    ``spread`` REPARTITIONs the stream side (a one-parquet-file input
-    otherwise drives the whole join on ONE task; measured 35 s → 5 s
-    at 5k×5k pairs) and BROADCAST(d) prevents Spark's CartesianProduct
-    plan, whose every stream task recomputes the build side
-    (measured 100 s at the same shape)."""
-    hint = f"/*+ REPARTITION({int(spread)}) */ " if spread else ""
-    q_side = (f"(SELECT {hint}*, data_id AS target_id "
-              f"FROM {points_rel} _qs)")
+    truth for every kNN consumer)."""
+    q_side = f"(SELECT *, data_id AS target_id FROM {points_rel} _qs)"
     return knn_pairs_sql(
         q_side, points_rel, dist_sql, k, qid="target_id",
         value_cols=(val_col,),

@@ -7,7 +7,9 @@ import pytest
 
 from geostatssolvers_jl_spark.distances import Euclidean, Haversine
 from geostatssolvers_jl_spark.grid import CartesianGrid
-from geostatssolvers_jl_spark.operators.idw import idw_agg_sql, solve_idw
+from geostatssolvers_jl_spark.operators.idw import (
+    idw_agg_sql, idw_stack, solve_idw,
+)
 
 
 def _lookup(rows, cell_id):
@@ -98,3 +100,24 @@ def test_idw_sql_parity_with_duckdb(spark, data2d_3pt):
         mu, sg = spark_rows[r["cell_id"]]
         assert round(r["z"], 6) == mu
         assert round(r["z_distance"], 6) == sg
+
+
+def test_idw_stack_zero_distance_no_invalid_ops():
+    """A query on a datum meets no inf · z or inf / inf: its zero-distance
+    slots get weight 0 and the first-valid-slot rule returns the datum.
+    Slots ``valid`` leaves out (rows 3 and 4) are ignored wherever they
+    sit."""
+    inf = np.inf
+    dist = np.array([[0.0, 0.0, 2.0], [1.0, 2.0, inf], [inf, inf, inf],
+                     [0.0, 0.0, 2.0], [0.0, 1.0, 2.0]])
+    valid = np.isfinite(dist)
+    valid[3:, 0] = False
+    zn = np.array([[5.0, 7.0, 1.0], [2.0, 4.0, 0.0], [0.0, 0.0, 0.0],
+                   [5.0, 7.0, 1.0], [5.0, 2.0, 4.0]])
+    with np.errstate(all="raise"):
+        mu, sigma = idw_stack(zn, dist, valid, 1.0)
+    assert mu[0] == 5.0 and sigma[0] == 0.0
+    assert mu[1] == (2.0 / 1.0 + 4.0 / 2.0) / (1.0 + 0.5) and sigma[1] == 1.0
+    assert np.isnan(mu[2]) and sigma[2] == inf
+    assert mu[3] == 7.0 and sigma[3] == 0.0
+    assert mu[4] == mu[1] and sigma[4] == 1.0

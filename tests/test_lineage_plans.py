@@ -38,7 +38,7 @@ def test_lineage_plans_scan_no_python_rdd(spark, tmp_path):
     _assert_jvm_only(pending_units(units, spark, base, "s1"))
 
     batch = units.filter("unit < 3").selectExpr("unit", "unit * 2 AS val")
-    appended = commit_units(batch, base, "s1", units=units.filter("unit < 3"))
+    appended = commit_units(batch, base, "s1", units=[0, 1, 2])
     _assert_jvm_only(appended)
     assert "LocalTableScan" in _plan(appended)
 

@@ -10,11 +10,9 @@ from geostatssolvers_jl_spark.distances import Anisotropic, Euclidean
 from geostatssolvers_jl_spark.grid import CartesianGrid
 from geostatssolvers_jl_spark.planner import (
     ANN_FAST_MIN,
-    LOO_BRUTE_LIMIT,
     ann_tier,
     choose_strategy,
     kriging_ui,
-    loo_tier,
     searcher_ui,
 )
 from geostatssolvers_jl_spark.simulation.seqsim import SGSParams, solve_sgs
@@ -49,7 +47,7 @@ def test_choose_strategy():
 
 
 def test_tier_cutovers():
-    """Each size cutover of the ANN and LOO entries, on both sides."""
+    """Each size cutover of the ANN entries, on both sides."""
     from geostatssolvers_jl_spark.webtext.vecops import GATHER_SCORE_LIMIT
 
     assert ANN_FAST_MIN == 1_500 and GATHER_SCORE_LIMIT == 500_000
@@ -58,9 +56,6 @@ def test_tier_cutovers():
     assert ann_tier(ANN_FAST_MIN) == "gather"
     assert ann_tier(GATHER_SCORE_LIMIT) == "gather"
     assert ann_tier(GATHER_SCORE_LIMIT + 1) == "join"
-    assert LOO_BRUTE_LIMIT == 1_500
-    assert loo_tier(LOO_BRUTE_LIMIT - 1) == "brute"
-    assert loo_tier(LOO_BRUTE_LIMIT) == "tiled"
 
 
 def test_anisotropic_metric():

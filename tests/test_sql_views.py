@@ -48,7 +48,7 @@ def _entry(name):
         if name == "loo_idw_cv":
             from geostatssolvers_jl_spark import planner
 
-            monkeypatch.setattr(planner, "LOO_BRUTE_LIMIT", 0)
+            monkeypatch.setattr(planner, "BROADCAST_LIMIT", 0)
         return E.queries()[name](spark, SF)
     return run
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import re
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from geostatssolvers_jl_spark.distances import Haversine
@@ -95,6 +96,44 @@ def test_idw_tiled_radius_bit_identical(spark, geo):
     a = _rows(solve_idw(d, q, strategy="local-broadcast", **kw))
     b = _rows(solve_idw(d, q, strategy="local-tiled", tile_res=4, **kw))
     assert a == b
+
+
+def test_idw_tiled_query_id_col(spark, geo):
+    """A query id other than ``cell_id`` reaches the tiled join."""
+    d, q = geo
+    kw = dict(
+        var="z", data_coord_cols=["lon", "lat"],
+        query_coord_cols=["lon", "lat"], maxneighbors=5,
+        metric=Haversine(6371.0), id_col="target_id",
+    )
+    q = q.withColumnRenamed("cell_id", "target_id")
+    a = _rows(solve_idw(d, q, strategy="local-broadcast", **kw))
+    b = _rows(solve_idw(d, q, strategy="local-tiled", tile_res=4, **kw))
+    assert len(a) == 300 and a == b
+
+
+def test_tiled_kernel_reads_query_columns(spark, geo):
+    """Both gathers hand the kernel the whole query row, so a kernel may
+    read a query column that is neither the id nor a coordinate."""
+    from geostatssolvers_jl_spark.operators.tiled import solve_local
+
+    d, q = geo
+    q = q.selectExpr("*", "cell_id * 0.5 AS shift")
+
+    def kernel(pdf, qcoords, NC, vals, dist, valid):
+        zsum = np.where(valid, vals["z"], 0.0).sum(axis=1)
+        return pd.DataFrame({"cell_id": pdf["cell_id"].to_numpy(np.int64),
+                             "v": zsum + pdf["shift"].to_numpy(np.float64)})
+
+    def run(**strategy):
+        return _rows(solve_local(
+            d, q, "z", kernel, "cell_id long, v double", ["lon", "lat"],
+            ["lon", "lat"], 4, 1, Haversine(6371.0), None, "cell_id",
+            **strategy))
+
+    a = run(strategy="local-broadcast", tile_res=None)
+    assert len(a) == 300
+    assert a == run(strategy="local-tiled", tile_res=4)
 
 
 def test_lwr_tiled_bit_identical(spark, geo):

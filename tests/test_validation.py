@@ -1,4 +1,4 @@
-"""Cross-validation (LOO-IDW SQL, k-fold library) + duplicate-substring
+"""Cross-validation (LOO-IDW, k-fold library) + duplicate-substring
 span detection."""
 
 from __future__ import annotations
@@ -8,7 +8,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from geostatssolvers_jl_spark.distances import Euclidean
+from geostatssolvers_jl_spark.distances import Euclidean, Haversine
 from geostatssolvers_jl_spark.validation import (
     cv_summary_sql,
     kfold_cv,
@@ -91,29 +91,80 @@ def test_loo_better_on_smooth_field(spark):
 
 
 def test_loo_idw_cv_tiled_tier_equals_brute(spark, monkeypatch):
-    """`loo_idw_cv`'s tier over the exact one-pass tiled kNN join returns
-    the brute tier's rows (sf0.01 sits below LOO_BRUTE_LIMIT, so the gate
-    runs only brute there)."""
+    """`loo_idw_cv` on the tiled gather (`planner.BROADCAST_LIMIT`
+    patched to 0) returns the broadcast gather's rows (sf0.01 sits below
+    the limit, so the gate runs only the broadcast gather there)."""
     import __spark_entry__ as entry
-    import geostatssolvers_jl_spark.neighbors as nb
+    import geostatssolvers_jl_spark.operators.tiled as tiled
     from geostatssolvers_jl_spark import planner
     from test_classifier import SF
 
     run = entry.queries()["loo_idw_cv"]
-    brute = sorted(map(tuple, run(spark, SF).collect()))
-    join = nb.knn_join_tiled_exact
+    broadcast = sorted(map(tuple, run(spark, SF).collect()))
+    join = tiled.knn_join_tiled_exact
     calls = []
 
     def counted(*a, **kw):
         calls.append(1)
         return join(*a, **kw)
 
-    monkeypatch.setattr(nb, "knn_join_tiled_exact", counted)
-    monkeypatch.setattr(planner, "LOO_BRUTE_LIMIT", 0)
-    tiled = sorted(map(tuple, run(spark, SF).collect()))
+    monkeypatch.setattr(tiled, "knn_join_tiled_exact", counted)
+    monkeypatch.setattr(planner, "BROADCAST_LIMIT", 0)
+    gathered = sorted(map(tuple, run(spark, SF).collect()))
     assert calls == [1]
-    assert len(brute) == 500
-    assert tiled == brute
+    assert len(broadcast) == 500
+    assert gathered == broadcast
+
+
+@pytest.mark.parametrize("limit", ["broadcast", "tiled"])
+def test_loo_idw_colocated_cluster(spark, monkeypatch, limit):
+    """Five co-located points (k + 1 = 4 or more): the point with the
+    highest id does not find itself among its k + 1 gathered neighbors,
+    the others drop their own slot; either way the rows equal
+    `loo_idw_sql` on DuckDB.  A lone point gets no row."""
+    from geostatssolvers_jl_spark import planner
+    from geostatssolvers_jl_spark.validation import loo_idw
+
+    if limit == "tiled":
+        monkeypatch.setattr(planner, "BROADCAST_LIMIT", 0)
+    pts = pd.DataFrame({
+        "data_id": np.arange(9),
+        "x": [10.0] * 5 + [10.5, 12.0, -30.0, 40.0],
+        "y": [20.0] * 5 + [20.0, 21.0, 5.0, -10.0],
+        "z": [1.0, 2.0, 3.0, 4.0, 5.0, 6.5, 7.25, 0.5, 9.0],
+    })
+    hav = Haversine(6371.0)
+    con = duckdb.connect()
+    con.register("pts", pts)
+    want = con.sql(loo_idw_sql("pts", hav.sql(("q.x", "q.y"), ("d.x", "d.y")),
+                               k=3) + " ORDER BY data_id").df()
+    got = loo_idw(spark.createDataFrame(pts), k=3, metric=hav,
+                  exponent=1.0) \
+        .toPandas().sort_values("data_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False,
+                                  check_exact=True)
+    assert list(got.zhat[:5]) == [2.0, 1.0, 1.0, 1.0, 1.0]
+    assert loo_idw(spark.createDataFrame(pts.iloc[:1]), k=3, metric=hav,
+                   exponent=1.0).count() == 0
+
+
+def test_loo_idw_cv_plan(spark):
+    """`loo_idw_cv` at sf0.01 runs on the broadcast gather: one
+    MapInPandas, no pair product and no shuffle (its one exchange is the
+    broadcast side of the pages join every pages entry reads)."""
+    import re
+
+    import __spark_entry__ as entry
+    from test_classifier import SF
+
+    out = entry.queries()["loo_idw_cv"](spark, SF)
+    out.count()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1, final
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
 
 
 def test_kfold_cv_idw(spark):
