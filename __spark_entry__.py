@@ -1090,8 +1090,8 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer relation from `similarity.ivf_ranked_spark` (sequential-
     fold numpy, bit-identical to `ivf_ranked_sql`, materialized once)
     and the pair cosines from the interpreted ``aggregate(zip_with())``
-    fold (`similarity._fast_rank_tail` passes ``gather=False``) with the
-    identical SQL round/rank tail (`similarity.ann_topk_ivf_spark`).
+    fold (`similarity._fold_scored_pairs`) with the identical SQL
+    round/rank tail (`similarity.ann_topk_ivf_spark`).
     Corpora in `planner.ann_tier`'s "join" tier keep the per-cell SQL
     join plan.  The k-means-quantizer wrapper is the production form,
     recall-pinned in pytest."""

@@ -12,11 +12,13 @@ Unit writes are idempotent (dynamic partition overwrite), so a crash
 between data and manifest commit re-runs that unit harmlessly.
 
 The manifest holds one row per unit, so the control plane runs on the
-driver: on restart the done units of the stage are collected (when the
-manifest exists) and subtracted from the input's units as a set; compute
-gets ``units.filter(unit IN todo)``.  The per-unit row counts are one
-``groupBy`` over the persisted output, and the manifest batch is appended
-from a local (driver) table.  No lineage step starts a Python worker —
+driver and units are plain integer ids: on restart the done units of the
+stage are collected (when the manifest exists) and subtracted from the
+input's ids as a set; compute gets the sorted pending ids.  The per-unit
+row counts are one ``groupBy`` over the persisted output, and the
+manifest batch is appended from a local (driver) table.  The stage is
+read back with the schema its commits record (a sidecar next to the
+data), never by inference.  No lineage step starts a Python worker —
 every plan it builds is JVM-only (``createDataFrame`` from a list, or from
 an empty pandas frame, would scan a Python RDD).
 
@@ -30,6 +32,7 @@ from __future__ import annotations
 
 import json
 import time
+from typing import Callable, Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +48,10 @@ def _manifest_path(base: str) -> str:
     return f"{base}/_lineage_manifest"
 
 
+def _schema_path(base: str, stage: str) -> str:
+    return f"{base}/{stage}/_engine_schema.json"
+
+
 def _fs_path(spark: SparkSession, path: str):
     """(Hadoop FileSystem, Path) for ``path`` — any URI Spark can write
     (hdfs://, s3a://), never driver-local I/O."""
@@ -57,7 +64,7 @@ def _sidecar_write(spark: SparkSession, path: str, payload: str) -> None:
     FileSystem API, so it lands next to the Spark-written data even when
     ``base`` is a non-local URI (hdfs://, s3a://) — a driver-local
     ``open()`` would silently write into a bogus local directory and the
-    all-empty-stage resume fallback would never find it."""
+    stage read would never find it."""
     fs, jpath = _fs_path(spark, path)
     out = fs.create(jpath, True)
     try:
@@ -121,41 +128,26 @@ def read_manifest(spark: SparkSession, base: str, stage: str) -> DataFrame:
     return _empty(spark, MANIFEST_SCHEMA) if m is None else m
 
 
-def _pending(
-    units: DataFrame, spark: SparkSession, base: str, stage: str,
-    unit_col: str,
-) -> tuple[DataFrame, list[int]]:
-    """(this stage's unfinished rows of ``units``, the unfinished unit
-    ids).  The input's units minus the manifest's, a set difference
-    on the driver (both are one row per unit); a row whose unit is NULL or
-    does not cast to long matches no manifest row, so it stays pending."""
+def pending_units(
+    units: Iterable[int], spark: SparkSession, base: str, stage: str,
+) -> list[int]:
+    """The sorted ids of ``units`` that have no manifest row for this
+    stage: a set difference on the driver (the manifest holds one row per
+    unit).  Without a manifest no Spark job runs."""
     m = _manifest(spark, base, stage)
     done = set() if m is None else {r[0] for r in m.select("unit").collect()}
-    unit = F.col(unit_col).cast("long")
-    have = {r[0] for r in units.select(unit).collect()}
-    todo = sorted(have - done - {None})
-    return units.filter(unit.isin(todo) | unit.isNull()), todo
-
-
-def pending_units(
-    units: DataFrame, spark: SparkSession, base: str, stage: str,
-    unit_col: str = "unit",
-) -> DataFrame:
-    """This stage's work units that have no manifest row as of this call
-    (the manifest is read when this is called, not when an action runs)."""
-    return _pending(units, spark, base, stage, unit_col)[0]
+    return sorted({int(u) for u in units} - done)
 
 
 def commit_units(
     df: DataFrame,
     base: str,
     stage: str,
-    unit_col: str = "unit",
     units: list[int] | None = None,
 ) -> DataFrame:
     """Write one batch of finished units + their manifest rows.
 
-    ``df`` must carry ``unit_col``; data lands partitioned by it so a
+    ``df`` must carry ``unit``; data lands partitioned by it so a
     re-run of the same unit overwrites in place (idempotent).  Returns the
     manifest rows written (the per-partition lineage record).
 
@@ -170,7 +162,7 @@ def commit_units(
     # re-executing the whole compute DAG (each unit's kriging would run
     # TWICE per commit otherwise — and a nondeterministic compute could
     # write counts that disagree with the committed data)
-    df = df.withColumn("unit", F.col(unit_col).cast("long")).persist()
+    df = df.withColumn("unit", F.col("unit").cast("long")).persist()
     try:
         (
             df.write.format(FORMAT)
@@ -180,15 +172,13 @@ def commit_units(
             .save(f"{base}/{stage}")
         )
         wall = time.time() - t0
-        # schema sidecar (driver-side, tiny): an all-empty stage writes
-        # ZERO parquet part files under partitionBy, so a later read
-        # cannot infer the schema — the sidecar makes the empty stage
-        # readable instead of wedging every subsequent resume
-        _sidecar_write(
-            spark,
-            f"{base}/{stage}/_engine_schema.json",
-            json.dumps(df.schema.jsonValue()),
-        )
+        # schema sidecar (driver-side, tiny): the stage read takes its
+        # schema from here instead of inferring it from the part files —
+        # no inference job, ``unit`` reads back as the manifest's long,
+        # and an all-empty stage (ZERO part files under partitionBy)
+        # reads as a typed empty frame
+        _sidecar_write(spark, _schema_path(base, stage),
+                       json.dumps(df.schema.jsonValue()))
         # lineage rows for THIS batch only — never rescan previously-
         # committed units (at 10^12-row scale a full rescan per batch is
         # the bottleneck); one row per unit, so the counts come back to
@@ -214,24 +204,17 @@ def run_stage_resumable(
     spark: SparkSession,
     base: str,
     stage: str,
-    units: DataFrame,
-    compute,  # Callable[[DataFrame], DataFrame]: pending units -> output rows
-    unit_col: str = "unit",
+    units: Iterable[int],
+    compute: Callable[[list[int]], DataFrame],
 ) -> DataFrame:
     """Compute only unfinished units, commit data + lineage, return the
-    stage's full output (previous + new)."""
-    todo, todo_ids = _pending(units, spark, base, stage, unit_col)
-    if todo_ids:
-        commit_units(compute(todo), base, stage, unit_col, units=todo_ids)
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.format(FORMAT).load(f"{base}/{stage}")
-    except AnalysisException:
-        # a stage whose every unit legitimately produced 0 rows has
-        # manifest entries but no data files — return a typed empty
-        # frame from the schema sidecar instead of wedging every resume
-        txt = _sidecar_read(spark, f"{base}/{stage}/_engine_schema.json")
-        if txt is not None:
-            return _empty(spark, StructType.fromJson(json.loads(txt)))
-        raise
+    stage's full output (previous + new).  ``compute`` gets the sorted
+    pending unit ids and returns their output rows (with ``unit``)."""
+    todo = pending_units(units, spark, base, stage)
+    if todo:
+        commit_units(compute(todo), base, stage, units=todo)
+    txt = _sidecar_read(spark, _schema_path(base, stage))
+    if txt is None:
+        raise FileNotFoundError(f"stage {stage!r} has no commit under {base}")
+    schema = StructType.fromJson(json.loads(txt))
+    return spark.read.schema(schema).format(FORMAT).load(f"{base}/{stage}")

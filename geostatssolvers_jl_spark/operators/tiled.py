@@ -196,13 +196,18 @@ def solve_local(
     ``strategy``: 'auto' consults `planner.choose_strategy` — a DataFrame
     data side above `planner.BROADCAST_LIMIT` rows routes through the tiled
     gather instead of a driver collect; 'local-broadcast' / 'local-tiled'
-    force a path.  A `PointData` data side or ``maxneighbors=None`` (all
-    data / ball-only search) always runs broadcast.
+    force a path; any other value raises.  A `PointData` data side or
+    ``maxneighbors=None`` (all data / ball-only search) always runs
+    broadcast.
 
     The data side is the rows with ``var`` non-missing, passed through
     ``expand`` when given (a DataFrame → DataFrame step that flattens
     ``var`` into the scalar ``value_cols`` the kernel gathers; default
     ``[var]``)."""
+    if strategy not in ("auto", "local-broadcast", "local-tiled"):
+        raise ValueError(
+            f"unknown strategy {strategy!r}: expected 'auto', "
+            "'local-broadcast' or 'local-tiled'")
     value_cols = value_cols or [var]
     if isinstance(data, DataFrame):
         points = data.filter(f"{var} IS NOT NULL")

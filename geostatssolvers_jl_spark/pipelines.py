@@ -3,12 +3,13 @@ geocode → tile → kNN → batched kriging, checkpointed per unit so a killed
 job resumes without recompute).
 
 The grid is split into ``n_units`` contiguous cell-id blocks; each block
-is one resumable work unit (`lineage.run_stage_resumable`): its estimation
-output lands partitioned by unit with a per-unit lineage row (rows, wall),
-and a restart subtracts the manifest's done units so only unfinished
-blocks recompute.  Unit granularity trades resume precision against
-manifest size — at 10¹² pages one unit ≈ one tile-group of the output
-grid.
+is one resumable work unit (`lineage.run_stage_resumable`), named by its
+integer id ``0 … n_units - 1`` on the driver: its estimation output lands
+partitioned by unit with a per-unit lineage row (rows, wall), and a
+restart subtracts the manifest's done ids so only unfinished blocks
+recompute (the grid is filtered to their cells).  Unit granularity
+trades resume precision against manifest size — at 10¹² pages one unit
+≈ one tile-group of the output grid.
 """
 
 from __future__ import annotations
@@ -41,22 +42,17 @@ def kriging_pages_resumable(
     ncells = grid.ncells
     block = -(-ncells // n_units)
 
-    units = spark.range(n_units).select(F.col("id").alias("unit"))
-
     pg = P.geocode(P.load_pages(spark, sf_dir))
     pagesdf = pg.selectExpr(
         "doc_id AS data_id", "lon", "lat",
         f"CAST(length(text) AS DOUBLE) AS {var}",
     )
 
-    def compute(todo: DataFrame) -> DataFrame:
-        # size bound: one row per WORK UNIT (grid block), not per cell —
-        # ≤ ncells/block rows; unit lists are driver-sized by construction
-        todo_units = [r["unit"] for r in todo.select("unit").collect()]
+    def compute(todo: list[int]) -> DataFrame:
         gdf = grid.spark_df(spark).withColumn(
             "unit", (F.col("cell_id") / block).cast("long")
         )
-        gdf = gdf.filter(F.col("unit").isin(todo_units))
+        gdf = gdf.filter(F.col("unit").isin(todo))
         sol = solve_kriging(
             pagesdf, gdf.drop("unit"), var=var, model=model,
             data_coord_cols=["lon", "lat"], maxneighbors=maxneighbors,
@@ -67,4 +63,4 @@ def kriging_pages_resumable(
         )
         return sol.withColumn("unit", (F.col("cell_id") / block).cast("long"))
 
-    return run_stage_resumable(spark, base, stage, units, compute)
+    return run_stage_resumable(spark, base, stage, range(n_units), compute)

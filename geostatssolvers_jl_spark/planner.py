@@ -149,8 +149,8 @@ def ann_tier(n_vectors: int) -> str:
     below ANN_FAST_MIN (the plain SQL plan), else "gather" (the bounded
     gather scorer).  The LSH entry follows all three tiers; the IVF entry
     splits only "join" from the rest, and below it scores its pairs with
-    the interpreted fold (`similarity._fast_rank_tail`, ``gather=False``),
-    not the gather scorer."""
+    the interpreted fold (`similarity._fold_scored_pairs`), not the
+    gather scorer."""
     from .webtext.vecops import GATHER_SCORE_LIMIT
 
     if n_vectors > GATHER_SCORE_LIMIT:

@@ -71,17 +71,28 @@ def _cov_image(
     return gamma.cov(np.sqrt(h2))
 
 
-def _one_realization(
-    F: np.ndarray, gamma: Variogram, mean: float, dims: tuple[int, ...],
-    seed: int, real_id: int,
+def _spectrum(
+    grid: CartesianGrid, variogram: Variogram, metric: Distance | None,
 ) -> np.ndarray:
-    rng = np.random.default_rng((seed, int(real_id)))
-    noise = rng.random(dims)
+    """``F = √|fft(fftshift(C))|`` with the DC component (the reference
+    level) zeroed, fft.jl:102-103."""
+    F = np.sqrt(np.abs(np.fft.fftn(np.fft.fftshift(
+        _cov_image(grid, variogram, metric)))))
+    F.flat[0] = 0.0
+    return F
+
+
+def _field(
+    F: np.ndarray, sill: float, mean: float, rng: np.random.Generator,
+) -> np.ndarray:
+    """One unconditional field: phase-randomize the spectrum with white
+    noise (fft.jl:163), inverse FFT (166), rescale to the target sill and
+    mean (169-170)."""
+    noise = rng.random(F.shape)
     P = F * np.exp(1j * np.angle(np.fft.fftn(noise)))
     Z = np.real(np.fft.ifftn(P))
     sigma2 = np.mean(Z * Z)  # var with mean=0, fft.jl:169
-    Z = np.sqrt(gamma.sill / sigma2) * Z + mean
-    return Z
+    return np.sqrt(sill / sigma2) * Z + mean
 
 
 def _tile_layout(
@@ -125,30 +136,20 @@ def _tile_field(
     cached per extended-tile SHAPE (shared by all interior tiles)."""
     ex0, ex1, ey0, ey1 = tl["ex0"], tl["ex1"], tl["ey0"], tl["ey1"]
     edims = (ex1 - ex0, ey1 - ey0)
-    key = edims
-    if key not in spec_cache:
+    if edims not in spec_cache:
         sub = CartesianGrid(
             edims,
             (grid.origin[0] + ex0 * grid.spacing[0],
              grid.origin[1] + ey0 * grid.spacing[1]),
             grid.spacing,
         )
-        F = np.sqrt(np.abs(np.fft.fftn(np.fft.fftshift(
-            _cov_image(sub, variogram, metric)
-        ))))
-        F.flat[0] = 0.0
-        spec_cache[key] = F
-    F = spec_cache[key]
+        spec_cache[edims] = _spectrum(sub, variogram, metric)
     # (seed, real, tile) stream — deterministic under any partitioning;
     # tiles are independent fields (documented seam approximation: the
     # halo keeps each interior stationary/wrap-free, it does not stitch
     # covariance ACROSS tile boundaries)
-    rng = np.random.default_rng((seed, int(real_id), int(tl["t"])))
-    noise = rng.random(edims)
-    P = F * np.exp(1j * np.angle(np.fft.fftn(noise)))
-    Z = np.real(np.fft.ifftn(P))
-    sigma2 = np.mean(Z * Z)
-    Z = np.sqrt(variogram.sill / sigma2) * Z + mean
+    Z = _field(spec_cache[edims], variogram.sill, mean,
+               np.random.default_rng((seed, int(real_id), int(tl["t"]))))
     ix0, ix1, iy0, iy1 = tl["ix0"], tl["ix1"], tl["iy0"], tl["iy1"]
     Zi = Z[ix0 - ex0: ix1 - ex0, iy0 - ey0: iy1 - ey0]
     nx = grid.dims[0]
@@ -190,19 +191,19 @@ def solve_fftgs(
             data_coord_cols, seed, maxneighbors, krig_radius, tile_dims,
             metric,
         )
-    dims = grid.dims
-    F = np.sqrt(np.abs(np.fft.fftn(np.fft.fftshift(
-        _cov_image(grid, variogram, metric)))))
-    F.flat[0] = 0.0  # zero the reference level, fft.jl:103
-    bc = spark.sparkContext.broadcast((F, variogram, mean, dims, seed))
+    bc = spark.sparkContext.broadcast(
+        (_spectrum(grid, variogram, metric), variogram.sill, mean, seed))
 
     ncells = grid.ncells
 
+    def realization(real_id: int) -> np.ndarray:
+        Fb, sill, mu, sd = bc.value
+        return _field(Fb, sill, mu, np.random.default_rng((sd, real_id)))
+
     def gen(batches):
-        Fb, g, mu, dd, sd = bc.value
         for pdf in batches:
             for real_id in pdf["id"].tolist():
-                Z = _one_realization(Fb, g, mu, dd, sd, real_id)
+                Z = realization(real_id)
                 yield pd.DataFrame({
                     "real_id": np.full(ncells, real_id, dtype=np.int64),
                     "cell_id": np.arange(ncells, dtype=np.int64),
@@ -230,13 +231,11 @@ def solve_fftgs(
     cache_ok = ncells * min(maxneighbors or 0, len(cond[0])) <= 16_000_000
 
     def gen_cond(batches):
-        Fb, g, mu0, dd, sd = bc.value
         ids_d, zd = bc_cond.value[:2]
         correction = _residual_kriging(bc_cond.value)
         for pdf in batches:
             for real_id in pdf["id"].tolist():
-                Z = _one_realization(Fb, g, mu0, dd, sd, real_id)
-                zu = Z.ravel(order="F")
+                zu = realization(real_id).ravel(order="F")
                 resid = zd - zu[ids_d]
                 z = zu + np.concatenate([
                     correction(

@@ -585,18 +585,19 @@ def ann_topk_ivf(spark, emb_df, k: int = 3,
 def collect_emb_matrix(spark, emb_rel: str = "embeddings",
                        known_n: int | None = None):
     """(sorted ids, float64 matrix) of ``emb_rel`` via one Arrow
-    transfer; None when the corpus exceeds the gather-scorer bound
-    (callers then keep the per-bucket join plan — see
-    `vecops.GATHER_SCORE_LIMIT` for the scale posture).  ``known_n``:
-    a row count the caller already computed, skipping the gate's
-    count job."""
+    transfer.  Raises past the gather-scorer bound
+    (`vecops.GATHER_SCORE_LIMIT`; `planner.ann_tier` routes such corpora
+    to the per-bucket join plan instead).  ``known_n``: a row count the
+    caller already computed, skipping the gate's count job."""
     import numpy as np
 
     from .vecops import GATHER_SCORE_LIMIT
 
     n = (spark.table(emb_rel).count() if known_n is None else known_n)
     if n > GATHER_SCORE_LIMIT:
-        return None
+        raise ValueError(
+            f"{n} vectors exceed the gather-scorer bound "
+            f"{GATHER_SCORE_LIMIT}; use the per-bucket join plan")
     pdf = spark.sql(
         f"SELECT vec_id, embedding FROM {emb_rel}").toPandas()
     ids = pdf["vec_id"].to_numpy(dtype=np.int64)
@@ -605,51 +606,46 @@ def collect_emb_matrix(spark, emb_rel: str = "embeddings",
     return ids[order], E[order]
 
 
-def _score_distinct_pairs(spark, cand, emb_rel: str, dim: int = DIM,
-                          gather: bool = True,
-                          known_n: int | None = None):
-    """DISTINCT (qid, nid) candidate pairs → (qid, nid, cos_sim).
+# Both scorers turn candidate pairs that are ALREADY hash-partitioned by
+# ``qid`` into DISTINCT (qid, nid, cos_sim) rows, and stay exchange-free:
+# hash(qid) satisfies the clustering requirement of the per-task DISTINCT
+# on (qid, nid) (measured: the same DISTINCT as a global hash aggregate
+# spilled for ~270 s; per-task it is seconds), and mapInPandas is narrow.
+# The rank window downstream pays its one small exchange after the
+# partial WindowGroupLimit prune — losing the partitioning attribute
+# across the Python boundary costs nothing.
 
-    Scoring tier (r7, 32 cores, interleaved min-of-3 on the
-    86M-unordered-pair sf1.0 shape): the bounded GATHER KERNEL
-    (`vecops.gather_score_pairs` — mapInPandas over only the pair ids,
-    with the ≤`GATHER_SCORE_LIMIT`-row corpus matrix riding the task
-    closure; at 20k×64 doubles the matrix is 10 MB, cache-resident)
-    measured **23.7 s vs 50.2 s** for the interpreted
-    ``aggregate(zip_with())`` fold, with ROW-IDENTICAL output (0 diffs
-    over the full 60k-row entry result).  The kernel replays the fold's
-    exact FP sequence (bitwise-pinned by tests/test_vecops.py) and the
-    ``round(..., 6)`` stays in SQL on the bit-identical raw value.
-    Corpora beyond the bound (`collect_emb_matrix` → None) keep the
-    broadcast-join fold — same rows, the 100-TB-posture plan.
 
-    ``gather=False`` skips the kernel outright: at the IVF tail's much
-    smaller pair volume the kernel's fixed costs (corpus count +
-    toPandas + the Arrow pair round-trip) outweigh the fold on small
-    corpora.  `ann_topk_ivf_spark` on a 4-core box (local[4], one
-    process per input, noop-write sink, 4 interleaved reps), fold vs
-    gather medians: 500 vectors 1.41 vs 2.87 s, 2,000 vectors 3.40 vs
-    3.92 s, 10,000 vectors 8.12 vs 6.52 s (gather faster 4/4).  So
-    `_fast_rank_tail` keeps the fold, while the LSH path (86M pairs at
-    sf1.0) uses the kernel; the 10,000-vector reversal is an open lead.
+def _gather_scored_pairs(spark, cand, emb_rel: str, known_n: int | None):
+    """The bounded GATHER KERNEL (`vecops.gather_score_pairs` —
+    mapInPandas over only the pair ids, with the ≤`GATHER_SCORE_LIMIT`-row
+    corpus matrix broadcast; at 20k×64 doubles the matrix is 10 MB,
+    cache-resident).  r7, 32 cores, interleaved min-of-3 on the
+    86M-unordered-pair sf1.0 shape: **23.7 s vs 50.2 s** for the
+    interpreted fold (`_fold_scored_pairs`), with ROW-IDENTICAL output
+    (0 diffs over the full 60k-row entry result).  The kernel replays the
+    fold's exact FP sequence (bitwise-pinned by tests/test_vecops.py) and
+    the ``round(..., 6)`` stays in SQL on the bit-identical raw value."""
+    from .vecops import gather_score_pairs
 
-    Either way the dedupe/score stage stays exchange-free: ``cand`` is
-    hash-partitioned by qid upstream, so the DISTINCT runs per task
-    (measured: the same DISTINCT as a global hash aggregate spilled for
-    ~270 s; per-task it is seconds), and mapInPandas is narrow.  The
-    rank window downstream pays its one small exchange after the
-    partial WindowGroupLimit prune exactly as before — losing the
-    partitioning attribute across the Python boundary costs nothing."""
+    ids, E = collect_emb_matrix(spark, emb_rel, known_n)
+    raw = gather_score_pairs(spark, cand.distinct(), ids, E)
+    return raw.selectExpr("qid", "nid", "round(c_raw, 6) AS cos_sim")
+
+
+def _fold_scored_pairs(spark, cand, emb_rel: str, dim: int):
+    """The interpreted ``aggregate(zip_with())`` fold over the broadcast
+    embeddings — no corpus collect.  At the IVF tail's much smaller pair
+    volume the gather kernel's fixed costs (corpus count + toPandas + the
+    Arrow pair round-trip) outweigh the fold on small corpora.
+    `ann_topk_ivf_spark` on a 4-core box (local[4], one process per
+    input, noop-write sink, 4 interleaved reps), fold vs gather medians:
+    500 vectors 1.41 vs 2.87 s, 2,000 vectors 3.40 vs 3.92 s, 10,000
+    vectors 8.12 vs 6.52 s (gather faster 4/4).  So the IVF tail keeps
+    the fold, while the LSH path (86M pairs at sf1.0) uses the kernel;
+    the 10,000-vector reversal is an open lead."""
     from pyspark.sql import functions as F
 
-    mat = (collect_emb_matrix(spark, emb_rel, known_n)
-           if gather else None)
-    if mat is not None:
-        from .vecops import gather_score_pairs
-
-        raw = gather_score_pairs(spark, cand.distinct(), mat[0], mat[1])
-        return raw.selectExpr("qid", "nid",
-                              "round(c_raw, 6) AS cos_sim")
     emb = spark.sql(
         f"SELECT vec_id, e, {_norm_sql('spark', 'e', dim)} AS nrm "
         f"FROM {_emb_double('spark', emb_rel, 'e')} _ed")
@@ -678,23 +674,9 @@ SELECT qid, nid, cos_sim, rank FROM (
 ) _r WHERE rank <= {int(k)}"""
 
 
-def _fast_rank_tail(spark, cand, emb_rel: str, k: int, dim: int = DIM):
-    """DISTINCT → exact cosine → window top-k over a candidate-pair
-    DataFrame that is ALREADY hash-partitioned by ``qid``.
-
-    The whole point of the fast tier is that hash(qid) satisfies the
-    clustering requirement of the per-task DISTINCT on (qid, nid) (see
-    `_score_distinct_pairs` for the scoring tiers and measurements);
-    the pair stream (hundreds of millions of rows at sf1.0) never
-    crosses an Exchange before the small post-prune rank exchange."""
-    scored = _score_distinct_pairs(spark, cand, emb_rel, dim,
-                                   gather=False)
-    return spark.sql(_rank_tail_sql(k), scored=scored)
-
-
 def ann_topk_lsh_spark(spark, k: int = 3, n_planes: int = 5,
                        bt_rel: str = "bt_mat",
-                       emb_rel: str = "embeddings", dim: int = DIM,
+                       emb_rel: str = "embeddings",
                        known_n: int | None = None):
     """Fast twin of `ann_topk_lsh_sql` (bounded tier: the bucket table
     and embeddings broadcast — callers gate on corpus size): the probe
@@ -734,8 +716,7 @@ def ann_topk_lsh_spark(spark, k: int = 3, n_planes: int = 5,
             & (F.col("vec_id") < F.col("_bv")))
         .select(F.col("vec_id").alias("qid"), F.col("_bv").alias("nid"))
     )
-    scored = _score_distinct_pairs(spark, cand, emb_rel, dim,
-                                   known_n=known_n)
+    scored = _gather_scored_pairs(spark, cand, emb_rel, known_n)
     both = scored.selectExpr(
         "explode(array(named_struct('q', qid, 'n', nid), "
         "named_struct('q', nid, 'n', qid))) AS _s", "cos_sim"
@@ -748,7 +729,8 @@ def ann_topk_ivf_spark(spark, k: int = 3, nprobe: int = 4,
                        emb_rel: str = "embeddings", dim: int = DIM):
     """Fast twin of `ann_topk_ivf_sql` over a pre-materialized ranked
     relation: probes (rkc ≤ nprobe) repartitioned by query id, the
-    rkc=1 assignment broadcast, then the shared exchange-free tail."""
+    rkc=1 assignment broadcast, then the exchange-free fold scorer and
+    the shared rank tail."""
     from pyspark.sql import functions as F
 
     nparts = 4 * spark.sparkContext.defaultParallelism
@@ -766,7 +748,8 @@ def ann_topk_ivf_spark(spark, k: int = 3, nprobe: int = 4,
             & (F.col("vec_id") != F.col("_av")))
         .select(F.col("vec_id").alias("qid"), F.col("_av").alias("nid"))
     )
-    return _fast_rank_tail(spark, cand, emb_rel, k, dim)
+    return spark.sql(_rank_tail_sql(k),
+                     scored=_fold_scored_pairs(spark, cand, emb_rel, dim))
 
 
 def ivf_ranked_spark(spark, emb_rel: str = "embeddings",

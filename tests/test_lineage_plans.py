@@ -1,10 +1,12 @@
 """The lineage control plane runs on the driver: no plan it builds scans a
 Python RDD (``ExistingRDD`` / ``LogicalRDD``), so no lineage step starts
-a Python worker; and a unit whose compute yields no rows still gets its
-manifest row."""
+a Python worker; a unit whose compute yields no rows still gets its
+manifest row; and unit ids stay on the driver, so pending units without
+a manifest and the stage read start no Spark job."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from geostatssolvers_jl_spark.lineage import (
@@ -24,20 +26,39 @@ def _assert_jvm_only(df):
     assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
 
 
+def _unit_rows(spark, todo, expr="unit * 2 AS val"):
+    """Output rows for the unit ids ``todo``, planned on the JVM."""
+    return (spark.range(max(todo) + 1).select(F.col("id").alias("unit"))
+            .filter(F.col("unit").isin(todo)).selectExpr("unit", expr))
+
+
+def _jobs(spark, group, fn):
+    """(fn's result, the Spark jobs it started).  The group is checked to
+    catch jobs by running one action in it afterwards."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, "lineage job count")
+    try:
+        out = fn()
+        jobs = list(tracker.getJobIdsForGroup(group))
+        spark.range(1).count()
+        assert list(tracker.getJobIdsForGroup(group)) != jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, jobs
+
+
 def test_lineage_plans_scan_no_python_rdd(spark, tmp_path):
     base = str(tmp_path / "ck")
-    # a NULL unit matches no manifest row: it stays pending
-    units = spark.range(7).select(
-        F.when(F.col("id") < 6, F.col("id")).alias("unit"))
 
     fresh = read_manifest(spark, base, "s1")
     _assert_jvm_only(fresh)
     assert fresh.count() == 0
     assert fresh.dtypes == [("unit", "bigint"), ("rows", "bigint"),
                             ("stage", "string"), ("wall_s", "double")]
-    _assert_jvm_only(pending_units(units, spark, base, "s1"))
+    assert pending_units(range(6), spark, base, "s1") == list(range(6))
 
-    batch = units.filter("unit < 3").selectExpr("unit", "unit * 2 AS val")
+    batch = _unit_rows(spark, [0, 1, 2])
     appended = commit_units(batch, base, "s1", units=[0, 1, 2])
     _assert_jvm_only(appended)
     assert "LocalTableScan" in _plan(appended)
@@ -46,30 +67,54 @@ def test_lineage_plans_scan_no_python_rdd(spark, tmp_path):
     _assert_jvm_only(present)
     assert sorted((r["unit"], r["rows"]) for r in present.collect()) == [
         (0, 1), (1, 1), (2, 1)]
-    todo = pending_units(units, spark, base, "s1")
-    _assert_jvm_only(todo)
-    assert sorted(r["unit"] for r in todo.collect()
-                  if r["unit"] is not None) == [3, 4, 5]
-    assert todo.filter("unit IS NULL").count() == 1
+    assert pending_units(range(6), spark, base, "s1") == [3, 4, 5]
 
 
 def test_zero_row_units_get_manifest_rows(spark, tmp_path):
     base = str(tmp_path / "ck")
-    units = spark.range(4).select(F.col("id").alias("unit"))
     calls: list[list[int]] = []
 
     def compute(todo):
-        _assert_jvm_only(todo)
-        calls.append(sorted(r["unit"] for r in todo.collect()))
+        calls.append(todo)
         # units 2 and 3 legitimately produce no rows
-        return todo.filter("unit < 2").selectExpr("unit", "unit * 10 AS val")
+        out = _unit_rows(spark, todo, "unit * 10 AS val")
+        _assert_jvm_only(out)
+        return out.filter("unit < 2")
 
-    out = run_stage_resumable(spark, base, "s1", units, compute)
+    out = run_stage_resumable(spark, base, "s1", range(4), compute)
     assert sorted(r["val"] for r in out.collect()) == [0, 10]
+    # the stage reads back with the manifest's unit type, not the
+    # partition-inferred int
+    assert dict(out.dtypes)["unit"] == "bigint"
     rows = {r["unit"]: r["rows"] for r in read_manifest(spark, base, "s1")
             .collect()}
     assert rows == {0: 1, 1: 1, 2: 0, 3: 0}
 
     # the empty units count as done: a resume computes nothing
-    run_stage_resumable(spark, base, "s1", units, compute)
+    run_stage_resumable(spark, base, "s1", range(4), compute)
     assert calls == [[0, 1, 2, 3]]
+
+
+def test_lineage_control_plane_job_counts(spark, tmp_path):
+    base = str(tmp_path / "ck")
+    # no manifest: the pending set is the input's ids, with no Spark job
+    todo, jobs = _jobs(spark, "lineage-pending-fresh",
+                       lambda: pending_units([3, 1, 2, 1], spark, base, "s1"))
+    assert todo == [1, 2, 3]
+    assert jobs == []
+    # nothing committed, nothing pending: no schema to read the stage with
+    with pytest.raises(FileNotFoundError, match="has no commit"):
+        run_stage_resumable(spark, base, "s1", [], None)
+
+    run_stage_resumable(spark, base, "s1", range(4), lambda t: _unit_rows(
+        spark, t))
+    # with a manifest, the done ids are one collect; a resume with nothing
+    # pending runs exactly that job, so the stage read starts none
+    todo, jobs = _jobs(spark, "lineage-pending-done",
+                       lambda: pending_units(range(4), spark, base, "s1"))
+    assert todo == [] and len(jobs) == 1
+    out, jobs = _jobs(spark, "lineage-resume-read",
+                      lambda: run_stage_resumable(spark, base, "s1",
+                                                  range(4), None))
+    assert len(jobs) == 1
+    assert sorted(r["val"] for r in out.collect()) == [0, 2, 4, 6]

@@ -75,50 +75,50 @@ def test_synthesized_pages_deterministic(spark):
     assert len({r["url"] for r in a}) == 100
 
 
+def _unit_rows(spark, todo, expr):
+    return (spark.range(max(todo) + 1).select(F.col("id").alias("unit"))
+            .filter(F.col("unit").isin(todo)).selectExpr("unit", expr))
+
+
 def test_lineage_resume(spark, tmp_path):
     base = str(tmp_path / "ckpt")
-    units = spark.range(10).select(F.col("id").alias("unit"))
     calls: list[int] = []
 
     def compute(todo):
-        n = todo.count()
-        calls.append(n)
-        return todo.selectExpr("unit", "unit * 2 AS val")
+        calls.append(len(todo))
+        return _unit_rows(spark, todo, "unit * 2 AS val")
 
-    out1 = run_stage_resumable(spark, base, "s1", units, compute)
+    out1 = run_stage_resumable(spark, base, "s1", range(10), compute)
     assert out1.count() == 10
     assert calls == [10]
 
     # resume: nothing pending → compute not called again
-    out2 = run_stage_resumable(spark, base, "s1", units, compute)
+    out2 = run_stage_resumable(spark, base, "s1", range(10), compute)
     assert out2.count() == 10
     assert calls == [10]
 
     # new units appear → only they are computed
-    more = spark.range(15).select(F.col("id").alias("unit"))
-    out3 = run_stage_resumable(spark, base, "s1", more, compute)
+    out3 = run_stage_resumable(spark, base, "s1", range(15), compute)
     assert out3.count() == 15
     assert calls == [10, 5]
 
     # lineage rows recorded per unit with row counts
-    pend = pending_units(more, spark, base, "s1")
-    assert pend.count() == 0
+    assert pending_units(range(15), spark, base, "s1") == []
 
 
 def test_partial_crash_resume(spark, tmp_path):
     """Simulate a crash after half the units committed."""
     base = str(tmp_path / "ckpt2")
-    units = spark.range(8).select(F.col("id").alias("unit"))
-    first_half = units.filter("unit < 4").selectExpr("unit", "unit + 100 AS val")
-    commit_units(first_half, base, "s2")
+    commit_units(_unit_rows(spark, [0, 1, 2, 3], "unit + 100 AS val"),
+                 base, "s2")
 
     seen: list[list[int]] = []
 
     def compute(todo):
-        seen.append(sorted(r["unit"] for r in todo.select("unit").collect()))
-        return todo.selectExpr("unit", "unit + 100 AS val")
+        seen.append(todo)
+        return _unit_rows(spark, todo, "unit + 100 AS val")
 
-    out = run_stage_resumable(spark, base, "s2", units, compute)
+    out = run_stage_resumable(spark, base, "s2", range(8), compute)
     assert seen == [[4, 5, 6, 7]]  # only the un-committed half re-ran
     assert out.count() == 8
     vals = {r["unit"]: r["val"] for r in out.collect()}

@@ -25,6 +25,7 @@ def test_pipeline_kill_and_resume(spark, tmp_path):
     )
     full_rows = partial.count()
     assert full_rows == GRID.ncells
+    assert dict(partial.dtypes)["unit"] == "bigint"
 
     # a fresh invocation must not recompute anything (manifest complete)
     m_before = read_manifest(spark, base, "krig_partial").count()
@@ -75,17 +76,16 @@ def test_resume_all_empty_stage_returns_typed_empty(spark, tmp_path):
     the final read and every subsequent resume crashed)."""
     from geostatssolvers_jl_spark.lineage import run_stage_resumable
 
-    units = spark.createDataFrame([(1,), (2,)], "unit long")
-
     def compute(todo):
         return spark.createDataFrame(
             [], "unit long, z double"
         )
 
     base = str(tmp_path / "empty_stage")
-    out = run_stage_resumable(spark, base, "s1", units, compute)
+    out = run_stage_resumable(spark, base, "s1", [1, 2], compute)
     assert out.count() == 0
-    assert "z" in out.columns
+    assert out.dtypes == [("unit", "bigint"), ("z", "double")]
     # resume with nothing pending: still readable, still empty
-    out2 = run_stage_resumable(spark, base, "s1", units, compute)
+    out2 = run_stage_resumable(spark, base, "s1", [1, 2], compute)
     assert out2.count() == 0
+    assert out2.dtypes == out.dtypes

@@ -185,6 +185,22 @@ def test_auto_strategy_routes_big_data_tiled(spark, geo, monkeypatch):
     assert out.count() == 300
 
 
+def test_unknown_strategy_raises(spark, geo, monkeypatch):
+    """A misspelled strategy fails loudly instead of running the
+    broadcast gather (a driver collect of the whole data side)."""
+    import geostatssolvers_jl_spark.operators.tiled as tiled
+
+    def boom(*a, **kw):  # pragma: no cover
+        raise AssertionError("collect_points called for an unknown strategy")
+
+    monkeypatch.setattr(tiled, "collect_points", boom)
+    d, q = geo
+    with pytest.raises(ValueError, match="unknown strategy 'tiled'"):
+        solve_idw(d, q, var="z", data_coord_cols=["lon", "lat"],
+                  query_coord_cols=["lon", "lat"], maxneighbors=4,
+                  metric=Haversine(6371.0), strategy="tiled")
+
+
 def test_tiled_plan_is_equijoin(spark, geo):
     """The tiled plan must not contain cartesian products or broadcast
     nested loops — candidates flow through equi-joins only — and its one

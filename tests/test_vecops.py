@@ -146,8 +146,8 @@ def test_ann_fast_paths_match_sql_twins(spark, emb_df):
         ann_topk_lsh_sql("spark", "_vo_emb3", k=2, n_planes=3,
                          n_tables=2, dim=8, bt_rel="_vo_bt")).collect()}
     got = {tuple(r) for r in ann_topk_lsh_spark(
-        spark, k=2, n_planes=3, bt_rel="_vo_bt", emb_rel="_vo_emb3",
-        dim=8).collect()}
+        spark, k=2, n_planes=3, bt_rel="_vo_bt",
+        emb_rel="_vo_emb3").collect()}
     assert got == want and want
 
     rk = ivf_ranked_spark(spark, "_vo_emb3", nprobe=2,
@@ -160,6 +160,19 @@ def test_ann_fast_paths_match_sql_twins(spark, emb_df):
         spark, k=2, nprobe=2, rk_rel="_vo_rk", emb_rel="_vo_emb3",
         dim=8).collect()}
     assert got == want and want
+
+
+def test_collect_emb_matrix_raises_past_bound(spark, monkeypatch):
+    """Past the gather-scorer bound the corpus collect refuses instead of
+    handing back a marker the caller must route around."""
+    import geostatssolvers_jl_spark.webtext.vecops as vecops
+    from geostatssolvers_jl_spark.webtext.similarity import (
+        collect_emb_matrix,
+    )
+
+    monkeypatch.setattr(vecops, "GATHER_SCORE_LIMIT", 10)
+    with pytest.raises(ValueError, match="gather-scorer bound 10"):
+        collect_emb_matrix(spark, "embeddings", known_n=11)
 
 
 def test_bucket_tables_kernel_matches_sql(spark, emb_df):
